@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
  *
  * Contract: `aIds`/`bIds` sorted ascending, distinct, non-null
  * elements; `aWeights.length == aIds.length` (weight i belongs to id
- * i). The result equals the join-groupBy sum BY CONSTRUCTION (both are
+ * i — a mismatch fails the query). The result equals the join-groupBy sum BY CONSTRUCTION (both are
  * Σ_{t ∈ A∩B} w(t) with integer weights) — spec-pinned in DedupSpec.
  */
 case class SortedIntersectWeightedSum(
@@ -61,10 +61,16 @@ case class SortedIntersectWeightedSum(
 }
 
 object SortedIntersectWeightedSum {
-  /** Two-pointer merge sum; static so codegen calls it directly. */
+  /** Two-pointer merge sum; static so codegen calls it directly.
+    * Weight arrays whose length differs from `a` fail loudly — the
+    * merge would otherwise read past the end of a short one. */
   def sum(a: ArrayData, w: ArrayData, b: ArrayData): Long = {
     val na = a.numElements()
     val nb = b.numElements()
+    if (w.numElements() != na)
+      throw new IllegalArgumentException(
+        s"graft_sorted_intersect_wsum: weights_a has ${w.numElements()} " +
+          s"elements but ids_a has $na (weight i belongs to id i)")
     var i = 0
     var j = 0
     var s = 0L

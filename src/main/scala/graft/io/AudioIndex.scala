@@ -24,7 +24,7 @@ import graft.ops.AudioDedup
  *    files so the fp-keyed probe scan gets tight min/max footers (at
  *    cluster scale, bucket by fp range so a probe is a partition
  *    read);
- *  - `_graft_index.json` meta — the fingerprint geometry (frameLen,
+ *  - the [[Commits]] index meta — the fingerprint geometry (frameLen,
  *    bins, fanout) is the index's IDENTITY: a probe hashed with
  *    different parameters silently finds nothing, so the parameters
  *    are written once at build and every operation reads them back —
@@ -44,38 +44,32 @@ object AudioIndex {
   final case class Meta(idCol: String, frameLen: Int, bins: Int, fanout: Int)
 
   private def fpsPath(dir: String) = s"$dir/fps"
-  private def metaFile(dir: String) = new Path(dir, "_graft_index.json")
-  private def prevPath(dir: String) = new Path(s"$dir/fps_prev")
-  private def stagePath(dir: String) = s"$dir/fps_rewriting"
+  private def fpsDirs(dir: String) = Commits.SwapDirs(dir, "fps", "rewriting")
+  private def fsOf(spark: SparkSession, dir: String) =
+    Commits.fsOf(spark, new Path(dir))
 
-  /** Recover the live fps dir after a crashed [[compact]]/[[delete]]:
-    * the only window that can leave `fps` missing is between the two
-    * renames, and then `fps_prev` still holds the full pre-rewrite
-    * index — restore it and drop the half-staged output. MUTATING —
+  /** [[Commits.heal]] a crashed [[compact]]/[[delete]] swap. MUTATING —
     * called only by writers that hold the store claim (a claim-free
     * heal would race a LIVE delete/compact between its renames and
     * discard its staged rewrite); no-op in the steady state. */
-  private def ensureLive(spark: SparkSession, dir: String): Unit = {
-    val live = new Path(fpsPath(dir))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(prevPath(dir))) {
-      fs.delete(new Path(stagePath(dir)), true)
-      require(fs.rename(prevPath(dir), live),
-        s"failed to restore $live from ${prevPath(dir)}")
-    }
-  }
+  private def ensureLive(spark: SparkSession, dir: String): Unit =
+    Commits.heal(fsOf(spark, dir), fpsDirs(dir))
 
-  /** Resolve the readable fps dir WITHOUT mutating — the read-path
-    * twin of [[ensureLive]]: reads hold no claim, so they must not
-    * race a live rewrite's renames (or each other). Steady state =
-    * `fps`; the crashed-rewrite window = `fps_prev` (still the full
-    * pre-rewrite index — the next claim-holding writer heals it). */
-  private def livePath(spark: SparkSession, dir: String): String = {
-    val live = new Path(fpsPath(dir))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(prevPath(dir))) prevPath(dir).toString
-    else fpsPath(dir)
-  }
+  /** The readable fps dir WITHOUT mutating ([[Commits.resolve]]):
+    * reads hold no claim, so they must not race a live rewrite's
+    * renames (or each other) — the next claim-holding writer heals. */
+  private def livePath(spark: SparkSession, dir: String): String =
+    Commits.resolve(fsOf(spark, dir), fpsDirs(dir)).toString
+
+  /** Rewrite the fps store as `rewritten` of the live one, via
+    * [[Commits.swap]] — the shared tail of [[delete]] and [[compact]]
+    * (claim held, store healed by the caller). */
+  private def rewrite(spark: SparkSession, dir: String, op: String)(
+      rewritten: DataFrame => DataFrame): Unit =
+    Commits.swap(fsOf(spark, dir), fpsDirs(dir), op) { stage =>
+      rewritten(spark.read.parquet(fpsPath(dir)))
+        .write.mode("overwrite").parquet(stage.toString)
+    }
 
   /** Build the index from scratch: decode + fingerprint every payload
     * in `media` ONCE, write the landmark table, then commit the meta
@@ -92,43 +86,29 @@ object AudioIndex {
       s"idCol '$idCol' must be a plain identifier (stored in index meta)")
     val spark = media.sparkSession
     Commits.withClaim(spark, dir) {
-      val fs = metaFile(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(spark, dir)
       // REBUILD over an existing index: retire the meta FIRST, so a
       // crash mid-overwrite leaves the documented fail-loud
       // missing-meta state — never stale geometry over new landmarks
       // (a probe against that would silently find nothing)
-      fs.delete(metaFile(dir), false)
+      fs.delete(Commits.metaPath(dir), false)
       // a full rebuild owns the dir: drop crash artifacts of any
       // previous delete/compact so they can't be "healed" over the
       // fresh index later
-      fs.delete(prevPath(dir), true)
-      fs.delete(new Path(stagePath(dir)), true)
+      fs.delete(fpsDirs(dir).prev, true)
+      fs.delete(fpsDirs(dir).stage, true)
       AudioDedup.fingerprints(media, idCol, payloadCol, frameLen, bins, fanout)
         .sortWithinPartitions("fp") // probe-key clustering: tight fp footers
         .write.mode("overwrite").parquet(fpsPath(dir))
-      val json =
-        s"""{"id_col": "$idCol", "frame_len": $frameLen, """ +
-          s""""bins": $bins, "fanout": $fanout}"""
-      val out = fs.create(metaFile(dir), true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
+      Commits.writeMeta(spark, dir, "id_col" -> idCol, "frame_len" -> frameLen,
+        "bins" -> bins, "fanout" -> fanout)
     }
   }
 
   /** Read the index identity. Fails if `dir` holds no committed index. */
   def meta(spark: SparkSession, dir: String): Meta = {
-    val p = metaFile(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no audio index at $dir (missing ${p.getName})")
-    val in = fs.open(p)
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    def str(k: String) = s""""$k": "([^"]*)"""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1)
-    def num(k: String) = s""""$k": (\\d+)""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1).toInt
-    Meta(str("id_col"), num("frame_len"), num("bins"), num("fanout"))
+    val j = Commits.readMeta(spark, dir, "audio")
+    Meta(j.str("id_col"), j.num("frame_len"), j.num("bins"), j.num("fanout"))
   }
 
   /** The stored landmark table (meta.idCol, t, fp). Read-only — a
@@ -210,8 +190,8 @@ object AudioIndex {
    * Remove docs from the index — the takedown / right-to-be-forgotten
    * pass. Landmarks are per-doc, so dropping their rows IS the
    * rebuild: one anti-join rewrite of the fps store (the deleted-id
-   * side broadcasts), behind the family's crash-safe stage + two
-   * renames ([[ensureLive]] heals the window). After this, [[probe]]
+   * side broadcasts), behind the crash-safe [[Commits.swap]]
+   * ([[ensureLive]] heals the window). After this, [[probe]]
    * can never pair a batch with a deleted doc — equivalent to an
    * index built from the corpus minus the deleted docs (spec-pinned).
    */
@@ -224,41 +204,21 @@ object AudioIndex {
     Commits.withClaim(spark, dir) {
       ensureLive(spark, dir)
       val m = meta(spark, dir)
-      val live = new Path(fpsPath(dir))
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      spark.read.parquet(fpsPath(dir))
-        .join(
-          broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
-          Seq(m.idCol), "left_anti")
-        .write.mode("overwrite").parquet(stagePath(dir))
-      fs.delete(prevPath(dir), true) // leftover from an ancient crash
-      require(fs.rename(live, prevPath(dir)), s"delete: failed to retire $live")
-      require(fs.rename(new Path(stagePath(dir)), live),
-        s"delete: failed to promote rewritten index (recoverable — " +
-          s"${prevPath(dir)} holds the previous index)")
-      fs.delete(prevPath(dir), true)
+      rewrite(spark, dir, "delete")(_.join(
+        broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
+        Seq(m.idCol), "left_anti"))
     }
   }
 
   /** Rewrite the store as `numFiles` fp-range-clustered files — the
     * maintenance pass for append-per-batch small-file accretion; range
     * clustering by fp keeps the probe scan pruned. Crash-safe via the
-    * same stage + two-rename swap as [[delete]]. */
+    * same swap as [[delete]]. */
   def compact(spark: SparkSession, dir: String, numFiles: Int): Unit =
     Commits.withClaim(spark, dir) {
       ensureLive(spark, dir)
-      val live = new Path(fpsPath(dir))
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      spark.read.parquet(fpsPath(dir))
-        .repartitionByRange(numFiles, col("fp"))
-        .sortWithinPartitions("fp")
-        .write.mode("overwrite").parquet(stagePath(dir))
-      fs.delete(prevPath(dir), true)
-      require(fs.rename(live, prevPath(dir)), s"compact: failed to retire $live")
-      require(fs.rename(new Path(stagePath(dir)), live),
-        s"compact: failed to promote staged index (recoverable — " +
-          s"${prevPath(dir)} holds the previous index)")
-      fs.delete(prevPath(dir), true)
+      rewrite(spark, dir, "compact")(
+        _.repartitionByRange(numFiles, col("fp")).sortWithinPartitions("fp"))
     }
 
   /** [[compact]] only when the store has fragmented past

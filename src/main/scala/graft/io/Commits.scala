@@ -41,6 +41,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * across datasets without a coordination service — plain rename gives
  * single-slot CAS, which is exactly enough to turn every silent
  * lost-update into a visible error.
+ *
+ * ==Durable-index protocol==
+ * The published indexes ([[VectorIndex]], [[SignatureIndex]],
+ * [[AudioIndex]], [[WindowIndex]], [[GraphIndex]]) and the media
+ * ingest stores extend the reference's stage-then-rename layer commit
+ * (`breweries_fetch_bronze_notebook.py:71-85`) with the pieces below.
+ * They live HERE and nowhere else, so moving the stores to another
+ * filesystem (or fixing a crash window) touches one module:
+ *
+ *  - **swap** ([[swap]]): a whole-store rewrite is written into
+ *    `<name>_<stage>`, then promoted with two renames (live →
+ *    `<name>_prev`, stage → live); `_prev` is dropped only after the
+ *    promote, so every crash point leaves a complete copy on disk;
+ *  - **heal / resolve** ([[heal]], [[resolve]]): the only window that
+ *    leaves the live dir missing is between those renames, and then
+ *    `_prev` is the full pre-rewrite store. `heal` (writers, and the
+ *    indexes whose readers heal) renames it back and drops the
+ *    half-written stage; `resolve` (claim-free readers) reads `_prev`
+ *    in place and leaves the store untouched;
+ *  - **committed batches** ([[commitBatch]], [[committedBatches]]):
+ *    appends land under `batch=<tag>` and are live only once their
+ *    `_graft_committed` marker exists — written LAST, so a crashed
+ *    append is an invisible orphan;
+ *  - **batch tag** ([[batchTag]]): `b<count>x<hex>` over the
+ *    order-insensitive XOR of per-id xxhash64 — the same id set always
+ *    lands on the same tag, so a replayed batch OVERWRITES its own
+ *    orphan instead of accreting;
+ *  - **meta** ([[writeMeta]], [[readMeta]]): the index identity in
+ *    `_graft_index.json`, committed AFTER the data, so a crashed build
+ *    leaves no readable index.
  */
 object Commits {
 
@@ -212,5 +242,139 @@ object Commits {
   def withClaim[T](spark: SparkSession, storeDir: String)(body: => T): T = {
     acquireClaim(spark, storeDir)
     try body finally releaseClaim(spark, storeDir)
+  }
+
+  private[graft] def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The three dirs of a swappable store: `live`, the retired `prev`
+    * kept until a promote completes, and the `stage` being written. */
+  final case class SwapDirs(live: Path, prev: Path, stage: Path)
+
+  object SwapDirs {
+    /** `<dir>/<name>`, `<dir>/<name>_prev`, `<dir>/<name>_<stage>`. */
+    def apply(dir: String, name: String, stage: String): SwapDirs =
+      SwapDirs(new Path(s"$dir/$name"), new Path(s"$dir/${name}_prev"),
+        new Path(s"$dir/${name}_$stage"))
+  }
+
+  /** Crash-safe whole-store rewrite: `write` fills the (emptied)
+    * stage dir, then live → prev, stage → live, drop prev. `op` names
+    * the caller in the failure messages. */
+  def swap(fs: FileSystem, d: SwapDirs, op: String)(write: Path => Unit): Unit = {
+    fs.delete(d.stage, true) // half-staged output of a crashed attempt
+    write(d.stage)
+    fs.delete(d.prev, true) // leftover from an ancient crash
+    require(fs.rename(d.live, d.prev), s"$op: failed to retire ${d.live}")
+    require(fs.rename(d.stage, d.live),
+      s"$op: failed to promote ${d.stage} (recoverable — ${d.prev} " +
+        "holds the previous version)")
+    fs.delete(d.prev, true)
+  }
+
+  /** MUTATING recovery of a crash between [[swap]]'s renames: restore
+    * `prev` as live and drop the half-written stage. No-op (one
+    * `exists`) in the steady state. */
+  def heal(fs: FileSystem, d: SwapDirs): Unit =
+    if (!fs.exists(d.live) && fs.exists(d.prev)) {
+      fs.delete(d.stage, true)
+      require(fs.rename(d.prev, d.live),
+        s"failed to restore ${d.live} from ${d.prev}")
+    }
+
+  /** Read-only twin of [[heal]]: the dir holding the complete store —
+    * `live`, or `prev` inside the crash window — without touching it
+    * (claim-free readers must not race a live swap's renames). */
+  def resolve(fs: FileSystem, d: SwapDirs): Path =
+    if (!fs.exists(d.live) && fs.exists(d.prev)) d.prev else d.live
+
+  private val committedMarker = "_graft_committed"
+
+  /** Commit a fully written `batch=<tag>` dir — the marker create is
+    * the commit point, so everything else in the dir goes first. */
+  def commitBatch(fs: FileSystem, batchDir: Path): Unit =
+    fs.create(new Path(batchDir, committedMarker), true).close()
+
+  /** The `batch=<tag>` dirs under `root` whose commit marker exists —
+    * the only batches a reader sees. Cost: one listing plus one
+    * `exists` per batch dir. */
+  def committedBatches(spark: SparkSession, rootDir: String): Seq[Path] = {
+    val root = new Path(rootDir)
+    val fs = fsOf(spark, root)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq
+      .filter(_.isDirectory)
+      .map(_.getPath)
+      .filter(_.getName.startsWith("batch="))
+      .filter(b => fs.exists(new Path(b, committedMarker)))
+  }
+
+  /** `<tag>` of a `batch=<tag>` dir. */
+  def tagOf(batchDir: Path): String = batchDir.getName.stripPrefix("batch=")
+
+  /** Deterministic tag of a batch from its ids: `b<count>x<hex>` over
+    * the order-insensitive XOR of per-id xxhash64 (wrap-free under ANSI
+    * mode; the count guards the empty batch). Ids hash by their string
+    * form, so string and numeric id columns share one tag scheme. */
+  def batchTag(df: DataFrame, idCol: String): String = {
+    import org.apache.spark.sql.functions.{coalesce, count, expr, lit}
+    val r = df.agg(
+      count(lit(1)).as("c"),
+      coalesce(expr(s"bit_xor(xxhash64(cast($idCol as string)))"), lit(0L)).as("h"))
+      .head()
+    s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
+  }
+
+  private[graft] def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+    finally in.close()
+  }
+
+  private[graft] def writeText(
+      fs: FileSystem, p: Path, text: String, overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private[graft] def metaPath(dir: String): Path =
+    new Path(dir, "_graft_index.json")
+
+  /** Does `dir` hold a committed index (its meta file)? */
+  def hasMeta(spark: SparkSession, dir: String): Boolean = {
+    val p = metaPath(dir)
+    fsOf(spark, p).exists(p)
+  }
+
+  /** Commit the index identity — call AFTER the data is written.
+    * String values are quoted, everything else is written bare. */
+  def writeMeta(spark: SparkSession, dir: String, fields: (String, Any)*): Unit = {
+    val json = fields.map {
+      case (k, v: String) => s""""$k": "$v""""
+      case (k, v) => s""""$k": $v"""
+    }.mkString("{", ", ", "}")
+    val p = metaPath(dir)
+    writeText(fsOf(spark, p), p, json, overwrite = true)
+  }
+
+  /** A committed `_graft_index.json`, read back by key. */
+  final class IndexMeta private[Commits] (json: String, kind: String) {
+    private def find(re: String, k: String): String =
+      re.r.findFirstMatchIn(json)
+        .getOrElse(sys.error(s"bad $kind index meta: missing $k")).group(1)
+    def str(k: String): String = find(s""""$k": "([^"]*)"""", k)
+    def num(k: String): Int = find(s""""$k": (\\d+)""", k).toInt
+    /** `num`, or `d` for a key absent from older metas. */
+    def numOr(k: String, d: Int): Int = s""""$k": (\\d+)""".r
+      .findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(d)
+  }
+
+  /** Read `dir`'s index identity; fails naming the `kind` of index
+    * when `dir` holds no committed one. */
+  def readMeta(spark: SparkSession, dir: String, kind: String): IndexMeta = {
+    val p = metaPath(dir)
+    val fs = fsOf(spark, p)
+    require(fs.exists(p), s"no $kind index at $dir (missing ${p.getName})")
+    new IndexMeta(readText(fs, p), kind)
   }
 }

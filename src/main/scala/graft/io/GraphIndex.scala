@@ -27,8 +27,9 @@ import graft.ops.Nsw
  *    live adjacency. Versioned through [[Commits.commitVersion]], so
  *    every drain's edge flips go live all-or-nothing and a racing
  *    writer fails visibly on the CAS;
- *  - `_graft_index.json` — identity + search geometry (committed LAST
- *    at build: a crashed build leaves no readable index).
+ *  - the [[Commits]] index meta — identity + search geometry
+ *    (committed LAST at build: a crashed build leaves no readable
+ *    index).
  *
  * A drain ([[ingestBatch]]) is O(batch), never O(graph): each new
  * vector runs one beam search over the standing graph
@@ -68,7 +69,6 @@ object GraphIndex {
 
   private def adjPath(dir: String) = s"$dir/adj"
   private def ledgerDir(dir: String) = s"$dir/ledger"
-  private def metaFile(dir: String) = new Path(dir, "_graft_index.json")
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -131,7 +131,7 @@ object GraphIndex {
     // targeted reset: only the index's own parts — a maintainer's held
     // drain claim (and its durable folded-files record) must survive a
     // bootstrap build running UNDER that claim
-    fs.delete(metaFile(dir), false)
+    fs.delete(Commits.metaPath(dir), false)
     fs.delete(new Path(adjPath(dir)), true)
     fs.delete(new Path(ledgerDir(dir)), true)
     val poolK = if (alphaNum > 0) math.max(candidateK, k) else k
@@ -152,38 +152,23 @@ object GraphIndex {
       corpus.select(col(idCol).cast("long").as("id")).distinct()
         .withColumn("gen", lit(0)),
       ledgerDir(dir), -1)
-    val json =
-      s"""{"id_col": "$idCol", "emb_col": "$embCol", "dims": $dims, """ +
-        s""""k": $k, "planes_per_band": $planesPerBand, "bands": $bands, """ +
-        s""""max_bucket_size": $maxBucketSize, "n_entries": $nEntries, """ +
-        s""""beam_width": $beamWidth, "max_steps": $maxSteps, """ +
-        s""""candidate_k": ${math.max(candidateK, k)}, """ +
-        s""""alpha_num": $alphaNum, "alpha_den": $alphaDen}"""
-    val out = fs.create(metaFile(dir), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    Commits.writeMeta(spark, dir, "id_col" -> idCol, "emb_col" -> embCol,
+      "dims" -> dims, "k" -> k, "planes_per_band" -> planesPerBand,
+      "bands" -> bands, "max_bucket_size" -> maxBucketSize,
+      "n_entries" -> nEntries, "beam_width" -> beamWidth,
+      "max_steps" -> maxSteps, "candidate_k" -> math.max(candidateK, k),
+      "alpha_num" -> alphaNum, "alpha_den" -> alphaDen)
   }
 
   /** Read the index identity. Fails if `dir` holds no committed index. */
   def meta(spark: SparkSession, dir: String): Meta = {
-    val p = metaFile(dir)
-    val fs = fsOf(spark, p)
-    require(fs.exists(p), s"no graph index at $dir (missing ${p.getName})")
-    val in = fs.open(p)
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    def str(k: String) = s""""$k": "([^"]*)"""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad graph index meta: missing $k")).group(1)
-    def num(k: String) = s""""$k": (\\d+)""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad graph index meta: missing $k")).group(1).toInt
+    val j = Commits.readMeta(spark, dir, "graph")
     // absent in pre-α metas → the classic top-k policy, unchanged
-    def numOr(k: String, d: Int) = s""""$k": (\\d+)""".r
-      .findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(d)
-    Meta(str("id_col"), str("emb_col"), num("dims"), num("k"),
-      num("planes_per_band"), num("bands"), num("max_bucket_size"),
-      num("n_entries"), num("beam_width"), num("max_steps"),
-      numOr("candidate_k", num("k")), numOr("alpha_num", 0),
-      numOr("alpha_den", 10))
+    Meta(j.str("id_col"), j.str("emb_col"), j.num("dims"), j.num("k"),
+      j.num("planes_per_band"), j.num("bands"), j.num("max_bucket_size"),
+      j.num("n_entries"), j.num("beam_width"), j.num("max_steps"),
+      j.numOr("candidate_k", j.num("k")), j.numOr("alpha_num", 0),
+      j.numOr("alpha_den", 10))
   }
 
   /** The live adjacency (id, nbr, cos_micro): generation rows

@@ -225,14 +225,6 @@ object Layers {
   }
 
   /**
-   * O3 analog — resolve the latest *successfully published* run
-   * directory under `base` (subdirs named by sortable id, e.g.
-   * `run_20251015` or an ISO date), gated on Spark's `_SUCCESS` marker.
-   * Replaces the reference's Airflow `ExternalTaskSensor` + DagRun query
-   * (`dags/breweries_gold_dag.py:118-139`) with plain dataflow: the
-   * consumer reads the newest complete snapshot, never a half-written one.
-   */
-  /**
    * Small-files compaction — the maintenance op every long-lived table
    * needs at scale: streaming sinks, dynamic partition overwrites, and
    * incremental appends accrete files far below the object-store sweet
@@ -344,45 +336,42 @@ object Layers {
     frames.reduce(_.unionByName(_))
   }
 
-  def latestSuccessfulRun(spark: SparkSession, base: String): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  /** The run directories under `base`, sorted by name, each with
+    * whether it carries Spark's `_SUCCESS` marker. Hidden names are
+    * staging dirs ([[Commits.publishAtomic]] puts `_SUCCESS` inside its
+    * `.tmp-<uuid>` before the rename) or metadata — never runs,
+    * whatever markers they hold. Listing cost ∝ run count, never data. */
+  private def runDirs(
+      spark: SparkSession, base: String): Seq[(org.apache.hadoop.fs.Path, Boolean)] = {
     val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(conf)
-    if (!fs.exists(basePath)) None
-    else
-      fs.listStatus(basePath)
-        .filter(_.isDirectory)
-        .map(_.getPath)
-        // hidden names are staging dirs (Commits.publishAtomic) or
-        // metadata — never published runs, whatever markers they hold
-        .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-        .map(_.toString)
-        .sorted(Ordering[String].reverse)
-        .headOption
+    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(basePath)) Seq.empty
+    else fs.listStatus(basePath).toSeq
+      .filter(_.isDirectory)
+      .map(_.getPath)
+      .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+      .sortBy(_.getName)
+      .map(p => p -> fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
   }
+
+  /**
+   * O3 analog — resolve the latest *successfully published* run
+   * directory under `base` (subdirs named by sortable id, e.g.
+   * `run_20251015` or an ISO date), gated on Spark's `_SUCCESS` marker.
+   * Replaces the reference's Airflow `ExternalTaskSensor` + DagRun query
+   * (`dags/breweries_gold_dag.py:118-139`) with plain dataflow: the
+   * consumer reads the newest complete snapshot, never a half-written one.
+   */
+  def latestSuccessfulRun(spark: SparkSession, base: String): Option[String] =
+    successfulRuns(spark, base).lastOption
 
   /** Every `_SUCCESS`-gated run of a versioned-sink base directory,
     * OLDEST FIRST — [[latestSuccessfulRun]]'s full time-travel
     * companion: version `i` of the table is `successfulRuns(...)(i)`.
     * Same directory-listing contract (half-written runs without a
     * marker are invisible); listing cost ∝ run count, never data. */
-  def successfulRuns(spark: SparkSession, base: String): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(conf)
-    if (!fs.exists(basePath)) Seq.empty
-    else
-      fs.listStatus(basePath)
-        .filter(_.isDirectory)
-        .map(_.getPath)
-        // hidden names are staging dirs (Commits.publishAtomic), not runs
-        .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-        .map(_.toString)
-        .sorted
-        .toSeq
-  }
+  def successfulRuns(spark: SparkSession, base: String): Seq[String] =
+    runDirs(spark, base).collect { case (p, true) => p.toString }
 
   /** Retention plan for a versioned-sink base directory — the VACUUM
     * planner of the lakehouse pattern, split from execution so the
@@ -406,21 +395,14 @@ object Layers {
       base: String,
       keepLast: Int): org.apache.spark.sql.DataFrame = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(conf)
-    val dirs =
-      if (!fs.exists(basePath)) Array.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(basePath).filter(_.isDirectory).map(_.getPath)
-    val (gated, orphans) = dirs.sortBy(_.getName).partition(p =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+    val (gated, orphans) = runDirs(spark, base).partition(_._2)
     val cut = gated.length - keepLast
     val rows =
-      gated.zipWithIndex.map { case (p, v) =>
+      gated.zipWithIndex.map { case ((p, _), v) =>
         (p.getName, Option(v.toLong),
           if (v < cut) "expire" else "keep")
-      } ++ orphans.map(p => (p.getName, Option.empty[Long], "orphan"))
-    spark.createDataFrame(rows.toSeq)
+      } ++ orphans.map { case (p, _) => (p.getName, Option.empty[Long], "orphan") }
+    spark.createDataFrame(rows)
       .toDF("run_name", "version", "status")
   }
 }

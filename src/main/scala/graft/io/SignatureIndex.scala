@@ -29,11 +29,10 @@ import graft.ops.Dedup
  * The hash parameters (numHashes, bands, shingleWords, kernel) are
  * part of the index's identity: a probe hashed with different
  * parameters silently finds nothing. They are therefore written ONCE
- * at build time into `_graft_index.json` and every subsequent
- * operation reads them from the store — callers cannot drift. The
- * meta file is written AFTER the signature parquet commits, so a
- * crashed build leaves no readable index (read fails cleanly rather
- * than serving partial signatures).
+ * at build time into the [[Commits]] index meta (committed after the
+ * signatures — a crashed build leaves no readable index) and every
+ * subsequent operation reads them from the store — callers cannot
+ * drift.
  *
  * Concurrency contract: single writer (one ingest pipeline owns the
  * index), many readers — the same contract as the reference's
@@ -63,24 +62,21 @@ object SignatureIndex {
   }
 
   private def sigsPath(dir: String) = s"$dir/sigs"
-  private def metaFile(dir: String) = new Path(dir, "_graft_index.json")
-  private def prevPath(dir: String) = new Path(s"$dir/sigs_prev")
-  private def stagePath(dir: String) = s"$dir/sigs_compacting"
+  private def sigsDirs(dir: String) = Commits.SwapDirs(dir, "sigs", "compacting")
 
-  /** Recover the live signature dir after a crashed [[compact]]: the
-    * only window that can leave `sigs` missing is between its two
-    * renames, and then `sigs_prev` still holds the full pre-compaction
-    * index — restore it and drop the half-staged output. Called by
+  /** [[Commits.heal]] a crashed [[compact]]/[[delete]] swap. Called by
     * every reader/writer entry point; no-op in the steady state. */
-  private def ensureLive(spark: SparkSession, dir: String): Unit = {
-    val live = new Path(sigsPath(dir))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(prevPath(dir))) {
-      fs.delete(new Path(stagePath(dir)), true)
-      require(fs.rename(prevPath(dir), live),
-        s"failed to restore $live from ${prevPath(dir)}")
+  private def ensureLive(spark: SparkSession, dir: String): Unit =
+    Commits.heal(Commits.fsOf(spark, new Path(dir)), sigsDirs(dir))
+
+  /** Rewrite the signature store as `rewritten` of the live one, via
+    * [[Commits.swap]] — the shared tail of [[compact]] and [[delete]]. */
+  private def rewrite(spark: SparkSession, dir: String, op: String)(
+      rewritten: DataFrame => DataFrame): Unit =
+    Commits.swap(Commits.fsOf(spark, new Path(dir)), sigsDirs(dir), op) { stage =>
+      rewritten(spark.read.parquet(sigsPath(dir)))
+        .write.mode("overwrite").parquet(stage.toString)
     }
-  }
 
   /** Build the index from scratch: hash every doc in `docs`, write the
     * signature table, then commit the meta file. Overwrites any
@@ -104,29 +100,15 @@ object SignatureIndex {
     Dedup.minhashSignatures(docs, textCol, idCol, numHashes, shingleWords, kind)
       .sortWithinPartitions(idCol) // better parquet RLE/dictionary runs
       .write.mode("overwrite").parquet(sigsPath(dir))
-    val json =
-      s"""{"id_col": "$idCol", "num_hashes": $numHashes, "bands": $bands, """ +
-        s""""shingle_words": $shingleWords, "kind": "${kindName(kind)}"}"""
-    val fs = metaFile(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaFile(dir), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    Commits.writeMeta(spark, dir, "id_col" -> idCol, "num_hashes" -> numHashes,
+      "bands" -> bands, "shingle_words" -> shingleWords, "kind" -> kindName(kind))
   }
 
   /** Read the index identity. Fails if `dir` holds no committed index. */
   def meta(spark: SparkSession, dir: String): Meta = {
-    val p = metaFile(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no signature index at $dir (missing ${p.getName})")
-    val in = fs.open(p)
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    def str(k: String) = s""""$k": "([^"]*)"""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1)
-    def num(k: String) = s""""$k": (\\d+)""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1).toInt
-    Meta(str("id_col"), num("num_hashes"), num("bands"), num("shingle_words"),
-      kindOf(str("kind")))
+    val j = Commits.readMeta(spark, dir, "signature")
+    Meta(j.str("id_col"), j.num("num_hashes"), j.num("bands"),
+      j.num("shingle_words"), kindOf(j.str("kind")))
   }
 
   /** The stored signature table (meta.idCol, sig). */
@@ -143,27 +125,14 @@ object SignatureIndex {
    * that dominates the probe). Range clustering by id also gives every
    * file a tight min/max id footer, so point lookups prune files.
    *
-   * Crash-safe within the single-writer contract: the compacted copy
-   * is fully written to a staging dir first, then swapped in with two
-   * renames (live → `sigs_prev`, staged → live). A crash between the
-   * renames is healed by [[ensureLive]] on the next touch; `sigs_prev`
-   * is only deleted after the swap completes.
+   * Crash-safe within the single-writer contract: [[Commits.swap]],
+   * healed by [[ensureLive]] on the next touch.
    */
   def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
     ensureLive(spark, dir)
     val m = meta(spark, dir)
-    val live = new Path(sigsPath(dir))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(sigsPath(dir))
-      .repartitionByRange(numFiles, org.apache.spark.sql.functions.col(m.idCol))
-      .sortWithinPartitions(m.idCol)
-      .write.mode("overwrite").parquet(stagePath(dir))
-    fs.delete(prevPath(dir), true) // leftover from an ancient crash
-    require(fs.rename(live, prevPath(dir)), s"compact: failed to retire $live")
-    require(fs.rename(new Path(stagePath(dir)), live),
-      s"compact: failed to promote staged index (recoverable — " +
-        s"${prevPath(dir)} holds the previous index)")
-    fs.delete(prevPath(dir), true)
+    rewrite(spark, dir, "compact")(
+      _.repartitionByRange(numFiles, col(m.idCol)).sortWithinPartitions(m.idCol))
   }
 
   /**
@@ -177,26 +146,16 @@ object SignatureIndex {
    * After this, [[probe]] can no longer pair any batch with a deleted
    * doc — equivalent to an index rebuilt from the corpus minus the
    * deleted docs (signatures are per-doc, so dropping rows IS the
-   * rebuild; spec-pinned). Crash-safe via the same stage + two-rename
-   * swap as [[compact]] ([[ensureLive]] heals the window); serialize
-   * with appends (single-writer contract).
+   * rebuild; spec-pinned). Crash-safe via the same swap as
+   * [[compact]]; serialize with appends (single-writer contract).
    */
   def delete(deletedIds: DataFrame, dir: String): Unit = {
     val spark = deletedIds.sparkSession
     ensureLive(spark, dir)
     val m = meta(spark, dir)
-    val live = new Path(sigsPath(dir))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(sigsPath(dir))
-      .join(broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
-        Seq(m.idCol), "left_anti")
-      .write.mode("overwrite").parquet(stagePath(dir))
-    fs.delete(prevPath(dir), true) // leftover from an ancient crash
-    require(fs.rename(live, prevPath(dir)), s"delete: failed to retire $live")
-    require(fs.rename(new Path(stagePath(dir)), live),
-      s"delete: failed to promote rewritten index (recoverable — " +
-        s"${prevPath(dir)} holds the previous index)")
-    fs.delete(prevPath(dir), true)
+    rewrite(spark, dir, "delete")(_.join(
+      broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
+      Seq(m.idCol), "left_anti"))
   }
 
   /** Near-dup pairs between `newDocs` and everything indexed at `dir`

@@ -32,21 +32,19 @@ import graft.ops.{Clustering, Similarity}
  *    retrain = rebuild) and lands it as a COMMITTED BATCH: the data
  *    goes under `lists/batch=<tag>/list_id=*` where the tag is a
  *    deterministic function of the batch's ids, and the batch is live
- *    only once its `_graft_committed` marker exists (written last).
- *    A retried or re-drained batch recomputes the same tag and
- *    OVERWRITES its own partition — idempotent, never double-inserted
- *    (the [[WindowIndex]] exactly-once recipe); a crashed append
- *    leaves an invisible orphan that [[compact]]/[[delete]] garbage-
- *    collect;
+ *    only once it is committed ([[Commits]] committed batches). A
+ *    retried or re-drained batch recomputes the same tag and
+ *    OVERWRITES its own partition — idempotent, never double-inserted;
+ *    a crashed append leaves an invisible orphan that
+ *    [[compact]]/[[delete]] garbage-collect;
  *  - `delete` is the takedown pass: one rewrite of the live lists
  *    minus the deleted ids (broadcast anti-join), crash-safe via the
- *    family's stage + two-rename swap — the quantizer is untouched,
- *    so probes keep their pruning and simply stop surfacing forgotten
- *    vectors.
+ *    [[Commits.swap]] — the quantizer is untouched, so probes keep
+ *    their pruning and simply stop surfacing forgotten vectors.
  *
- * Identity (id/vec columns + their types, DIMS, nlist, iters) is
- * committed to `_graft_index.json` AFTER the data, same crash contract
- * as the sibling indexes: a crashed build leaves no readable index.
+ * Identity (id/vec columns + their types, DIMS, nlist, iters) is the
+ * [[Commits]] index meta, committed AFTER the data: a crashed build
+ * leaves no readable index.
  * Probes read every parameter from the meta — they cannot drift — and
  * every write path validates vector width against the stored dims (a
  * malformed batch fails loudly instead of silently polluting a list
@@ -66,36 +64,21 @@ object VectorIndex {
 
   private def listsPath(dir: String) = s"$dir/lists"
   private def centsPath(dir: String) = s"$dir/centroids"
-  private def metaFile(dir: String) = new Path(dir, "_graft_index.json")
-  private def prevPath(dir: String) = new Path(s"$dir/lists_prev")
-  private def stagePath(dir: String) = s"$dir/lists_staging"
-  private def centsPrevPath(dir: String) = new Path(s"$dir/centroids_prev")
-  private def centsStagePath(dir: String) = new Path(s"$dir/centroids_staging")
-  private val marker = "_graft_committed"
+  private def listsDirs(dir: String) = Commits.SwapDirs(dir, "lists", "staging")
+  private def centsDirs(dir: String) = Commits.SwapDirs(dir, "centroids", "staging")
   private val retireFile = "_graft_retire"
   private val baseTag = "__base__"
 
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Recover the live lists dir after a crashed [[delete]]/[[compact]]
-    * — the sibling indexes' two-rename window; no-op in steady state.
-    * Also restores the centroids dir after a crashed [[maintainLists]]
-    * quantizer swap (same two-rename recovery). */
+  /** [[Commits.heal]] the lists dir (crashed [[delete]]/[[compact]])
+    * and the centroids dir (crashed [[maintainLists]] quantizer swap);
+    * no-op in steady state. */
   private def ensureLive(spark: SparkSession, dir: String): Unit = {
-    val live = new Path(listsPath(dir))
-    val f = fs(spark, live)
-    if (!f.exists(live) && f.exists(prevPath(dir))) {
-      f.delete(new Path(stagePath(dir)), true)
-      require(f.rename(prevPath(dir), live),
-        s"failed to restore $live from ${prevPath(dir)}")
-    }
-    val cents = new Path(centsPath(dir))
-    if (!f.exists(cents) && f.exists(centsPrevPath(dir))) {
-      f.delete(centsStagePath(dir), true)
-      require(f.rename(centsPrevPath(dir), cents),
-        s"failed to restore $cents from ${centsPrevPath(dir)}")
-    }
+    val f = fs(spark, new Path(dir))
+    Commits.heal(f, listsDirs(dir))
+    Commits.heal(f, centsDirs(dir))
   }
 
   /** Fail loudly on any vector whose width differs from the index
@@ -105,31 +88,11 @@ object VectorIndex {
     require(bad == 0, s"$what contains vectors whose width != index dims ($dims)")
   }
 
-  /** Deterministic batch tag from the batch's vector ids — same delta
-    * → same tag → a crashed or retried append OVERWRITES its own
-    * partition instead of accreting (the [[WindowIndex.batchTag]]
-    * convention: order-insensitive XOR of per-id hashes + count). */
-  def batchTag(vecs: DataFrame, idCol: String): String = {
-    val r = vecs.agg(
-      count(lit(1)).as("c"),
-      coalesce(expr(s"bit_xor(xxhash64(cast($idCol as string)))"), lit(0L)).as("h"))
-      .head()
-    s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
-  }
-
-  /** Tags whose commit marker exists — the only batches a reader
-    * sees; orphans of crashed appends stay invisible. */
+  /** Tags of the committed batches — the only batches a reader sees;
+    * orphans of crashed appends stay invisible. */
   private def liveTags(spark: SparkSession, dir: String): Seq[String] = {
     ensureLive(spark, dir)
-    val lists = new Path(listsPath(dir))
-    val f = fs(spark, lists)
-    if (!f.exists(lists)) Nil
-    else f.listStatus(lists).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .filter(nm => f.exists(new Path(lists, s"$nm/$marker")))
-      .map(_.stripPrefix("batch="))
+    Commits.committedBatches(spark, listsPath(dir)).map(Commits.tagOf)
   }
 
   /** Does any live batch hold at least one parquet file? (An index
@@ -182,25 +145,22 @@ object VectorIndex {
   }
 
   /** Write one committed batch under `root/batch=tag` (partitioned by
-    * list_id), marker last — the create is the commit point. `retire`
-    * names (older batch tag → list ids) partitions this batch
-    * SUPERSEDES ([[maintainLists]]): written before the marker, so the
-    * new data and the retirements become one visibility unit. */
+    * list_id), then [[Commits.commitBatch]] it. `retire` names (older
+    * batch tag → list ids) partitions this batch SUPERSEDES
+    * ([[maintainLists]]): written before the commit, so the new data
+    * and the retirements become one visibility unit. */
   private def writeBatch(
       assigned: DataFrame, root: String, tag: String, spark: SparkSession,
       retire: Seq[(String, Seq[Long])] = Nil): Unit = {
+    val batchDir = new Path(s"$root/batch=$tag")
+    val f = fs(spark, batchDir)
     assigned.write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$root/batch=$tag")
-    if (retire.nonEmpty) {
-      val rf = new Path(s"$root/batch=$tag/$retireFile")
-      val out = fs(spark, rf).create(rf, true)
-      try out.write(retire
+      .parquet(batchDir.toString)
+    if (retire.nonEmpty)
+      Commits.writeText(f, new Path(batchDir, retireFile), retire
         .map { case (t, ls) => s"$t:${ls.sorted.mkString(",")}" }
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-    val mk = new Path(s"$root/batch=$tag/$marker")
-    fs(spark, mk).create(mk, true).close()
+        .mkString("\n"), overwrite = true)
+    Commits.commitBatch(f, batchDir)
   }
 
   /** Retirements declared by LIVE batches: batch tag → list ids whose
@@ -213,11 +173,7 @@ object VectorIndex {
       val rf = new Path(lists, s"batch=$t/$retireFile")
       if (!f.exists(rf)) Nil
       else {
-        val in = f.open(rf)
-        val txt =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-          finally in.close()
-        txt.split("\n").filter(_.nonEmpty).toSeq.map { line =>
+        Commits.readText(f, rf).split("\n").filter(_.nonEmpty).toSeq.map { line =>
           val Array(tag, ls) = line.split(":", 2)
           tag -> ls.split(",").filter(_.nonEmpty).map(_.toLong).toSeq
         }
@@ -244,39 +200,25 @@ object VectorIndex {
     val cents = Clustering.train(corpus, idCol, vecCol, nlist, iters)
     val dims = cents.head._2.length
     requireDims(corpus, vecCol, dims, "build corpus")
-    val root = new Path(dir)
-    val f = fs(spark, root)
-    f.delete(new Path(listsPath(dir)), true)
-    f.delete(prevPath(dir), true)
-    f.delete(new Path(stagePath(dir)), true)
+    val f = fs(spark, new Path(dir))
+    val lists = listsDirs(dir)
+    Seq(lists.live, lists.prev, lists.stage).foreach(f.delete(_, true))
     cents.toDF("cid", "cemb")
       .write.mode("overwrite").parquet(centsPath(dir))
     val assigned = Clustering.assign(corpus, idCol, vecCol, cents)
       .select(col(idCol), col("cluster").as("list_id"))
     val data = corpus.select(col(idCol), col(vecCol)).join(assigned, Seq(idCol))
     writeBatch(data, listsPath(dir), baseTag, spark)
-    val ddl = corpus.select(col(idCol), col(vecCol)).schema.toDDL
-    val json = s"""{"id_col": "$idCol", "vec_col": "$vecCol", """ +
-      s""""dims": $dims, "nlist": $nlist, "iters": $iters, """ +
-      s""""schema": "$ddl"}"""
-    val out = f.create(metaFile(dir), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    Commits.writeMeta(spark, dir, "id_col" -> idCol, "vec_col" -> vecCol,
+      "dims" -> dims, "nlist" -> nlist, "iters" -> iters,
+      "schema" -> corpus.select(col(idCol), col(vecCol)).schema.toDDL)
   }
 
   /** Read the index identity. Fails if `dir` holds no committed index. */
   def meta(spark: SparkSession, dir: String): Meta = {
-    val p = metaFile(dir)
-    require(fs(spark, p).exists(p), s"no vector index at $dir (missing ${p.getName})")
-    val in = fs(spark, p).open(p)
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    def str(k: String) = s""""$k": "([^"]*)"""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1)
-    def num(k: String) = s""""$k": (\\d+)""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1).toInt
-    Meta(str("id_col"), str("vec_col"), num("dims"), num("nlist"), num("iters"),
-      str("schema"))
+    val j = Commits.readMeta(spark, dir, "vector")
+    Meta(j.str("id_col"), j.str("vec_col"), j.num("dims"), j.num("nlist"),
+      j.num("iters"), j.str("schema"))
   }
 
   /** The stored centroids as (cid, cemb) — nlist rows. */
@@ -533,25 +475,17 @@ object VectorIndex {
     val assigned = Clustering.assign(newVecs, m.idCol, m.vecCol, cents)
       .select(col(m.idCol), col("cluster").as("list_id"))
     val data = newVecs.select(col(m.idCol), col(m.vecCol)).join(assigned, Seq(m.idCol))
-    writeBatch(data, listsPath(dir), batchTag(newVecs, m.idCol), spark)
+    writeBatch(data, listsPath(dir), Commits.batchTag(newVecs, m.idCol), spark)
   }
 
   /** Rewrite the whole lists store as ONE committed `__base__` batch
-    * holding `data`, swapped in crash-safely (stage → retire live →
-    * promote stage → drop prev) — the shared tail of [[compact]] and
-    * [[delete]]. Orphans of crashed appends are NOT carried over. */
-  private def rewriteLists(spark: SparkSession, dir: String, data: DataFrame): Unit = {
-    val live = new Path(listsPath(dir))
-    val f = fs(spark, live)
-    f.delete(new Path(stagePath(dir)), true)
-    writeBatch(data, stagePath(dir), baseTag, spark)
-    f.delete(prevPath(dir), true) // leftover from an ancient crash
-    require(f.rename(live, prevPath(dir)), s"rewrite: failed to retire $live")
-    require(f.rename(new Path(stagePath(dir)), live),
-      s"rewrite: failed to promote rewritten lists (recoverable — " +
-        s"${prevPath(dir)} holds the previous index)")
-    f.delete(prevPath(dir), true)
-  }
+    * holding `data`, via [[Commits.swap]] — the shared tail of
+    * [[compact]] and [[delete]]. Orphans of crashed appends are NOT
+    * carried over. */
+  private def rewriteLists(spark: SparkSession, dir: String, data: DataFrame): Unit =
+    Commits.swap(fs(spark, new Path(dir)), listsDirs(dir), "rewrite") { stage =>
+      writeBatch(data, stage.toString, baseTag, spark)
+    }
 
   /** Fold the live batches into one `__base__` batch and drop orphan
     * garbage from crashed appends. Single-writer contract: serialize
@@ -586,24 +520,15 @@ object VectorIndex {
       liveLists(spark, dir, m).join(broadcast(ids), Seq(m.idCol), "left_anti"))
   } }
 
-  /** Crash-safe quantizer swap — the [[rewriteLists]] two-rename
-    * protocol on the centroids dir ([[ensureLive]] recovers the
-    * window). */
+  /** Crash-safe quantizer swap — [[Commits.swap]] on the centroids
+    * dir ([[ensureLive]] heals the window). */
   private def swapCentroids(
       spark: SparkSession, dir: String, cents: Seq[(Long, Seq[Double])]): Unit = {
     import spark.implicits._
-    val live = new Path(centsPath(dir))
-    val f = fs(spark, live)
-    f.delete(centsStagePath(dir), true)
-    cents.toDF("cid", "cemb").coalesce(1)
-      .write.mode("overwrite").parquet(centsStagePath(dir).toString)
-    f.delete(centsPrevPath(dir), true)
-    require(f.rename(live, centsPrevPath(dir)),
-      s"maintain: failed to retire $live")
-    require(f.rename(centsStagePath(dir), live),
-      s"maintain: failed to promote centroids (recoverable — " +
-        s"${centsPrevPath(dir)} holds the previous quantizer)")
-    f.delete(centsPrevPath(dir), true)
+    Commits.swap(fs(spark, new Path(dir)), centsDirs(dir), "maintain") { stage =>
+      cents.toDF("cid", "cemb").coalesce(1)
+        .write.mode("overwrite").parquet(stage.toString)
+    }
   }
 
   /**
@@ -688,7 +613,7 @@ object VectorIndex {
         .localCheckpoint() // sever from a same-tag dir being overwritten
       // "m" namespace: a maintenance tag must never collide with (and
       // overwrite) the APPEND batch of the same vector set
-      val tag = "m" + batchTag(affected, m.idCol)
+      val tag = "m" + Commits.batchTag(affected, m.idCol)
       writeBatch(data, listsPath(dir), tag, spark,
         retire = liveTags(spark, dir).filterNot(_ == tag)
           .map(t => t -> driftedIds))

@@ -18,17 +18,17 @@ import graft.ops.{Dedup, Spans}
  * window of every doc per run — exactly the cost an index exists to
  * avoid).
  *
- * Store layout — COMMITTED BATCHES:
+ * Store layout — [[Commits]] COMMITTED BATCHES:
  * {{{
  *   _graft_index.json                  index identity (id_col, n, kind)
  *   store/counts/batch=<tag>/          (hh, cnt) per distinct window hash
- *   store/docs/batch=<tag>/            (id) + _graft_committed  ← commit point
+ *   store/docs/batch=<tag>/            (id) + commit marker  ← commit point
  * }}}
- * Every write lands under a per-batch partition pair whose tag is a
- * DETERMINISTIC function of the batch's doc ids, and a batch is LIVE
- * only once its docs-side `_graft_committed` marker exists (written
- * last). That pair of properties makes maintenance effectively
- * exactly-once without a transactional store:
+ * Every write lands under a per-batch partition pair whose tag is the
+ * [[Commits.batchTag]] of the batch's doc ids, and a batch is LIVE
+ * only once its docs side is committed (marker written last). That
+ * pair of properties makes maintenance effectively exactly-once
+ * without a transactional store:
  *
  *  - a crash between the counts write and the docs commit leaves an
  *    INVISIBLE orphan — readers (probe, [[counts]], [[processedIds]])
@@ -51,8 +51,8 @@ import graft.ops.{Dedup, Spans}
  * ∝ distinct n-grams + doc IDS (never per-window rows, never text).
  *
  * Same single-writer / many-reader contract and crash-safe compaction
- * (stage + two renames of the ONE `store/` root + recovery) as the
- * signature store; serialize [[compact]] with appends.
+ * ([[Commits.swap]] of the ONE `store/` root, healed by readers) as
+ * the signature store; serialize [[compact]] with appends.
  */
 object WindowIndex {
 
@@ -73,68 +73,42 @@ object WindowIndex {
   private def storePath(dir: String) = s"$dir/store"
   private def countsPath(dir: String) = s"${storePath(dir)}/counts"
   private def docsPath(dir: String) = s"${storePath(dir)}/docs"
-  private def metaFile(dir: String) = new Path(dir, "_graft_index.json")
-  private def prevPath(dir: String) = new Path(s"$dir/store_prev")
-  private def stagePath(dir: String) = s"$dir/store_compacting"
-  private val marker = "_graft_committed"
+  private def storeDirs(dir: String) = Commits.SwapDirs(dir, "store", "compacting")
   private val baseTag = "__base__"
 
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Recover the live store after a crashed [[compact]] — see
-    * [[SignatureIndex]]; no-op in the steady state. */
-  private def ensureLive(spark: SparkSession, dir: String): Unit = {
-    val live = new Path(storePath(dir))
-    val f = fs(spark, live)
-    if (!f.exists(live) && f.exists(prevPath(dir))) {
-      f.delete(new Path(stagePath(dir)), true)
-      require(f.rename(prevPath(dir), live),
-        s"failed to restore $live from ${prevPath(dir)}")
-    }
-  }
+  /** [[Commits.heal]] a crashed [[compact]]/[[delete]] swap; no-op in
+    * the steady state. */
+  private def ensureLive(spark: SparkSession, dir: String): Unit =
+    Commits.heal(fs(spark, new Path(dir)), storeDirs(dir))
 
-  /** Deterministic batch tag from the batch's doc ids: same delta →
-    * same tag → a crashed write is OVERWRITTEN by its replay, never
-    * accreted. (Order-insensitive XOR of per-id hashes — wrap-free
-    * under ANSI mode; the count guards the degenerate empty batch.) */
-  def batchTag(docs: DataFrame, idCol: String): String = {
-    val r = docs.agg(
-      count(lit(1)).as("c"),
-      coalesce(expr(s"bit_xor(xxhash64(cast($idCol as string)))"), lit(0L)).as("h"))
-      .head()
-    s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
-  }
-
-  /** Tags whose docs-side commit marker exists — the only partitions
+  /** Tags of the docs-side committed batches — the only partitions
     * any reader sees. */
   private def liveTags(spark: SparkSession, dir: String): Seq[String] = {
     ensureLive(spark, dir)
-    val docs = new Path(docsPath(dir))
-    val f = fs(spark, docs)
-    if (!f.exists(docs)) Nil
-    else f.listStatus(docs).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .filter(nm => f.exists(new Path(docs, s"$nm/$marker")))
-      .map(_.stripPrefix("batch="))
+    Commits.committedBatches(spark, docsPath(dir)).map(Commits.tagOf)
   }
 
-  /** Write one committed batch: counts partition, then the docs/ledger
-    * partition, then the marker — the LAST create is the commit. */
+  /** Write one committed batch under `store`: counts partition, then
+    * the docs/ledger partition, then its commit marker. */
   private def writeBatch(
-      newDocs: DataFrame, textCol: String, dir: String, tag: String,
-      m: Meta): Unit = {
-    val spark = newDocs.sparkSession
-    Spans.windowHashCounts(newDocs, textCol, m.idCol, m.n, m.kind)
-      .sortWithinPartitions("hh") // dictionary/RLE-friendly runs
-      .write.mode("overwrite").parquet(s"${countsPath(dir)}/batch=$tag")
-    newDocs.select(m.idCol)
-      .write.mode("overwrite").parquet(s"${docsPath(dir)}/batch=$tag")
-    val mk = new Path(s"${docsPath(dir)}/batch=$tag/$marker")
-    fs(spark, mk).create(mk, true).close()
+      counts: DataFrame, ids: DataFrame, store: String, tag: String): Unit = {
+    counts.write.mode("overwrite").parquet(s"$store/counts/batch=$tag")
+    val docsBatch = new Path(s"$store/docs/batch=$tag")
+    ids.write.mode("overwrite").parquet(docsBatch.toString)
+    Commits.commitBatch(fs(ids.sparkSession, docsBatch), docsBatch)
   }
+
+  /** [[writeBatch]] of `newDocs`' window-hash counts and ids. */
+  private def writeDocs(
+      newDocs: DataFrame, textCol: String, dir: String, tag: String,
+      m: Meta): Unit =
+    writeBatch(
+      Spans.windowHashCounts(newDocs, textCol, m.idCol, m.n, m.kind)
+        .sortWithinPartitions("hh"), // dictionary/RLE-friendly runs
+      newDocs.select(m.idCol), storePath(dir), tag)
 
   /** Build the index from scratch as the `__base__` batch, then commit
     * the meta file. Overwrites any previous index at `dir`. */
@@ -148,32 +122,18 @@ object WindowIndex {
     require(idCol.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"idCol '$idCol' must be a plain identifier (stored in index meta)")
     val spark = docs.sparkSession
-    val root = new Path(dir)
-    val f = fs(spark, root)
-    f.delete(new Path(storePath(dir)), true)
-    f.delete(prevPath(dir), true)
-    f.delete(new Path(stagePath(dir)), true)
-    writeBatch(docs, textCol, dir, baseTag, Meta(idCol, n, kind))
-    val json =
-      s"""{"id_col": "$idCol", "n": $n, "kind": "${kindName(kind)}"}"""
-    val out = f.create(metaFile(dir), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    val f = fs(spark, new Path(dir))
+    val store = storeDirs(dir)
+    Seq(store.live, store.prev, store.stage).foreach(f.delete(_, true))
+    writeDocs(docs, textCol, dir, baseTag, Meta(idCol, n, kind))
+    Commits.writeMeta(spark, dir, "id_col" -> idCol, "n" -> n,
+      "kind" -> kindName(kind))
   }
 
   /** Read the index identity. Fails if `dir` holds no committed index. */
   def meta(spark: SparkSession, dir: String): Meta = {
-    val p = metaFile(dir)
-    val f = fs(spark, p)
-    require(f.exists(p), s"no window index at $dir (missing ${p.getName})")
-    val in = f.open(p)
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    def str(k: String) = s""""$k": "([^"]*)"""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1)
-    def num(k: String) = s""""$k": (\\d+)""".r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"bad index meta: missing $k")).group(1).toInt
-    Meta(str("id_col"), num("n"), kindOf(str("kind")))
+    val j = Commits.readMeta(spark, dir, "window")
+    Meta(j.str("id_col"), j.num("n"), kindOf(j.str("kind")))
   }
 
   /** The LIVE per-hash counts (hh, cnt) — possibly several rows per
@@ -249,13 +209,12 @@ object WindowIndex {
     val spark = newDocs.sparkSession
     ensureLive(spark, dir)
     val m = meta(spark, dir)
-    writeBatch(newDocs, textCol, dir, batchTag(newDocs, m.idCol), m)
+    writeDocs(newDocs, textCol, dir, Commits.batchTag(newDocs, m.idCol), m)
   }
 
   /** Re-aggregate the LIVE partitions to one (hh, cnt) row per hash in
     * `numFiles` hash-range-clustered files (plus the compacted ledger),
-    * swapped in crash-safely (stage → rename live to prev → promote
-    * stage → drop prev). Orphan partitions of crashed appends are NOT
+    * swapped in crash-safely. Orphan partitions of crashed appends are NOT
     * carried over — compaction is also the garbage collector. Must not
     * run concurrently with an append (single-writer contract). */
   def compact(spark: SparkSession, dir: String, numFiles: Int): Unit =
@@ -264,28 +223,17 @@ object WindowIndex {
       processedIds(spark, dir), numFiles)
 
   /** Rewrite the whole store as ONE `__base__` batch holding
-    * (`newCounts`, `newIds`), swapped in crash-safely — the shared tail
-    * of [[compact]] and [[delete]]. */
+    * (`newCounts`, `newIds`) via [[Commits.swap]] — the shared tail of
+    * [[compact]] and [[delete]]. */
   private def rewriteStore(
       spark: SparkSession, dir: String,
       newCounts: DataFrame, newIds: DataFrame, numFiles: Int): Unit = {
     ensureLive(spark, dir)
-    val live = new Path(storePath(dir))
-    val f = fs(spark, live)
-    newCounts
-      .repartitionByRange(numFiles, col("hh"))
-      .sortWithinPartitions("hh")
-      .write.mode("overwrite").parquet(s"${stagePath(dir)}/counts/batch=$baseTag")
-    newIds
-      .write.mode("overwrite").parquet(s"${stagePath(dir)}/docs/batch=$baseTag")
-    val mk = new Path(s"${stagePath(dir)}/docs/batch=$baseTag/$marker")
-    f.create(mk, true).close()
-    f.delete(prevPath(dir), true) // leftover from an ancient crash
-    require(f.rename(live, prevPath(dir)), s"rewrite: failed to retire $live")
-    require(f.rename(new Path(stagePath(dir)), live),
-      s"rewrite: failed to promote staged index (recoverable — " +
-        s"${prevPath(dir)} holds the previous index)")
-    f.delete(prevPath(dir), true)
+    Commits.swap(fs(spark, new Path(dir)), storeDirs(dir), "rewrite") { stage =>
+      writeBatch(
+        newCounts.repartitionByRange(numFiles, col("hh")).sortWithinPartitions("hh"),
+        newIds, stage.toString, baseTag)
+    }
   }
 
   /**

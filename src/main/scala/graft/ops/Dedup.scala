@@ -477,9 +477,12 @@ object Dedup {
       }
     val useDict = nDocs.exists(_ <= dictVerifyMaxDocs)
     // gate-bounded id list: broadcast the prune key when its size is
-    // known small (checkpointed frames carry no stats — every join
-    // against candIds would otherwise plan sort-merge, exchanging the
-    // corpus-side rows on a key the plan never reuses)
+    // known small (checkpointed frames carry no stats — the two
+    // left_semi prunes below would otherwise plan sort-merge,
+    // exchanging the corpus-side rows on a key the plan never reuses).
+    // The dict path's re-attach keeps candIdsB as the PRESERVED side
+    // of a left-outer join, which Spark never broadcasts: the hint is
+    // ignored there.
     val candIdsB = if (nDocs.exists(_ <= dictVerifyMaxDocs))
       broadcast(candIds) else candIds
     val shingled = (if (!useDict) {

@@ -85,7 +85,8 @@ object Medallion {
         Map("rows_in" -> obsIn.get("rows_in").asInstanceOf[Long],
           "rows_clean" -> obsOut.get("rows_clean").asInstanceOf[Long])
       },
-      retries = aggStage.retries)
+      retries = aggStage.retries,
+      retryDelayMs = aggStage.retryDelayMs)
 
     val gold = Runner.Stage(
       aggStage.taskId,
@@ -97,7 +98,8 @@ object Medallion {
         Layers.writeGold(goldDf, goldDir)
         Map("rollup_rows" -> obs.get("rollup_rows").asInstanceOf[Long])
       },
-      retries = aggStage.retries)
+      retries = aggStage.retries,
+      retryDelayMs = aggStage.retryDelayMs)
 
     val quality = Runner.Stage(
       qStage.taskId,
@@ -112,7 +114,8 @@ object Medallion {
         Map("rules_checked" -> report.length.toLong,
           "rules_failed" -> bad.length.toLong)
       },
-      retries = qStage.retries)
+      retries = qStage.retries,
+      retryDelayMs = qStage.retryDelayMs)
 
     Seq(bronze, silver, gold, quality)
   }

@@ -44,8 +44,6 @@ import graft.ops.AudioDedup
  */
 object AudioIngest {
 
-  private val marker = "_graft_committed"
-
   private val fpSchema = StructType(Seq(
     StructField("media_id", StringType, nullable = true),
     StructField("t", LongType, nullable = false),
@@ -58,17 +56,11 @@ object AudioIngest {
       spark: SparkSession, indexDir: String,
       frameLen: Int, bins: Int, fanout: Int): Unit = {
     val p = new Path(indexDir, "_graft_geometry.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Commits.fsOf(spark, p)
     val want = s"""{"frame_len": $frameLen, "bins": $bins, "fanout": $fanout}"""
-    if (!fs.exists(p)) {
-      val out = fs.create(p, false)
-      try out.write(want.getBytes("UTF-8")) finally out.close()
-    } else {
-      val in = fs.open(p)
-      val got =
-        try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
+    if (!fs.exists(p)) Commits.writeText(fs, p, want, overwrite = false)
+    else {
+      val got = Commits.readText(fs, p)
       require(got == want,
         s"audio-ingest geometry drift at $indexDir: store pinned $got, " +
           s"this drain passed $want — a drifted drain would probe " +
@@ -76,22 +68,10 @@ object AudioIngest {
     }
   }
 
-  private def committedBatches(
-      spark: SparkSession, indexDir: String): Seq[Path] = {
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .filter(b => fs.exists(new Path(b, marker)))
-  }
-
   /** The standing fingerprint index (media_id, t, fp) — committed
     * batches only; orphans of crashed appends stay invisible. */
   def readFingerprints(spark: SparkSession, indexDir: String): DataFrame = {
-    val batches = committedBatches(spark, indexDir)
+    val batches = Commits.committedBatches(spark, indexDir)
     if (batches.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fpSchema)
@@ -148,7 +128,7 @@ object AudioIngest {
         // (the crashed drain computed its pairs but never returned
         // them to a caller — [[PairReports]])
         val healed = PairReports.healed(spark, indexDir,
-          committedBatches(spark, indexDir), fresh,
+          Commits.committedBatches(spark, indexDir), fresh,
           audio.select("media_id").distinct(), empty.schema)
         val delta = audio.join(standingIds, Seq("media_id"), "left_anti")
         val fps = AudioDedup.fingerprintsStr(
@@ -160,20 +140,14 @@ object AudioIngest {
               fps, standing, "media_id", minShared, maxDocsPerFp)
             .localCheckpoint() // judged against the PRE-append store
           // deterministic tag: a replayed batch overwrites its own orphan
-          val r = fps.select("media_id").distinct().agg(
-            count(lit(1)).as("c"),
-            coalesce(expr("bit_xor(xxhash64(media_id))"), lit(0L)).as("h"))
-            .head()
-          val tag = s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
-          val dir = s"$indexDir/batch=$tag"
-          fps.write.mode("overwrite").parquet(dir)
+          val tag = Commits.batchTag(fps.select("media_id").distinct(), "media_id")
+          val dir = new Path(s"$indexDir/batch=$tag")
+          fps.write.mode("overwrite").parquet(dir.toString)
           // pair report + source-file list BEFORE the marker: a
           // marker-committed batch is always re-readable on replay
           // (the meta-last convention)
           PairReports.persist(pairs, indexDir, tag, fresh)
-          val mk = new Path(dir, marker)
-          val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.create(mk, true).close() // index commit point
+          Commits.commitBatch(Commits.fsOf(spark, dir), dir) // index commit point
           commitFolded() // folded record LAST: crash before re-scans,
                          // the anti-join above heals the replay
           pairs.unionAll(healed)

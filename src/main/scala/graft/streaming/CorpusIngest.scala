@@ -75,8 +75,7 @@ object CorpusIngest {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(indexDir, "_graft_index.json")))
+    if (!graft.io.Commits.hasMeta(spark, indexDir))
       SignatureIndex.build(
         silver.limit(0), textCol, idCol, indexDir,
         numHashes, bands, shingleWords, kind)
@@ -220,8 +219,7 @@ object CorpusIngest {
         when(col("__batch"), lit("batch"))
           .otherwise(lit(null).cast("string")).as("reason"),
         col("__batch").isNull.as("keep"))
-    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(indexDir, "_graft_index.json"))) {
+    if (!graft.io.Commits.hasMeta(spark, indexDir)) {
       if (silver.isEmpty) decisions(silver, silver.select(col(idCol))
         .withColumn("__batch", lit(true)).limit(0))
       else {
@@ -272,8 +270,7 @@ object CorpusIngest {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-    val fs = new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(indexDir, "_graft_index.json")))
+    if (!graft.io.Commits.hasMeta(spark, indexDir))
       WindowIndex.build(silver.limit(0), textCol, idCol, indexDir, n, kind)
 
     silver.join(

@@ -77,10 +77,8 @@ object GraphIngest {
       else {
         val batch = spark.read.schema(schema).parquet(fresh: _*)
           .select(col(idCol), col(vecCol))
-        val metaP = new Path(indexDir, "_graft_index.json")
-        val mfs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val n =
-          if (!mfs.exists(metaP)) {
+          if (!Commits.hasMeta(spark, indexDir)) {
             // bootstrap: the first data drain trains the graph (build
             // resets only its own parts — the held claim and the
             // folded record committed below survive it)

@@ -43,29 +43,15 @@ import graft.ops.ImageDedup
  */
 object ImageIngest {
 
-  private val marker = "_graft_committed"
-
   private val hashSchema = StructType(Seq(
     StructField("media_id", StringType, nullable = true),
     StructField("ahash", LongType, nullable = false),
     StructField("dhash", LongType, nullable = false)))
 
-  private def committedBatches(
-      spark: SparkSession, indexDir: String): Seq[Path] = {
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .filter(b => fs.exists(new Path(b, marker)))
-  }
-
   /** The standing hash index (media_id, ahash, dhash) — committed
     * batches only; orphans of crashed appends stay invisible. */
   def readHashes(spark: SparkSession, indexDir: String): DataFrame = {
-    val batches = committedBatches(spark, indexDir)
+    val batches = Commits.committedBatches(spark, indexDir)
     if (batches.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hashSchema)
@@ -123,7 +109,7 @@ object ImageIngest {
         // is commit state, so an at-least-once producer re-delivering
         // an id in a NEW file never re-emits a folded batch's report)
         val healed = PairReports.healed(spark, indexDir,
-          committedBatches(spark, indexDir), fresh,
+          Commits.committedBatches(spark, indexDir), fresh,
           images.select("media_id").distinct(), empty.schema)
         val delta = images.join(standingIds, Seq("media_id"), "left_anti")
         val hashed = ImageDedup.perceptualHashesStr(delta, "media_id", "payload")
@@ -134,20 +120,14 @@ object ImageIngest {
               hashed, standing, "media_id", "ahash", maxHamming, bands)
             .localCheckpoint() // judged against the PRE-append store
           // deterministic tag: a replayed batch overwrites its own orphan
-          val r = hashed.agg(
-            count(lit(1)).as("c"),
-            coalesce(expr("bit_xor(xxhash64(media_id))"), lit(0L)).as("h"))
-            .head()
-          val tag = s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
-          val dir = s"$indexDir/batch=$tag"
-          hashed.write.mode("overwrite").parquet(dir)
+          val tag = Commits.batchTag(hashed, "media_id")
+          val dir = new Path(s"$indexDir/batch=$tag")
+          hashed.write.mode("overwrite").parquet(dir.toString)
           // pair report + source-file list BEFORE the marker: a
           // marker-committed batch is always re-readable on replay
           // (the meta-last convention)
           PairReports.persist(pairs, indexDir, tag, fresh)
-          val mk = new Path(dir, marker)
-          val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.create(mk, true).close() // index commit point
+          Commits.commitBatch(Commits.fsOf(spark, dir), dir) // index commit point
           commitFolded() // folded record LAST: crash before re-scans,
                          // the anti-join above heals the replay
           pairs.unionAll(healed)

@@ -140,7 +140,7 @@ object PairReports {
       val (b, mtime) = it.next()
       if (stopAt.exists(mtime < _)) done = true
       else {
-        val tag = b.getName.stripPrefix("batch=")
+        val tag = graft.io.Commits.tagOf(b)
         val srcP = new Path(reportDir(indexDir, tag), sourcesName)
         // a zero-line sidecar is treated as ABSENT: the only writers
         // emit either source paths or the folded token, so no lines

@@ -40,30 +40,16 @@ import graft.ops.VideoDedup
  */
 object VideoIngest {
 
-  private val marker = "_graft_committed"
-
   private val hashSchema = StructType(Seq(
     StructField("media_id", StringType, nullable = true),
     StructField("frame_idx", LongType, nullable = false),
     StructField("ahash", LongType, nullable = false)))
 
-  private def committedBatches(
-      spark: SparkSession, indexDir: String): Seq[Path] = {
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .filter(b => fs.exists(new Path(b, marker)))
-  }
-
   /** The standing frame-hash index (media_id, frame_idx, ahash) —
     * committed batches only; orphans of crashed appends stay
     * invisible. */
   def readFrameHashes(spark: SparkSession, indexDir: String): DataFrame = {
-    val batches = committedBatches(spark, indexDir)
+    val batches = Commits.committedBatches(spark, indexDir)
     if (batches.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hashSchema)
@@ -112,7 +98,7 @@ object VideoIngest {
         // (the crashed drain computed its pairs but never returned
         // them to a caller — [[PairReports]])
         val healed = PairReports.healed(spark, indexDir,
-          committedBatches(spark, indexDir), fresh,
+          Commits.committedBatches(spark, indexDir), fresh,
           videos.select("media_id").distinct(), empty.schema)
         val delta = videos.join(standingIds, Seq("media_id"), "left_anti")
         val hashed = VideoDedup.frameHashesStr(delta, "media_id", "payload")
@@ -123,20 +109,14 @@ object VideoIngest {
               hashed, standing, "media_id", maxHamming, bands, minFrames)
             .localCheckpoint() // judged against the PRE-append store
           // deterministic tag: a replayed batch overwrites its own orphan
-          val r = hashed.select("media_id").distinct().agg(
-            count(lit(1)).as("c"),
-            coalesce(expr("bit_xor(xxhash64(media_id))"), lit(0L)).as("h"))
-            .head()
-          val tag = s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
-          val dir = s"$indexDir/batch=$tag"
-          hashed.write.mode("overwrite").parquet(dir)
+          val tag = Commits.batchTag(hashed.select("media_id").distinct(), "media_id")
+          val dir = new Path(s"$indexDir/batch=$tag")
+          hashed.write.mode("overwrite").parquet(dir.toString)
           // pair report + source-file list BEFORE the marker: a
           // marker-committed batch is always re-readable on replay
           // (the meta-last convention)
           PairReports.persist(pairs, indexDir, tag, fresh)
-          val mk = new Path(dir, marker)
-          val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.create(mk, true).close() // index commit point
+          Commits.commitBatch(Commits.fsOf(spark, dir), dir) // index commit point
           commitFolded() // folded record LAST: crash before re-scans,
                          // the anti-join above heals the replay
           pairs.unionAll(healed)

@@ -1099,6 +1099,22 @@ class DedupSpec extends AnyFunSuite {
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
+  test("weighted sorted-intersect kernel: short weights fail loudly through SQL") {
+    import TestSpark.spark
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    Seq((Seq(1L, 2L, 3L), Seq(10L), Seq(1L, 2L, 3L)))
+      .toDF("a", "w", "b").createOrReplaceTempView("wsum_short_weights")
+    val e = intercept[Exception] {
+      spark.sql("SELECT graft_sorted_intersect_wsum(a, w, b) FROM wsum_short_weights")
+        .collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("weights_a has 1 elements but ids_a has 3")),
+      msgs.mkString(" | "))
+  }
+
   test("bBitMinhashReport: identical pair is exact under any b; correction bounds") {
     import TestSpark.spark
     import spark.implicits._

@@ -344,4 +344,21 @@ class LayersSpec extends AnyFunSuite {
       Layers.vacuumPlan(spark, base, keepLast = 0)
     }
   }
+
+  test("an in-flight publishAtomic staging dir is neither a version nor an orphan") {
+    val base = TestSpark.tmpDir("vacuum_tmp")
+    val df = Seq(1L, 2L).toDF("k")
+    Layers.writeJsonl(df, base, Some("a"))
+    // Commits.publishAtomic stages `_SUCCESS` inside its hidden tmp
+    // dir before the rename — it sorts first but is not a run yet
+    val staging = new java.io.File(s"$base/.tmp-x")
+    staging.mkdirs()
+    new java.io.File(staging, "_SUCCESS").createNewFile()
+    val plan = Layers.vacuumPlan(spark, base, keepLast = 1)
+      .collect().map(r => (r.getString(0),
+        if (r.isNullAt(1)) -1L else r.getLong(1), r.getString(2))).toSet
+    assert(plan == Set(("run_a", 0L, "keep")))
+    assert(Layers.successfulRuns(spark, base).map(_.split('/').last) == Seq("run_a"))
+    assert(Layers.latestSuccessfulRun(spark, base).get.endsWith("/run_a"))
+  }
 }

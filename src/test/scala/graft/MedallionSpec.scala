@@ -50,6 +50,23 @@ class MedallionSpec extends AnyFunSuite {
     normalizeCols = Seq("c_name", "c_mktsegment"),
     order = Seq(col("c_name").asc_nulls_first))
 
+  test("stages carry the configured retries and backoff_seconds delay") {
+    val yaml = confYaml
+      .replace("  - task_id: aggregate_gold\n",
+        "  - task_id: aggregate_gold\n    retries: 2\n    backoff_seconds: 3\n")
+      .replace("    depends_on: [\"aggregate_gold\"]\n",
+        "    depends_on: [\"aggregate_gold\"]\n    retries: 1\n    backoff_seconds: 5\n")
+    val stages = Medallion.stages(
+      PipelineConfig.parse(yaml), PipelineConfig.parseMetadata(metaYaml),
+      source = sp => sp.emptyDataFrame, baseDir = TestSpark.tmpDir("medallion_retry"),
+      runId = "r", transformationDate = "2025-10-15", clean = cleanSpec)
+    assert(stages.map(s => (s.id, s.retries, s.retryDelayMs)) == Seq(
+      ("fetch_data_bronze", 0, 1000L),
+      ("transform_silver", 2, 3000L),
+      ("aggregate_gold", 2, 3000L),
+      ("validate_gold_quality", 1, 5000L)))
+  }
+
   test("end-to-end: bronze→silver→gold→quality publishes every layer + the report artifact") {
     val base = TestSpark.tmpDir("medallion_e2e")
     val (report, goldPath) = Medallion.run(

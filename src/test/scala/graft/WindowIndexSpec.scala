@@ -273,7 +273,7 @@ class WindowIndexSpec extends AnyFunSuite {
     WindowIndex.append(batch, "text", dir)
     // simulate the crash window: counts partition written, docs commit
     // marker never created
-    val tag = WindowIndex.batchTag(batch, "doc_id")
+    val tag = graft.io.Commits.batchTag(batch, "doc_id")
     val mk = new org.apache.hadoop.fs.Path(s"$dir/store/docs/batch=$tag/_graft_committed")
     val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(mk), "sanity: committed append has a marker")
