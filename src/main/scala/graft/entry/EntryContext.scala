@@ -280,9 +280,9 @@ private[graft] trait EntryContext extends EntryOracleSql {
     pairsMemo.clear(); sigsMemo.clear(); durableIdxMemo.clear()
     pqMemo.clear(); labelsMemo.clear(); winIdxMemo.clear()
     forgetIdxMemo.clear(); vecIdxMemo.clear(); corpusVecIdxMemo.clear()
-    maintReportMemo.clear(); imageIngestMemo.clear(); annGraphMemo.clear()
-    graphIdxMemo.clear(); audioIdxMemo.clear(); audioIngestMemo.clear()
-    audioPairsMemo.clear(); videoIngestMemo.clear(); tokenizerMemo.clear()
+    maintReportMemo.clear(); mediaIngestMemo.clear(); annGraphMemo.clear()
+    graphIdxMemo.clear(); audioIdxMemo.clear(); audioPairsMemo.clear()
+    tokenizerMemo.clear()
   }
 
   /** q280 fixture: durable IVF built on the EVEN vectors, the odd half
@@ -369,9 +369,9 @@ private[graft] trait EntryContext extends EntryOracleSql {
     // crash/claim-spec'd, and its representative magnitude is the
     // BASELINE r17 in-bench measurement (image 3.8 s sf0.1 / 10.4 s
     // sf1) recorded in the r18 accounting note
-    "q282_image_ingest" -> ((s, dir) => imageIngestPairs(s, dir).count(): Unit),
-    "q297_audio_ingest" -> ((s, dir) => audioIngestPairs(s, dir).count(): Unit),
-    "q298_video_ingest" -> ((s, dir) => videoIngestPairs(s, dir).count(): Unit),
+    "q282_image_ingest" -> ((s, dir) => mediaIngestPairs(s, dir, "image").count(): Unit),
+    "q297_audio_ingest" -> ((s, dir) => mediaIngestPairs(s, dir, "audio").count(): Unit),
+    "q298_video_ingest" -> ((s, dir) => mediaIngestPairs(s, dir, "video").count(): Unit),
     // trained-tokenizer stems (r18 verdict #2): the equity/coverage
     // reports consume models a deployment trains once — the warmers
     // build them untimed so bench rows price the report
@@ -628,39 +628,50 @@ private[graft] trait EntryContext extends EntryOracleSql {
           .localCheckpoint()
       })
 
-  protected val imageIngestMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  protected val mediaIngestMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
 
-  /** q282 fixture: two WARC waves through
-    * [[graft.streaming.ImageIngest.maintainImages]]. The store is
-    * rebuilt from scratch each app run (a stale index from a previous
-    * JVM would empty the delta); the memo pins drain 2's pair report
-    * as the query result across bench reps. */
-  protected def imageIngestPairs(s: SparkSession, dir: String): DataFrame =
-    imageIngestMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val base = tmp("image_ingest_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
-        val png = udf((id: Long) => graft.ops.Multimodal.demoPng(id, 36, 32))
+  /** q282/q297/q298 fixture: two WARC waves of one modality's demo
+    * payloads (`kind` = image | audio | video) through its
+    * [[graft.streaming.MediaIngest]] maintainer — evens bootstrap the
+    * standing store, odds probe it. The store is rebuilt from scratch
+    * each app run (a stale store from a previous JVM would empty the
+    * delta); the memo pins drain 2's pair report as the query result
+    * across bench reps. */
+  protected def mediaIngestPairs(s: SparkSession, dir: String, kind: String): DataFrame =
+    mediaIngestMemo.getOrElseUpdate(
+      (s.sparkContext.applicationId, dir, kind), {
+        val base = tmp(s"${kind}_ingest_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
+        wipe(s, base)
+        val (short, contentType, payload, drain) = kind match {
+          case "image" => ("img", "image/png",
+            udf((id: Long) => graft.ops.Multimodal.demoPng(id, 36, 32)),
+            graft.streaming.ImageIngest.maintainImages(
+              s, _: String, _: String, _: String, _: String, maxHamming = 6))
+          case "video" => ("vid", "video/y4m",
+            udf((id: Long) => graft.ops.Multimodal.demoY4m(id, 36, 32)),
+            graft.streaming.VideoIngest.maintainVideos(
+              s, _: String, _: String, _: String, _: String, maxHamming = 6))
+          case "audio" => ("aud", "audio/wav",
+            udf((id: Long) => graft.ops.Multimodal.demoTone(id)),
+            graft.streaming.AudioIngest.maintainAudio(
+              s, _: String, _: String, _: String, _: String, minShared = 8L, bins = 16))
+        }
         def wave(docs: DataFrame, sub: String): Unit =
           graft.sources.WarcIO.writeWarc(
             docs.select(
-              concat(lit("http://img.example/"), col("doc_id")).as("target_uri"),
+              concat(lit(s"http://$short.example/"), col("doc_id")).as("target_uri"),
               lit("2026-01-01T00:00:00Z").as("warc_date"),
-              concat(lit("<urn:graft:img:"), col("doc_id"), lit(">")).as("record_id"),
-              lit("image/png").as("content_type"),
-              png(col("doc_id")).as("payload")),
+              concat(lit(s"<urn:graft:$short:"), col("doc_id"), lit(">")).as("record_id"),
+              lit(contentType).as("content_type"),
+              payload(col("doc_id")).as("payload")),
             s"$base/landing/$sub")
-        def drain() = graft.streaming.ImageIngest.maintainImages(
-          s, s"$base/landing", s"$base/silver", s"$base/ledger",
-          s"$base/index", maxHamming = 6)
         val docs = T(s, dir, "documents").select("doc_id")
         wave(docs.filter(col("doc_id") % 2 === 0), "w1")
-        drain()
+        drain(s"$base/landing", s"$base/silver", s"$base/ledger", s"$base/index")
         wave(docs.filter(col("doc_id") % 2 =!= 0), "w2")
-        drain().localCheckpoint()
+        drain(s"$base/landing", s"$base/silver", s"$base/ledger", s"$base/index")
+          .localCheckpoint()
       })
 
   protected val audioIdxMemo =
@@ -768,71 +779,6 @@ private[graft] trait EntryContext extends EntryOracleSql {
         graft.ops.WordPiece.vocab(docs, "text",
           graft.ops.WordPiece.train(docs, "text", merges = 6)))
     }).asInstanceOf[Seq[String]]
-
-  protected val videoIngestMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** q298 fixture: two WARC waves of Y4M payloads through
-    * [[graft.streaming.VideoIngest.maintainVideos]] — evens bootstrap
-    * the frame-hash store, odds probe it. The memo pins drain 2's
-    * pair report across bench reps (the imageIngestPairs convention). */
-  protected def videoIngestPairs(s: SparkSession, dir: String): DataFrame =
-    videoIngestMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val base = tmp("video_ingest_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        wipe(s, base)
-        val y4m = udf((id: Long) => graft.ops.Multimodal.demoY4m(id, 36, 32))
-        def wave(docs: DataFrame, sub: String): Unit =
-          graft.sources.WarcIO.writeWarc(
-            docs.select(
-              concat(lit("http://vid.example/"), col("doc_id")).as("target_uri"),
-              lit("2026-01-01T00:00:00Z").as("warc_date"),
-              concat(lit("<urn:graft:vid:"), col("doc_id"), lit(">")).as("record_id"),
-              lit("video/y4m").as("content_type"),
-              y4m(col("doc_id")).as("payload")),
-            s"$base/landing/$sub")
-        def drain() = graft.streaming.VideoIngest.maintainVideos(
-          s, s"$base/landing", s"$base/silver", s"$base/ledger",
-          s"$base/index", maxHamming = 6)
-        val docs = T(s, dir, "documents").select("doc_id")
-        wave(docs.filter(col("doc_id") % 2 === 0), "w1")
-        drain()
-        wave(docs.filter(col("doc_id") % 2 =!= 0), "w2")
-        drain().localCheckpoint()
-      })
-
-  protected val audioIngestMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** q297 fixture: two WARC waves of WAV payloads through
-    * [[graft.streaming.AudioIngest.maintainAudio]] — evens land and
-    * bootstrap the fingerprint store, odds land and probe it. The
-    * memo pins drain 2's pair report across bench reps (the
-    * imageIngestPairs convention). */
-  protected def audioIngestPairs(s: SparkSession, dir: String): DataFrame =
-    audioIngestMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val base = tmp("audio_ingest_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        wipe(s, base)
-        val wav = udf((id: Long) => graft.ops.Multimodal.demoTone(id))
-        def wave(docs: DataFrame, sub: String): Unit =
-          graft.sources.WarcIO.writeWarc(
-            docs.select(
-              concat(lit("http://aud.example/"), col("doc_id")).as("target_uri"),
-              lit("2026-01-01T00:00:00Z").as("warc_date"),
-              concat(lit("<urn:graft:aud:"), col("doc_id"), lit(">")).as("record_id"),
-              lit("audio/wav").as("content_type"),
-              wav(col("doc_id")).as("payload")),
-            s"$base/landing/$sub")
-        def drain() = graft.streaming.AudioIngest.maintainAudio(
-          s, s"$base/landing", s"$base/silver", s"$base/ledger",
-          s"$base/index", minShared = 8L, bins = 16)
-        val docs = T(s, dir, "documents").select("doc_id")
-        wave(docs.filter(col("doc_id") % 2 === 0), "w1")
-        drain()
-        wave(docs.filter(col("doc_id") % 2 =!= 0), "w2")
-        drain().localCheckpoint()
-      })
 
   /** Deterministic audio corpus for q278/q279: one RIFF/WAVE PCM tone
     * per document (REAL bytes — [[graft.ops.Multimodal.demoTone]]; ids

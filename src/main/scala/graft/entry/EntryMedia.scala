@@ -259,7 +259,7 @@ private[graft] trait EntryMedia extends EntryContext {
     //      marker-last (streaming/AudioIngest — ImageIngest's q282
     //      shape in the landmark domain). Result = drain 2's pairs:
     //      odd batch × even standing + odd-internal evidence.
-    "q297_audio_ingest" -> ((s, dir) => audioIngestPairs(s, dir)),
+    "q297_audio_ingest" -> ((s, dir) => mediaIngestPairs(s, dir, "audio")),
 
 
     // ---- north-star: streaming video near-dup gating end-to-end —
@@ -270,7 +270,7 @@ private[graft] trait EntryMedia extends EntryContext {
     //      (streaming/VideoIngest — the q282/q297 shape in the frame
     //      domain; the store extends ImageIngest's keyed by
     //      (asset, frame_idx)). Result = drain 2's pairs.
-    "q298_video_ingest" -> ((s, dir) => videoIngestPairs(s, dir)),
+    "q298_video_ingest" -> ((s, dir) => mediaIngestPairs(s, dir, "video")),
 
 
     // ---- north-star: CROSS-MODAL duplicate clusters — the fusion
@@ -319,7 +319,7 @@ private[graft] trait EntryMedia extends EntryContext {
     //      Result = drain 2's verified Hamming pairs; the oracle
     //      replays decode→hash from the pixel formula plus the same
     //      banding with the odd-side-required candidate rule.
-    "q282_image_ingest" -> ((s, dir) => imageIngestPairs(s, dir)),
+    "q282_image_ingest" -> ((s, dir) => mediaIngestPairs(s, dir, "image")),
 
 
     // ---- north-star: video perceptual hashes over REAL Y4M frame

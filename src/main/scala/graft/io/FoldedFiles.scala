@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * The durable folded-files record shared by the streaming maintainers
- * ([[graft.streaming.SearchIngest]], [[graft.streaming.ImageIngest]],
- * [[graft.streaming.GraphIngest]]): an append-only silver store's
+ * ([[graft.streaming.SearchIngest]], [[graft.streaming.GraphIngest]],
+ * and the image, video and audio ingest of
+ * [[graft.streaming.MediaIngest]]): an append-only silver store's
  * drain batch is the set of data FILES not yet folded into the
  * downstream index, judged against a [[Commits]]-versioned `(file)`
  * table — so every drain reads only new files (O(drain), never an

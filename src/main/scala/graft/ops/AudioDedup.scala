@@ -93,8 +93,8 @@ object AudioDedup {
     out
   }
 
-  /** One payload's landmark rows (t, fp) — the shared kernel of both
-    * [[fingerprints]] variants; undecodable payloads yield nothing. */
+  /** One payload's landmark rows (t, fp); undecodable payloads yield
+    * nothing. */
   private def landmarksOf(
       payload: Array[Byte],
       frameLen: Int,
@@ -114,7 +114,8 @@ object AudioDedup {
   /**
    * Per-payload landmark fingerprints: (idCol, t, fp) — one row per
    * (anchor frame, fanout offset), undecodable payloads drop (the
-   * per-row corrupt-blob contract of [[Multimodal.pcmSamples]]).
+   * per-row corrupt-blob contract of [[Multimodal.pcmSamples]]); the
+   * id keeps its input type ([[Multimodal.payloadRows]]).
    */
   def fingerprints(
       media: DataFrame,
@@ -122,38 +123,9 @@ object AudioDedup {
       payloadCol: String,
       frameLen: Int = 32,
       bins: Int = 8,
-      fanout: Int = 3): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        landmarksOf(payload, frameLen, bins, fanout)
-          .map { case (t, fp) => (id, t, fp) }
-      }
-      .toDF(idCol, "t", "fp")
-  }
-
-  /** [[fingerprints]] with the id kept as a STRING (the WARC-ingestion
-    * path's record_id identity — [[ImageDedup.perceptualHashesStr]]'s
-    * convention): same kernel, id verbatim. */
-  def fingerprintsStr(
-      media: DataFrame,
-      idCol: String,
-      payloadCol: String,
-      frameLen: Int = 32,
-      bins: Int = 8,
-      fanout: Int = 3): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("string"), col(payloadCol))
-      .as[(String, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        landmarksOf(payload, frameLen, bins, fanout)
-          .map { case (t, fp) => (id, t, fp) }
-      }
-      .toDF(idCol, "t", "fp")
-  }
+      fanout: Int = 3): DataFrame =
+    Multimodal.payloadRows(media, idCol, payloadCol, "t", "fp")(
+      landmarksOf(_, frameLen, bins, fanout))
 
   /**
    * Shared-landmark near-dup pairs: candidates from the inverted

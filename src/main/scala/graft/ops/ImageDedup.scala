@@ -75,47 +75,16 @@ object ImageDedup {
    * DECODABLE payload (corrupt blobs drop — the per-row contract of
    * [[Multimodal.lumaGrid]]; a corpus decode job must never die on one
    * bad byte stream). One narrow pass: payload bytes enter, two longs
-   * leave.
+   * leave; the id keeps its input type ([[Multimodal.payloadRows]]).
    */
   def perceptualHashes(
       media: DataFrame,
       idCol: String,
       payloadCol: String,
       gw: Int = 9,
-      gh: Int = 8): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        Multimodal.lumaGrid(payload, gw, gh).map { grid =>
-          val (a, d) = hashesOfGrid(grid, gw)
-          (id, a, d)
-        }
-      }
-      .toDF(idCol, "ahash", "dhash")
-  }
-
-  /** [[perceptualHashes]] for STRING asset ids (WARC record URNs — the
-    * ingestion path's identity): same kernel, id kept verbatim. */
-  def perceptualHashesStr(
-      media: DataFrame,
-      idCol: String,
-      payloadCol: String,
-      gw: Int = 9,
-      gh: Int = 8): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("string"), col(payloadCol))
-      .as[(String, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        Multimodal.lumaGrid(payload, gw, gh).map { grid =>
-          val (a, d) = hashesOfGrid(grid, gw)
-          (id, a, d)
-        }
-      }
-      .toDF(idCol, "ahash", "dhash")
-  }
+      gh: Int = 8): DataFrame =
+    Multimodal.payloadRows(media, idCol, payloadCol, "ahash", "dhash")(
+      payload => Multimodal.lumaGrid(payload, gw, gh).map(hashesOfGrid(_, gw)))
 
   /** The hash split into `bands` 16-bit LSH keys (arithmetic shift +
     * mask — sign-safe, engine-portable). */
@@ -202,7 +171,7 @@ object ImageDedup {
           .as("bb"))
       .select(col(idCol), col("__h"),
         col("bb.band").as("band"), col("bb.v").as("v"))
-    // NOT checkpointed here: both callers (ImageIngest, the q-entry
+    // NOT checkpointed here: both callers (MediaIngest, the q-entry
     // fixtures) hand in already-materialized hash frames, so the fence
     // pass below re-bands a cheap checkpoint — while checkpointing the
     // standing side HERE would materialize a store-sized frame per

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Multimodal-column plumbing (north-star): treat image/audio/video
@@ -718,6 +719,31 @@ object Multimodal {
         Some(grid)
       }
     } catch { case _: Exception => None }
+
+  /**
+   * The one narrow decode pass behind the media hash kernels
+   * ([[ImageDedup.perceptualHashes]], [[VideoDedup.frameHashes]],
+   * [[AudioDedup.fingerprints]]): `kernel` maps a payload to its
+   * (a, b) long rows — none for an undecodable blob — and every row
+   * carries its id verbatim, typed as the INPUT id column (numeric
+   * fixture ids and WARC record URNs share one kernel). Output
+   * (idCol, aCol, bCol); the payload never survives the pass.
+   */
+  def payloadRows(
+      media: DataFrame,
+      idCol: String,
+      payloadCol: String,
+      aCol: String,
+      bCol: String)(kernel: Array[Byte] => Iterable[(Long, Long)]): DataFrame = {
+    val in = media.select(col(idCol), col(payloadCol))
+    val out = StructType(Seq(in.schema.head,
+      StructField(aCol, LongType, nullable = false),
+      StructField(bCol, LongType, nullable = false)))
+    in.flatMap { r =>
+      val id = r.get(0)
+      kernel(r.getAs[Array[Byte]](1)).map { case (a, b) => Row(id, a, b) }
+    }(Encoders.row(out))
+  }
 
   /** Build a demo media table from any (id, text) source — payload =
     * UTF-8 bytes. Stands in for reading real blobs. */

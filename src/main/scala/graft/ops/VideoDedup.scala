@@ -33,7 +33,8 @@ object VideoDedup {
    * Per-sampled-frame perceptual hashes: (idCol, frame_idx, ahash),
    * one row per decodable sampled frame (corrupt/truncated payloads
    * drop whole — the per-row contract of
-   * [[Multimodal.y4mFrameGrids]]).
+   * [[Multimodal.y4mFrameGrids]]); the id keeps its input type
+   * ([[Multimodal.payloadRows]]).
    */
   def frameHashes(
       media: DataFrame,
@@ -41,44 +42,11 @@ object VideoDedup {
       payloadCol: String,
       gw: Int = 9,
       gh: Int = 8,
-      everyN: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        Multimodal.y4mFrameGrids(payload, gw, gh, everyN)
-          .getOrElse(Seq.empty)
-          .map { case (t, grid) =>
-            (id, t.toLong, ImageDedup.hashesOfGrid(grid, gw)._1)
-          }
-      }
-      .toDF(idCol, "frame_idx", "ahash")
-  }
-
-  /** [[frameHashes]] with the id kept as a STRING (the WARC-ingestion
-    * path's record_id identity — [[ImageDedup.perceptualHashesStr]]'s
-    * convention): same kernel, id verbatim. */
-  def frameHashesStr(
-      media: DataFrame,
-      idCol: String,
-      payloadCol: String,
-      gw: Int = 9,
-      gh: Int = 8,
-      everyN: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("string"), col(payloadCol))
-      .as[(String, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        Multimodal.y4mFrameGrids(payload, gw, gh, everyN)
-          .getOrElse(Seq.empty)
-          .map { case (t, grid) =>
-            (id, t.toLong, ImageDedup.hashesOfGrid(grid, gw)._1)
-          }
-      }
-      .toDF(idCol, "frame_idx", "ahash")
-  }
+      everyN: Int = 2): DataFrame =
+    Multimodal.payloadRows(media, idCol, payloadCol, "frame_idx", "ahash")(
+      payload => Multimodal.y4mFrameGrids(payload, gw, gh, everyN)
+        .getOrElse(Seq.empty)
+        .map { case (t, grid) => (t.toLong, ImageDedup.hashesOfGrid(grid, gw)._1) })
 
   /**
    * Aligned-frame near-dup pairs over [[frameHashes]] output:
@@ -182,7 +150,7 @@ object VideoDedup {
       .select(col(idCol), col("frame_idx"), col("__h"),
         col("bb.band").as("band"), col("bb.v").as("v"))
     // NOT checkpointed here: the caller hands in materialized hash
-    // frames (VideoIngest checkpoints the decode), so the fence pass
+    // frames (MediaIngest checkpoints the decode), so the fence pass
     // re-bands cheap checkpoints — checkpointing the standing side
     // HERE would materialize a store-sized frame per drain
     val probeSide = banded(batch)

@@ -59,21 +59,8 @@ object CorpusIngest {
       kind: graft.ops.Dedup.HashKind = graft.ops.Dedup.Md5,
       compactTo: Option[Int] = None): DataFrame =
     graft.io.Commits.withClaim(spark, indexDir) {
-    IngestStream.drainOnce(
-      spark, landingDir, schema,
-      requiredCols = Seq(idCol, textCol),
-      normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
-    // a first drain with nothing landed commits no batch — the sink dir
-    // is missing entirely or holds only _spark_metadata. Read with the
-    // ENFORCED schema (inference has no files to look at), and treat a
-    // missing dir as "no docs yet", not an error.
-    val silverPath = new Path(silverDir)
-    val sfs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val silver =
-      if (sfs.exists(silverPath)) spark.read.schema(schema).parquet(silverDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val silver = IngestStream.drainToSilver(spark, landingDir, schema,
+      Seq(idCol, textCol), silverDir, checkpointDir)
 
     if (!graft.io.Commits.hasMeta(spark, indexDir))
       SignatureIndex.build(
@@ -201,17 +188,8 @@ object CorpusIngest {
       iters: Int = 2): DataFrame =
     graft.io.Commits.withClaim(spark, indexDir) {
     import org.apache.spark.sql.functions._
-    IngestStream.drainOnce(
-      spark, landingDir, schema,
-      requiredCols = Seq(idCol, vecCol),
-      normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
-    val silverPath = new Path(silverDir)
-    val sfs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val silver =
-      if (sfs.exists(silverPath)) spark.read.schema(schema).parquet(silverDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val silver = IngestStream.drainToSilver(spark, landingDir, schema,
+      Seq(idCol, vecCol), silverDir, checkpointDir)
     def decisions(delta: DataFrame, dups: DataFrame): DataFrame = delta
       .select(col(idCol))
       .join(dups, Seq(idCol), "left")
@@ -258,17 +236,8 @@ object CorpusIngest {
       indexDir: String,
       n: Int,
       kind: graft.ops.Dedup.HashKind): DataFrame = {
-    IngestStream.drainOnce(
-      spark, landingDir, schema,
-      requiredCols = Seq(idCol, textCol),
-      normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
-    val silverPath = new Path(silverDir)
-    val sfs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val silver =
-      if (sfs.exists(silverPath)) spark.read.schema(schema).parquet(silverDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val silver = IngestStream.drainToSilver(spark, landingDir, schema,
+      Seq(idCol, textCol), silverDir, checkpointDir)
 
     if (!graft.io.Commits.hasMeta(spark, indexDir))
       WindowIndex.build(silver.limit(0), textCol, idCol, indexDir, n, kind)
@@ -314,17 +283,8 @@ object CorpusIngest {
       checkpointDir: String,
       stateDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    IngestStream.drainOnce(
-      spark, landingDir, schema,
-      requiredCols = Seq(keyCol, tsCol),
-      normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
-    val silverPath = new Path(silverDir)
-    val sfs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val silver =
-      if (sfs.exists(silverPath)) spark.read.schema(schema).parquet(silverDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val silver = IngestStream.drainToSilver(spark, landingDir, schema,
+      Seq(keyCol, tsCol), silverDir, checkpointDir)
 
     val readRun = graft.io.Layers.latestSuccessfulRun(spark, stateDir)
     val (state, ledger) = readRun match {
@@ -400,24 +360,17 @@ object CorpusIngest {
       checkpointDir: String,
       stateDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    IngestStream.drainOnce(
-      spark, landingDir, schema,
-      requiredCols = Seq(keyCol, tsCol, opCol),
-      normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
     // CDC reads RELAX the declared nullability: delete rows lawfully
     // carry null attributes, but a caller schema declaring attrs
     // non-null (the bare-type default of the `?` spec convention)
     // would make every codegen consumer skip the null check — an
     // enforced read never VALIDATES non-nullness, it only promises it
     // to the optimizer, and here the promise is structurally false.
-    val readSchema = StructType(schema.fields.map(_.copy(nullable = true)))
-    val silverPath = new Path(silverDir)
-    val sfs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val silver =
-      if (sfs.exists(silverPath)) spark.read.schema(readSchema).parquet(silverDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
+    // (The file-stream side of the drain is nullable regardless:
+    // `spark.sql.streaming.fileSource.schema.forceNullable`.)
+    val silver = IngestStream.drainToSilver(spark, landingDir,
+      StructType(schema.fields.map(_.copy(nullable = true))),
+      Seq(keyCol, tsCol, opCol), silverDir, checkpointDir)
 
     val readRun = graft.io.Layers.latestSuccessfulRun(spark, stateDir)
     val (state, hw) = readRun match {
@@ -493,17 +446,8 @@ object CorpusIngest {
     val schema = StructType(Seq(
       StructField("host", StringType, nullable = true),
       StructField("xml", StringType, nullable = true)))
-    IngestStream.drainOnce(
-      spark, landingDir, schema,
-      requiredCols = Seq("host", "xml"),
-      normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
-    val silverPath = new Path(silverDir)
-    val sfs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val silver =
-      if (sfs.exists(silverPath)) spark.read.schema(schema).parquet(silverDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val silver = IngestStream.drainToSilver(spark, landingDir, schema,
+      Seq("host", "xml"), silverDir, checkpointDir)
 
     val readRun = graft.io.Layers.latestSuccessfulRun(spark, frontierDir)
     val stored = readRun match {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -67,64 +65,60 @@ object GraphIngest {
     IngestStream.drainOnce(spark, landingDir, schema,
       requiredCols = Seq(idCol, vecCol), normalizeCols = Nil,
       outDir = silverDir, checkpointDir = checkpointDir)
-    val silverPath = new Path(silverDir)
-    val sfs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sfs.exists(silverPath)) 0L
+    // a missing silver dir has no fresh files
+    val (fresh, commitFolded) =
+      FoldedFiles.fresh(spark, silverDir, s"$indexDir/folded")
+    if (fresh.isEmpty) 0L
     else {
-      val (fresh, commitFolded) =
-        FoldedFiles.fresh(spark, silverDir, s"$indexDir/folded")
-      if (fresh.isEmpty) 0L
-      else {
-        val batch = spark.read.schema(schema).parquet(fresh: _*)
-          .select(col(idCol), col(vecCol))
-        val n =
-          if (!Commits.hasMeta(spark, indexDir)) {
-            // bootstrap: the first data drain trains the graph (build
-            // resets only its own parts — the held claim and the
-            // folded record committed below survive it)
-            val cnt = batch.count()
-            // the α policy rides the bootstrap into the index meta;
-            // every later drain's ingestLocked reads it from there and
-            // RobustPrunes its merges (GraphIndex.Meta)
-            GraphIndex.build(batch, idCol, vecCol, indexDir, dims, k,
-              planesPerBand, bands, maxBucketSize, nEntries, beamWidth,
-              maxSteps, candidateK, alphaNum, alphaDen)
-            cnt
-          } else {
-            // the α policy is the STORE's identity (committed at
-            // bootstrap): a non-bootstrap drain passing a DIFFERENT
-            // explicit policy is a misconfiguration that would
-            // otherwise be silently ignored — fail loudly NAMING the
-            // drifting field. Each parameter carries its own
-            // "use the committed policy" sentinel (alphaNum = 0,
-            // candidateK = 0), so a drain passing the correct alpha
-            // with candidateK left at the default never trips on a
-            // candidate_k it didn't specify (and the drain-local k,
-            // which is ignored post-bootstrap, is never consulted)
-            val m = GraphIndex.meta(spark, indexDir)
-            val drift = Seq(
-              (alphaNum != 0 &&
-                (alphaNum != m.alphaNum || alphaDen != m.alphaDen)) ->
-                s"alpha=$alphaNum/$alphaDen vs committed ${m.alphaNum}/${m.alphaDen}",
-              (candidateK > 0 && math.max(candidateK, m.k) != m.candidateK) ->
-                (s"candidate_k=$candidateK (normalized " +
-                  s"${math.max(candidateK, m.k)}) vs committed ${m.candidateK}"))
-              .collect { case (true, msg) => msg }
-            require(drift.isEmpty,
-              s"graph-maintainer α-policy drift at $indexDir: " +
-                s"${drift.mkString("; ")} — rebuild to change the policy")
-            // corpus for the searches = standing silver ∪ batch; the
-            // beam's isin point lookups prune this scan per round
-            GraphIndex.ingestLocked(spark, indexDir,
-              spark.read.schema(schema).parquet(silverDir)
-                .select(col(idCol), col(vecCol)),
-              batch, maxBatchLink)
-          }
-        // folded record LAST: a crash before this line re-reads the
-        // same files next drain; the graph ledger anti-join heals it
-        commitFolded()
-        n
-      }
+      val batch = spark.read.schema(schema).parquet(fresh: _*)
+        .select(col(idCol), col(vecCol))
+      val n =
+        if (!Commits.hasMeta(spark, indexDir)) {
+          // bootstrap: the first data drain trains the graph (build
+          // resets only its own parts — the held claim and the
+          // folded record committed below survive it)
+          val cnt = batch.count()
+          // the α policy rides the bootstrap into the index meta;
+          // every later drain's ingestLocked reads it from there and
+          // RobustPrunes its merges (GraphIndex.Meta)
+          GraphIndex.build(batch, idCol, vecCol, indexDir, dims, k,
+            planesPerBand, bands, maxBucketSize, nEntries, beamWidth,
+            maxSteps, candidateK, alphaNum, alphaDen)
+          cnt
+        } else {
+          // the α policy is the STORE's identity (committed at
+          // bootstrap): a non-bootstrap drain passing a DIFFERENT
+          // explicit policy is a misconfiguration that would
+          // otherwise be silently ignored — fail loudly NAMING the
+          // drifting field. Each parameter carries its own
+          // "use the committed policy" sentinel (alphaNum = 0,
+          // candidateK = 0), so a drain passing the correct alpha
+          // with candidateK left at the default never trips on a
+          // candidate_k it didn't specify (and the drain-local k,
+          // which is ignored post-bootstrap, is never consulted)
+          val m = GraphIndex.meta(spark, indexDir)
+          val drift = Seq(
+            (alphaNum != 0 &&
+              (alphaNum != m.alphaNum || alphaDen != m.alphaDen)) ->
+              s"alpha=$alphaNum/$alphaDen vs committed ${m.alphaNum}/${m.alphaDen}",
+            (candidateK > 0 && math.max(candidateK, m.k) != m.candidateK) ->
+              (s"candidate_k=$candidateK (normalized " +
+                s"${math.max(candidateK, m.k)}) vs committed ${m.candidateK}"))
+            .collect { case (true, msg) => msg }
+          require(drift.isEmpty,
+            s"graph-maintainer α-policy drift at $indexDir: " +
+              s"${drift.mkString("; ")} — rebuild to change the policy")
+          // corpus for the searches = standing silver ∪ batch; the
+          // beam's isin point lookups prune this scan per round
+          GraphIndex.ingestLocked(spark, indexDir,
+            spark.read.schema(schema).parquet(silverDir)
+              .select(col(idCol), col(vecCol)),
+            batch, maxBatchLink)
+        }
+      // folded record LAST: a crash before this line re-reads the
+      // same files next drain; the graph ledger anti-join heals it
+      commitFolded()
+      n
     }
   }
 }

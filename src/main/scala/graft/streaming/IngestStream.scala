@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -78,5 +80,26 @@ object IngestStream {
     val q = (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .start()
     q.awaitTermination()
+  }
+
+  /** [[drainOnce]] (no normalization), then the silver layer read with
+    * the ENFORCED `schema`: a first drain with nothing landed commits
+    * no batch — the sink dir is missing entirely or holds only
+    * `_spark_metadata`, and inference has no files to look at. A
+    * missing dir reads as "no rows yet", not an error. Filesystem
+    * cost beyond the drain: one `exists`. */
+  def drainToSilver(
+      spark: SparkSession,
+      srcDir: String,
+      schema: StructType,
+      requiredCols: Seq[String],
+      silverDir: String,
+      checkpointDir: String): DataFrame = {
+    drainOnce(spark, srcDir, schema, requiredCols, normalizeCols = Nil,
+      outDir = silverDir, checkpointDir = checkpointDir)
+    val silverPath = new Path(silverDir)
+    val fs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(silverPath)) spark.read.schema(schema).parquet(silverDir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /**
- * Durable per-batch PAIR REPORTS for the media ingest maintainers
- * ([[ImageIngest]], [[AudioIngest]], [[VideoIngest]]) — closing the
+ * Durable per-batch PAIR REPORTS for the media ingest gate
+ * ([[MediaIngest]], which [[ImageIngest]], [[AudioIngest]] and
+ * [[VideoIngest]] drain through) — closing the
  * crash window between a batch's index marker and its folded-record
  * commit (`/root/reference` has no streaming at all — north-star
  * crash armor, the [[graft.io.Commits]] family).

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{AudioDedup, Multimodal}
@@ -83,6 +84,16 @@ class AudioDedupSpec extends AnyFunSuite {
       (7L, 0L, 239L), // t=0→2: (7·16+7)·2+1
       (7L, 1L, 430L)  // t=1→2: (13·16+7)·2+0
     ))
+    // the id column keeps its input type: a string id comes back as a
+    // string with the same landmarks
+    assert(AudioDedup.fingerprints(media, "media_id", "payload")
+      .schema("media_id").dataType == LongType)
+    val strFps = AudioDedup.fingerprints(
+        Seq(("7", pay)).toDF("media_id", "payload"), "media_id", "payload",
+        frameLen = 4, bins = 2, fanout = 2)
+    assert(strFps.schema("media_id").dataType == StringType)
+    assert(strFps.collect()
+      .map(r => (r.getString(0).toLong, r.getLong(1), r.getLong(2))).toSet == got)
   }
 
   test("sharedFingerprintPairs: cluster mates share landmarks, strangers don't") {

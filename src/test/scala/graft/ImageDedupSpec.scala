@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{ImageDedup, Multimodal}
@@ -77,6 +78,16 @@ class ImageDedupSpec extends AnyFunSuite {
     def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
     assert(ham(out(1L)._1, out(2L)._1) <= 10)
     assert(ham(out(1L)._1, out(51L)._1) > 10)
+    // the id column keeps its input type: string ids (WARC record
+    // URNs) come back as strings with the same hashes
+    assert(ImageDedup.perceptualHashes(media, "media_id", "payload")
+      .schema("media_id").dataType == LongType)
+    val strOut = ImageDedup.perceptualHashes(
+      media.withColumn("media_id", col("media_id").cast("string")),
+      "media_id", "payload")
+    assert(strOut.schema("media_id").dataType == StringType)
+    assert(strOut.collect()
+      .map(r => r.getString(0).toLong -> (r.getLong(1), r.getLong(2))).toMap == out)
   }
 
   test("hammingNearDups: pigeonhole recall, verify filter, no self/dup pairs") {

@@ -174,6 +174,30 @@ class ImageIngestSpec extends AnyFunSuite {
     assert(drain().count() == 0, "and the fold must have advanced")
   }
 
+  test("an image carried twice by each of two drains keeps both batches") {
+    val base = TestSpark.tmpDir("image_ingest_twice")
+    def drain() = ImageIngest.maintainImages(
+      spark, s"$base/landing", s"$base/silver", s"$base/ledger",
+      s"$base/index", maxHamming = 6)
+    // one silver file holding the same record twice (a re-delivered
+    // archive): a tag over the raw rows XORs the id hash with itself,
+    // so both drains would land on b2x0 and the second's overwrite
+    // would delete the first image from the store
+    def appendTwice(i: Long): Unit =
+      Seq.fill(2)((urn(i), s"http://img.example/$i", "2026-01-01T00:00:00Z",
+          "image/png", Multimodal.demoPng(i, 36, 32), "redelivered"))
+        .toDF("record_id", "target_uri", "warc_date", "content_type",
+          "payload", "source_file")
+        .coalesce(1).write.mode("append").parquet(s"$base/silver")
+    appendTwice(7L)
+    drain()
+    appendTwice(8L)
+    drain()
+    assert(ImageIngest.readHashes(spark, s"$base/index")
+      .select("media_id").distinct().collect().map(_.getString(0)).toSet ==
+      Set(urn(7), urn(8)))
+  }
+
   test("hammingProbe: batch-internal + batch×corpus, never corpus×corpus") {
     val corpus = Seq(("c1", 0x1111222233334444L), ("c2", 0x1111222233334445L))
       .toDF("id", "h") // corpus pair (c1, c2) differs by 1 bit — but

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{ImageDedup, Multimodal, VideoDedup}
@@ -79,6 +80,16 @@ class VideoDedupSpec extends AnyFunSuite {
     val grid = Multimodal.y4mFrameGrids(
       Multimodal.demoY4m(7L, 36, 32), 9, 8).get.find(_._1 == 2).get._2
     assert(h7 == ImageDedup.hashesOfGrid(grid, 9)._1)
+    // the id column keeps its input type: string ids come back as
+    // strings with the same frame hashes
+    assert(hashes.schema("media_id").dataType == LongType)
+    val strHashes = VideoDedup.frameHashes(
+      media.withColumn("media_id", col("media_id").cast("string")),
+      "media_id", "payload")
+    assert(strHashes.schema("media_id").dataType == StringType)
+    assert(strHashes.collect()
+        .map(r => (r.getString(0).toLong, r.getLong(1), r.getLong(2))).toSet ==
+      hashes.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
 
     val pairs = VideoDedup.videoNearDups(hashes, "media_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
