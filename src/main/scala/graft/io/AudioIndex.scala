@@ -61,16 +61,6 @@ object AudioIndex {
   private def livePath(spark: SparkSession, dir: String): String =
     Commits.resolve(fsOf(spark, dir), fpsDirs(dir)).toString
 
-  /** Rewrite the fps store as `rewritten` of the live one, via
-    * [[Commits.swap]] — the shared tail of [[delete]] and [[compact]]
-    * (claim held, store healed by the caller). */
-  private def rewrite(spark: SparkSession, dir: String, op: String)(
-      rewritten: DataFrame => DataFrame): Unit =
-    Commits.swap(fsOf(spark, dir), fpsDirs(dir), op) { stage =>
-      rewritten(spark.read.parquet(fpsPath(dir)))
-        .write.mode("overwrite").parquet(stage.toString)
-    }
-
   /** Build the index from scratch: decode + fingerprint every payload
     * in `media` ONCE, write the landmark table, then commit the meta
     * file. Overwrites any previous index at `dir`. */
@@ -204,7 +194,7 @@ object AudioIndex {
     Commits.withClaim(spark, dir) {
       ensureLive(spark, dir)
       val m = meta(spark, dir)
-      rewrite(spark, dir, "delete")(_.join(
+      Commits.rewrite(spark, fpsDirs(dir), "delete")(_.join(
         broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
         Seq(m.idCol), "left_anti"))
     }
@@ -217,40 +207,18 @@ object AudioIndex {
   def compact(spark: SparkSession, dir: String, numFiles: Int): Unit =
     Commits.withClaim(spark, dir) {
       ensureLive(spark, dir)
-      rewrite(spark, dir, "compact")(
+      Commits.rewrite(spark, fpsDirs(dir), "compact")(
         _.repartitionByRange(numFiles, col("fp")).sortWithinPartitions("fp"))
     }
 
   /** [[compact]] only when the store has fragmented past
-    * `2 × targetFiles` — idempotent steady-state no-op (one listing).
-    * Returns true when a compaction ran. */
+    * `2 × targetFiles` ([[Commits.fragmented]]) — idempotent
+    * steady-state no-op (one listing). Returns true when a compaction
+    * ran. */
   def compactIfFragmented(
       spark: SparkSession, dir: String, targetFiles: Int): Boolean = {
-    // a missing STORE ROOT is a mistyped path or a never-built store —
-    // fail loudly instead of no-opping forever (the silent-no-op trap:
-    // a misconfigured maintenance loop would gauge "not fragmented"
-    // on every tick while the real store fragments elsewhere)
-    val root = new Path(dir)
-    require(root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(root),
-      s"compactIfFragmented: no audio index at $dir — mistyped path or " +
-        "never-built store (build it before scheduling maintenance)")
-    // claim-free read of the fragmentation gauge (the listing must not
-    // heal-rename under a live writer); compact() itself heals under
-    // its own claim before rewriting. The gauge is guarded: a
-    // concurrent delete/compact renaming the live dir between
-    // livePath() and the listing reads as "not fragmented" (retried
-    // once — the post-swap listing is the real gauge) instead of a
-    // raw FileNotFoundException.
-    def gauge(): Option[Int] =
-      try {
-        val live = new Path(livePath(spark, dir))
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(live)) None
-        else Some(fs.listStatus(live)
-          .count(_.getPath.getName.endsWith(".parquet")))
-      } catch { case _: java.io.FileNotFoundException => None }
-    val fragmented = gauge().orElse(gauge()).exists(_ > 2 * targetFiles)
+    val fragmented = Commits.fragmented(
+      spark, dir, "audio", fpsDirs(dir), targetFiles)(identity)
     if (fragmented) compact(spark, dir, targetFiles)
     fragmented
   }

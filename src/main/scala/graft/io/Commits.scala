@@ -56,10 +56,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    promote, so every crash point leaves a complete copy on disk;
  *  - **heal / resolve** ([[heal]], [[resolve]]): the only window that
  *    leaves the live dir missing is between those renames, and then
- *    `_prev` is the full pre-rewrite store. `heal` (writers, and the
- *    indexes whose readers heal) renames it back and drops the
- *    half-written stage; `resolve` (claim-free readers) reads `_prev`
- *    in place and leaves the store untouched;
+ *    `_prev` is the full pre-rewrite store. Every claim-free reader
+ *    `resolve`s: it reads `_prev` in place and never renames or
+ *    deletes (a reader healing between a live swap's renames would
+ *    delete the writer's stage under it). Every writer `heal`s before
+ *    its first read of the store: `_prev` is renamed back and the
+ *    half-written stage dropped;
+ *  - **compaction gauge** ([[fragmented]]): the visible parquet files
+ *    of the resolved store against `2 × targetFiles` — the one
+ *    read-only trigger of every `compactIfFragmented`;
  *  - **committed batches** ([[commitBatch]], [[committedBatches]]):
  *    appends land under `batch=<tag>` and are live only once their
  *    `_graft_committed` marker exists — written LAST, so a crashed
@@ -78,7 +83,7 @@ object Commits {
   final class ConcurrentWriteException(msg: String)
     extends RuntimeException(msg)
 
-  private def hidden(name: String): Boolean =
+  private[io] def hidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
   /**
@@ -287,6 +292,57 @@ object Commits {
     * (claim-free readers must not race a live swap's renames). */
   def resolve(fs: FileSystem, d: SwapDirs): Path =
     if (!fs.exists(d.live) && fs.exists(d.prev)) d.prev else d.live
+
+  /** [[swap]] a flat parquet store for `rewritten` of its live
+    * contents — the rewrite tail of the takedown and compaction passes
+    * (claim held, store healed by the caller). */
+  def rewrite(spark: SparkSession, d: SwapDirs, op: String)(
+      rewritten: DataFrame => DataFrame): Unit =
+    swap(fsOf(spark, d.live), d, op) { stage =>
+      rewritten(spark.read.parquet(d.live.toString))
+        .write.mode("overwrite").parquet(stage.toString)
+    }
+
+  /** Visible `.parquet` files under `dir`, descending into visible
+    * subdirs only (hidden `_`/`.` dirs are commit scratch no reader
+    * sees). */
+  def parquetFiles(fs: FileSystem, dir: Path): Int =
+    fs.listStatus(dir).iterator.map { s =>
+      val name = s.getPath.getName
+      if (hidden(name)) 0
+      else if (s.isDirectory) parquetFiles(fs, s.getPath)
+      else if (name.endsWith(".parquet")) 1
+      else 0
+    }.sum
+
+  /**
+   * The compaction gauge of the swap store `d` of the `kind` index at
+   * `dir`: more than `2 × targetFiles` visible parquet files under
+   * `gauged` of the [[resolve]]d store. Read-only, so it runs without
+   * the claim; the compaction it triggers heals under its own.
+   *
+   * A missing store ROOT is a mistyped path or a never-built store and
+   * fails loudly (a maintenance loop would otherwise gauge "not
+   * fragmented" forever while the real store fragments elsewhere); an
+   * existing root without a store is not fragmented. A concurrent
+   * swap renaming the store between the resolve and the listing reads
+   * as not fragmented, retried once (the post-swap listing is the real
+   * gauge), instead of a raw `FileNotFoundException`.
+   */
+  def fragmented(spark: SparkSession, dir: String, kind: String, d: SwapDirs,
+      targetFiles: Int)(gauged: Path => Path): Boolean = {
+    val root = new Path(dir)
+    val fs = fsOf(spark, root)
+    require(fs.exists(root),
+      s"compactIfFragmented: no $kind index at $dir — mistyped path or " +
+        "never-built store (build it before scheduling maintenance)")
+    def count(): Option[Int] =
+      try {
+        val p = gauged(resolve(fs, d))
+        if (!fs.exists(p)) None else Some(parquetFiles(fs, p))
+      } catch { case _: java.io.FileNotFoundException => None }
+    count().orElse(count()).exists(_ > 2 * targetFiles)
+  }
 
   private val committedMarker = "_graft_committed"
 

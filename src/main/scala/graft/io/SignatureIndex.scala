@@ -64,19 +64,11 @@ object SignatureIndex {
   private def sigsPath(dir: String) = s"$dir/sigs"
   private def sigsDirs(dir: String) = Commits.SwapDirs(dir, "sigs", "compacting")
 
-  /** [[Commits.heal]] a crashed [[compact]]/[[delete]] swap. Called by
-    * every reader/writer entry point; no-op in the steady state. */
-  private def ensureLive(spark: SparkSession, dir: String): Unit =
+  /** [[Commits.heal]] a crashed [[compact]]/[[delete]] swap. MUTATING
+    * — writers only, before their first read of the store (readers
+    * resolve); no-op in the steady state. */
+  private[graft] def ensureLive(spark: SparkSession, dir: String): Unit =
     Commits.heal(Commits.fsOf(spark, new Path(dir)), sigsDirs(dir))
-
-  /** Rewrite the signature store as `rewritten` of the live one, via
-    * [[Commits.swap]] — the shared tail of [[compact]] and [[delete]]. */
-  private def rewrite(spark: SparkSession, dir: String, op: String)(
-      rewritten: DataFrame => DataFrame): Unit =
-    Commits.swap(Commits.fsOf(spark, new Path(dir)), sigsDirs(dir), op) { stage =>
-      rewritten(spark.read.parquet(sigsPath(dir)))
-        .write.mode("overwrite").parquet(stage.toString)
-    }
 
   /** Build the index from scratch: hash every doc in `docs`, write the
     * signature table, then commit the meta file. Overwrites any
@@ -111,11 +103,11 @@ object SignatureIndex {
       j.num("shingle_words"), kindOf(j.str("kind")))
   }
 
-  /** The stored signature table (meta.idCol, sig). */
-  def signatures(spark: SparkSession, dir: String): DataFrame = {
-    ensureLive(spark, dir)
-    spark.read.parquet(sigsPath(dir))
-  }
+  /** The stored signature table (meta.idCol, sig). Read-only — a
+    * crashed rewrite window resolves to `sigs_prev` ([[Commits.resolve]]). */
+  def signatures(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(
+      Commits.resolve(Commits.fsOf(spark, new Path(dir)), sigsDirs(dir)).toString)
 
   /**
    * Rewrite the signature store as `numFiles` id-range-clustered files
@@ -126,12 +118,13 @@ object SignatureIndex {
    * file a tight min/max id footer, so point lookups prune files.
    *
    * Crash-safe within the single-writer contract: [[Commits.swap]],
-   * healed by [[ensureLive]] on the next touch.
+   * healed by the next writer ([[ensureLive]]); readers resolve the
+   * window without touching it.
    */
   def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
     ensureLive(spark, dir)
     val m = meta(spark, dir)
-    rewrite(spark, dir, "compact")(
+    Commits.rewrite(spark, sigsDirs(dir), "compact")(
       _.repartitionByRange(numFiles, col(m.idCol)).sortWithinPartitions(m.idCol))
   }
 
@@ -153,7 +146,7 @@ object SignatureIndex {
     val spark = deletedIds.sparkSession
     ensureLive(spark, dir)
     val m = meta(spark, dir)
-    rewrite(spark, dir, "delete")(_.join(
+    Commits.rewrite(spark, sigsDirs(dir), "delete")(_.join(
       broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
       Seq(m.idCol), "left_anti"))
   }
@@ -179,30 +172,12 @@ object SignatureIndex {
   /** [[compact]] only when the store has fragmented past
     * `2 × targetFiles` — the idempotent form a scheduled maintenance
     * loop calls after every ingest: cheap no-op in the steady state
-    * (one driver-side listing), a full rewrite only when appends have
-    * actually accreted. Returns true when a compaction ran. */
+    * (the read-only [[Commits.fragmented]] listing), a full rewrite
+    * only when appends have actually accreted. Returns true when a
+    * compaction ran. */
   def compactIfFragmented(spark: SparkSession, dir: String, targetFiles: Int): Boolean = {
-    // a missing STORE ROOT is a mistyped path or a never-built store —
-    // fail loudly instead of no-opping forever on every maintenance
-    // tick (the AudioIndex convention)
-    val rootP = new Path(dir)
-    require(rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(rootP),
-      s"compactIfFragmented: no signature index at $dir — mistyped path " +
-        "or never-built store (build it before scheduling maintenance)")
-    ensureLive(spark, dir)
-    // guarded gauge: a concurrent delete/compact renaming sigs between
-    // the exists check and the listing reads as "not fragmented"
-    // (retried once) instead of a raw FileNotFoundException
-    def gauge(): Option[Int] =
-      try {
-        val live = new Path(sigsPath(dir))
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(live)) None
-        else Some(fs.listStatus(live)
-          .count(_.getPath.getName.endsWith(".parquet")))
-      } catch { case _: java.io.FileNotFoundException => None }
-    val fragmented = gauge().orElse(gauge()).exists(_ > 2 * targetFiles)
+    val fragmented = Commits.fragmented(
+      spark, dir, "signature", sigsDirs(dir), targetFiles)(identity)
     if (fragmented) compact(spark, dir, targetFiles)
     fragmented
   }

@@ -73,13 +73,20 @@ object VectorIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** [[Commits.heal]] the lists dir (crashed [[delete]]/[[compact]])
-    * and the centroids dir (crashed [[maintainLists]] quantizer swap);
-    * no-op in steady state. */
-  private def ensureLive(spark: SparkSession, dir: String): Unit = {
+    * and the centroids dir (crashed [[maintainLists]] quantizer swap).
+    * MUTATING — writers only, under the store claim, before their first
+    * read (readers resolve); no-op in steady state. */
+  private[graft] def ensureLive(spark: SparkSession, dir: String): Unit = {
     val f = fs(spark, new Path(dir))
     Commits.heal(f, listsDirs(dir))
     Commits.heal(f, centsDirs(dir))
   }
+
+  /** The readable dir of swap store `d` ([[Commits.resolve]]): a crash
+    * window reads `_prev` without touching the store. One `exists` in
+    * the steady state — resolved once per call and passed down. */
+  private def resolved(spark: SparkSession, d: Commits.SwapDirs): Path =
+    Commits.resolve(fs(spark, d.live), d)
 
   /** Fail loudly on any vector whose width differs from the index
     * dims — one cheap aggregate over the (batch-sized) frame. */
@@ -88,19 +95,17 @@ object VectorIndex {
     require(bad == 0, s"$what contains vectors whose width != index dims ($dims)")
   }
 
-  /** Tags of the committed batches — the only batches a reader sees;
-    * orphans of crashed appends stay invisible. */
-  private def liveTags(spark: SparkSession, dir: String): Seq[String] = {
-    ensureLive(spark, dir)
-    Commits.committedBatches(spark, listsPath(dir)).map(Commits.tagOf)
-  }
+  /** Tags of the committed batches under the `lists` dir — the only
+    * batches a reader sees; orphans of crashed appends stay invisible. */
+  private def liveTags(spark: SparkSession, lists: Path): Seq[String] =
+    Commits.committedBatches(spark, lists.toString).map(Commits.tagOf)
 
   /** Does any live batch hold at least one parquet file? (An index
     * whose vectors were all deleted has committed batches but no
     * files — `spark.read.parquet` would die on schema inference.) */
-  private def liveHasFiles(spark: SparkSession, dir: String, tags: Seq[String]): Boolean =
+  private def liveHasFiles(spark: SparkSession, lists: Path, tags: Seq[String]): Boolean =
     tags.exists { t =>
-      val p = new Path(s"${listsPath(dir)}/batch=$t")
+      val p = new Path(lists, s"batch=$t")
       val f = fs(spark, p)
       val it = f.listFiles(p, true)
       var found = false
@@ -113,10 +118,12 @@ object VectorIndex {
     * batches only; empty-but-valid frame (schema from meta) when every
     * vector has been deleted. The `batch`/`list_id` predicates are
     * partition filters, so callers layering a `list_id` IN-filter on
-    * top keep planning-time directory pruning. */
+    * top keep planning-time directory pruning. Read-only: the lists dir
+    * is [[resolved]] once. */
   private def liveLists(spark: SparkSession, dir: String, m: Meta): DataFrame = {
-    val tags = liveTags(spark, dir)
-    if (tags.isEmpty || !liveHasFiles(spark, dir, tags))
+    val lists = resolved(spark, listsDirs(dir))
+    val tags = liveTags(spark, lists)
+    if (tags.isEmpty || !liveHasFiles(spark, lists, tags))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType.fromDDL(m.schemaDdl).add("list_id", LongType))
@@ -124,12 +131,12 @@ object VectorIndex {
       // retired (batch, list) partitions are superseded by a newer
       // maintenance batch — excluded with partition-column predicates,
       // so directory pruning still plans around them
-      val retired = liveRetirements(spark, dir, tags)
+      val retired = liveRetirements(spark, lists, tags)
       val keep = retired.foldLeft(col("batch").isin(tags: _*)) {
         case (p, (t, ls)) =>
           p && !(col("batch") === t && col("list_id").isin(ls: _*))
       }
-      spark.read.parquet(listsPath(dir))
+      spark.read.parquet(lists.toString)
         .filter(keep)
         .drop("batch")
     }
@@ -139,7 +146,6 @@ object VectorIndex {
     * LEDGER for incremental maintainers (id column only; parquet
     * column pruning keeps the float vectors on disk). */
   def storedIds(spark: SparkSession, dir: String): DataFrame = {
-    ensureLive(spark, dir)
     val m = meta(spark, dir)
     liveLists(spark, dir, m).select(m.idCol)
   }
@@ -166,8 +172,7 @@ object VectorIndex {
   /** Retirements declared by LIVE batches: batch tag → list ids whose
     * partitions in that batch are superseded. Cost ∝ batch count. */
   private def liveRetirements(
-      spark: SparkSession, dir: String, tags: Seq[String]): Map[String, Seq[Long]] = {
-    val lists = new Path(listsPath(dir))
+      spark: SparkSession, lists: Path, tags: Seq[String]): Map[String, Seq[Long]] = {
     val f = fs(spark, lists)
     tags.flatMap { t =>
       val rf = new Path(lists, s"batch=$t/$retireFile")
@@ -221,10 +226,41 @@ object VectorIndex {
       j.num("iters"), j.str("schema"))
   }
 
-  /** The stored centroids as (cid, cemb) — nlist rows. */
-  def centroids(spark: SparkSession, dir: String): DataFrame = {
-    ensureLive(spark, dir)
-    spark.read.parquet(centsPath(dir))
+  /** The stored centroids as (cid, cemb) — nlist rows, from the
+    * [[resolved]] centroids dir. */
+  def centroids(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(resolved(spark, centsDirs(dir)).toString)
+
+  /**
+   * The list scan every query-set probe shares: each query ranks the
+   * centroids `cents` and keeps its `nprobe` best lists (per-query
+   * window over a queries×nlist frame — tiny). The (query_id, list_id,
+   * __q) pairs, ≤ queries × nprobe rows, are materialized once and
+   * read twice: their list-id union is a static, planning-time
+   * partition filter on `lists` (≤ nlist literal ids), and a broadcast
+   * join on list_id scores each candidate only against the queries
+   * that probed its list. Output: (query_id, idCol, cosine_sim).
+   */
+  private def scoreProbed(
+      q: DataFrame, cents: DataFrame, lists: DataFrame, m: Meta,
+      nprobe: Int): DataFrame = {
+    val wq = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id").orderBy(col("__csim").desc, col("cid").asc)
+    val pairs = cents
+      .crossJoin(broadcast(q))
+      .select(col("query_id"), col("cid"), col("__q"),
+        Similarity.cosine(col("cemb").cast("array<double>"), col("__q")).as("__csim"))
+      .withColumn("__rn", row_number().over(wq))
+      .filter(col("__rn") <= nprobe)
+      .select(col("query_id"), col("cid").as("list_id"), col("__q"))
+      .localCheckpoint()
+    val listIds = pairs.select("list_id").distinct().collect().map(_.getLong(0))
+    lists
+      .filter(col("list_id").isin(listIds: _*))
+      .join(broadcast(pairs), "list_id")
+      .select(col("query_id"), col(m.idCol),
+        Similarity.cosineFast(q.sparkSession, col(m.vecCol), col("__q"))
+          .as("cosine_sim"))
   }
 
   /**
@@ -243,7 +279,6 @@ object VectorIndex {
       k: Int,
       nprobe: Int): DataFrame = {
     val spark = queryDf.sparkSession
-    ensureLive(spark, dir)
     val m = meta(spark, dir)
     val nq = queryDf.limit(2).count()
     require(nq == 1,
@@ -270,14 +305,10 @@ object VectorIndex {
 
   /**
    * [[probe]] for a query SET — ONE job for N queries: each query
-   * ranks its own `nprobe` lists against the broadcast centroid table
-   * (per-query window over a queries×nlist frame — tiny), the scan
-   * covers the UNION of probed list directories (still a static,
-   * planning-time partition filter: ≤ nlist literal ids), and each
-   * candidate list is scored only against the queries that probed it
-   * (broadcast join on list_id). Final ranking is the salted
-   * two-stage [[Similarity.perQueryTopK]]. Output: (query_id, rank,
-   * idCol, cosine_sim).
+   * ranks its own `nprobe` lists and the scan covers the UNION of
+   * probed list directories ([[scoreProbed]]). Final ranking is the
+   * salted two-stage [[Similarity.perQueryTopK]]. Output: (query_id,
+   * rank, idCol, cosine_sim).
    */
   def probeBatch(
       queries: DataFrame,
@@ -286,28 +317,11 @@ object VectorIndex {
       k: Int,
       nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
-    ensureLive(spark, dir)
     val m = meta(spark, dir)
     requireDims(queries, m.vecCol, m.dims, "probe queries")
     val q = queries.select(col(qidCol).as("query_id"), col(m.vecCol).as("__q"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__csim").desc, col("cid").asc)
-    // (query_id, list_id, __q): ≤ queries × nprobe rows — materialized
-    // once, read twice (list-id union + scoring join)
-    val pairs = centroids(spark, dir)
-      .crossJoin(broadcast(q))
-      .select(col("query_id"), col("cid"), col("__q"),
-        Similarity.cosine(col("cemb").cast("array<double>"), col("__q")).as("__csim"))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nprobe)
-      .select(col("query_id"), col("cid").as("list_id"), col("__q"))
-      .localCheckpoint()
-    val listIds = pairs.select("list_id").distinct().collect().map(_.getLong(0))
-    val scored = liveLists(spark, dir, m)
-      .filter(col("list_id").isin(listIds: _*))
-      .join(broadcast(pairs), "list_id")
-      .select(col("query_id"), col(m.idCol),
-        Similarity.cosineFast(spark, col(m.vecCol), col("__q")).as("cosine_sim"))
+    val scored = scoreProbed(
+      q, centroids(spark, dir), liveLists(spark, dir, m), m, nprobe)
     Similarity.perQueryTopK(scored, "query_id", m.idCol, "cosine_sim", k)
       .select(col("query_id"), col("rank"), col(m.idCol), col("cosine_sim"))
   }
@@ -328,26 +342,10 @@ object VectorIndex {
       minCosine: Double,
       nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
-    ensureLive(spark, dir)
     val m = meta(spark, dir)
     requireDims(queries, m.vecCol, m.dims, "probe queries")
     val q = queries.select(col(qidCol).as("query_id"), col(m.vecCol).as("__q"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__csim").desc, col("cid").asc)
-    val pairs = centroids(spark, dir)
-      .crossJoin(broadcast(q))
-      .select(col("query_id"), col("cid"), col("__q"),
-        Similarity.cosine(col("cemb").cast("array<double>"), col("__q")).as("__csim"))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nprobe)
-      .select(col("query_id"), col("cid").as("list_id"), col("__q"))
-      .localCheckpoint()
-    val listIds = pairs.select("list_id").distinct().collect().map(_.getLong(0))
-    liveLists(spark, dir, m)
-      .filter(col("list_id").isin(listIds: _*))
-      .join(broadcast(pairs), "list_id")
-      .select(col("query_id"), col(m.idCol),
-        Similarity.cosineFast(spark, col(m.vecCol), col("__q")).as("cosine_sim"))
+    scoreProbed(q, centroids(spark, dir), liveLists(spark, dir, m), m, nprobe)
       .filter(col("cosine_sim") >= minCosine)
   }
 
@@ -388,7 +386,6 @@ object VectorIndex {
       escalations: Int = 1,
       growth: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    ensureLive(spark, dir)
     val m = meta(spark, dir)
     require(k >= 1 && nprobe >= 1 && escalations >= 0 && growth >= 1,
       "degenerate escalation geometry")
@@ -397,8 +394,6 @@ object VectorIndex {
       col(m.vecCol).as("__q")).localCheckpoint() // re-read per rung
     var active = q.select("query_id").collect().map(_.getLong(0)).toSeq
     require(active.nonEmpty, "probeFilteredBatch: empty query set")
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__csim").desc, col("cid").asc)
     val cents = centroids(spark, dir)
     val lists = liveLists(spark, dir, m)
     var rung = 0
@@ -412,23 +407,7 @@ object VectorIndex {
       }
       val effNprobe = math.min(width, m.nlist.toLong).toInt
       val qr = q.filter(col("query_id").isin(active: _*))
-      val pairs = cents
-        .crossJoin(broadcast(qr))
-        .select(col("query_id"), col("cid"), col("__q"),
-          Similarity.cosine(col("cemb").cast("array<double>"), col("__q"))
-            .as("__csim"))
-        .withColumn("__rn", row_number().over(wq))
-        .filter(col("__rn") <= effNprobe)
-        .select(col("query_id"), col("cid").as("list_id"), col("__q"))
-        .localCheckpoint()
-      val listIds = pairs.select("list_id").distinct().collect()
-        .map(_.getLong(0))
-      val kept = lists
-        .filter(col("list_id").isin(listIds: _*))
-        .join(broadcast(pairs), "list_id")
-        .select(col("query_id"), col(m.idCol),
-          Similarity.cosineFast(spark, col(m.vecCol), col("__q"))
-            .as("cosine_sim"))
+      val kept = scoreProbed(qr, cents, lists, m, effNprobe)
         .filter(predicate)
         .localCheckpoint() // counts + cut: one pruned list scan, not two
       val counts = kept.groupBy("query_id").count().collect()
@@ -521,7 +500,8 @@ object VectorIndex {
   } }
 
   /** Crash-safe quantizer swap — [[Commits.swap]] on the centroids
-    * dir ([[ensureLive]] heals the window). */
+    * dir (readers resolve the window read-only; the next writer's
+    * [[ensureLive]] heals it). */
   private def swapCentroids(
       spark: SparkSession, dir: String, cents: Seq[(Long, Seq[Double])]): Unit = {
     import spark.implicits._
@@ -551,8 +531,9 @@ object VectorIndex {
    *     and retirements become one visibility unit (a crash leaves an
    *     invisible orphan; old partitions are only LOGICALLY retired
    *     and physically reclaimed by [[compact]]);
-   *  4. the quantizer swaps last ([[swapCentroids]], crash-recovered
-   *     by [[ensureLive]]). A crash between 3 and 4 degrades recall
+   *  4. the quantizer swaps last ([[swapCentroids]]; a crash window
+   *     reads `centroids_prev` until the next writer's [[ensureLive]]
+   *     heals it). A crash between 3 and 4 degrades recall
    *     only (vectors sit in lists of the new centroids while probes
    *     rank the old) — re-running maintenance heals forward.
    *
@@ -615,7 +596,7 @@ object VectorIndex {
       // overwrite) the APPEND batch of the same vector set
       val tag = "m" + Commits.batchTag(affected, m.idCol)
       writeBatch(data, listsPath(dir), tag, spark,
-        retire = liveTags(spark, dir).filterNot(_ == tag)
+        retire = liveTags(spark, listsDirs(dir).live).filterNot(_ == tag)
           .map(t => t -> driftedIds))
       swapCentroids(spark, dir, newCents)
     }

@@ -51,8 +51,9 @@ import graft.ops.{Dedup, Spans}
  * ∝ distinct n-grams + doc IDS (never per-window rows, never text).
  *
  * Same single-writer / many-reader contract and crash-safe compaction
- * ([[Commits.swap]] of the ONE `store/` root, healed by readers) as
- * the signature store; serialize [[compact]] with appends.
+ * ([[Commits.swap]] of the ONE `store/` root: readers resolve the
+ * crash window read-only, the next writer heals it) as the signature
+ * store; serialize [[compact]] with appends.
  */
 object WindowIndex {
 
@@ -71,24 +72,27 @@ object WindowIndex {
   }
 
   private def storePath(dir: String) = s"$dir/store"
-  private def countsPath(dir: String) = s"${storePath(dir)}/counts"
-  private def docsPath(dir: String) = s"${storePath(dir)}/docs"
   private def storeDirs(dir: String) = Commits.SwapDirs(dir, "store", "compacting")
   private val baseTag = "__base__"
 
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** [[Commits.heal]] a crashed [[compact]]/[[delete]] swap; no-op in
-    * the steady state. */
-  private def ensureLive(spark: SparkSession, dir: String): Unit =
+  /** [[Commits.heal]] a crashed [[compact]]/[[delete]] swap. MUTATING
+    * — writers only, before their first read of the store (readers
+    * resolve); no-op in the steady state. */
+  private[graft] def ensureLive(spark: SparkSession, dir: String): Unit =
     Commits.heal(fs(spark, new Path(dir)), storeDirs(dir))
 
-  /** Tags of the docs-side committed batches — the only partitions
-    * any reader sees. */
-  private def liveTags(spark: SparkSession, dir: String): Seq[String] = {
-    ensureLive(spark, dir)
-    Commits.committedBatches(spark, docsPath(dir)).map(Commits.tagOf)
+  /** The live rows of the store's `part` (`counts` or `docs`): the
+    * [[Commits.resolve]]d store (read-only — a crash window reads
+    * `store_prev`), filtered to the tags of the docs-side committed
+    * batches, the only partitions any reader sees. */
+  private def livePart(spark: SparkSession, dir: String, part: String): DataFrame = {
+    val store = Commits.resolve(fs(spark, new Path(dir)), storeDirs(dir))
+    val tags = Commits.committedBatches(spark, s"$store/docs").map(Commits.tagOf)
+    val df = spark.read.parquet(s"$store/$part")
+    if (tags.isEmpty) df.limit(0) else df.filter(col("batch").isin(tags: _*))
   }
 
   /** Write one committed batch under `store`: counts partition, then
@@ -139,22 +143,15 @@ object WindowIndex {
   /** The LIVE per-hash counts (hh, cnt) — possibly several rows per
     * hash (one per committed batch) until the next [[compact]].
     * Orphans of crashed writes are filtered out by tag. */
-  def counts(spark: SparkSession, dir: String): DataFrame = {
-    val tags = liveTags(spark, dir)
-    val df = spark.read.parquet(countsPath(dir))
-    (if (tags.isEmpty) df.limit(0) else df.filter(col("batch").isin(tags: _*)))
-      .select("hh", "cnt")
-  }
+  def counts(spark: SparkSession, dir: String): DataFrame =
+    livePart(spark, dir, "counts").select("hh", "cnt")
 
   /** The processed-docs ledger: ids of every doc whose counts are live
     * in the index — the anti-join source for delta detection (the
     * "index IS the ledger" invariant at window granularity). */
   def processedIds(spark: SparkSession, dir: String): DataFrame = {
     val m = meta(spark, dir)
-    val tags = liveTags(spark, dir)
-    val df = spark.read.parquet(docsPath(dir))
-    (if (tags.isEmpty) df.limit(0) else df.filter(col("batch").isin(tags: _*)))
-      .select(m.idCol)
+    livePart(spark, dir, "docs").select(m.idCol)
   }
 
   /** Duplicated spans of `newDocs`, judged against batch ∪ indexed
@@ -217,18 +214,19 @@ object WindowIndex {
     * swapped in crash-safely. Orphan partitions of crashed appends are NOT
     * carried over — compaction is also the garbage collector. Must not
     * run concurrently with an append (single-writer contract). */
-  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit =
+  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
+    ensureLive(spark, dir)
     rewriteStore(spark, dir,
       counts(spark, dir).groupBy(col("hh")).agg(sum(col("cnt")).as("cnt")),
       processedIds(spark, dir), numFiles)
+  }
 
   /** Rewrite the whole store as ONE `__base__` batch holding
     * (`newCounts`, `newIds`) via [[Commits.swap]] — the shared tail of
-    * [[compact]] and [[delete]]. */
+    * [[compact]] and [[delete]] (store healed by the caller). */
   private def rewriteStore(
       spark: SparkSession, dir: String,
       newCounts: DataFrame, newIds: DataFrame, numFiles: Int): Unit = {
-    ensureLive(spark, dir)
     Commits.swap(fs(spark, new Path(dir)), storeDirs(dir), "rewrite") { stage =>
       writeBatch(
         newCounts.repartitionByRange(numFiles, col("hh")).sortWithinPartitions("hh"),
@@ -280,31 +278,20 @@ object WindowIndex {
       .select(col("hh"),
         (col("cnt") - coalesce(col("del_cnt"), lit(0L))).as("cnt"))
       .filter(col("cnt") > 0)
-    val liveCountFiles = {
-      val it = fs(spark, new Path(countsPath(dir))).listFiles(
-        new Path(countsPath(dir)), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      math.max(1, n)
-    }
+    val counted = new Path(storePath(dir), "counts")
+    val liveCountFiles = math.max(1, Commits.parquetFiles(fs(spark, counted), counted))
     rewriteStore(spark, dir, remaining,
       processedIds(spark, dir).join(broadcast(delIds), Seq(m.idCol), "left_anti"),
       liveCountFiles)
   }
 
   /** [[compact]] only when committed batches have fragmented the store
-    * past `2 × targetFiles` counts files — the idempotent scheduled-
-    * maintenance form. Returns true when a compaction ran. */
+    * past `2 × targetFiles` counts files ([[Commits.fragmented]]) —
+    * the idempotent scheduled-maintenance form. Returns true when a
+    * compaction ran. */
   def compactIfFragmented(spark: SparkSession, dir: String, targetFiles: Int): Boolean = {
-    ensureLive(spark, dir)
-    val live = new Path(countsPath(dir))
-    val f = fs(spark, live)
-    val it = f.listFiles(live, true)
-    var nFiles = 0
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-    }
-    val fragmented = nFiles > 2 * targetFiles
+    val fragmented = Commits.fragmented(
+      spark, dir, "window", storeDirs(dir), targetFiles)(new Path(_, "counts"))
     if (fragmented) compact(spark, dir, targetFiles)
     fragmented
   }

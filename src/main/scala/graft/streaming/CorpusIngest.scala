@@ -67,6 +67,9 @@ object CorpusIngest {
         silver.limit(0), textCol, idCol, indexDir,
         numHashes, bands, shingleWords, kind)
 
+    // heal BEFORE the ledger read: a delta planned against a resolved
+    // `sigs_prev` would lose its files to the append's own heal
+    SignatureIndex.ensureLive(spark, indexDir)
     val indexedIds = SignatureIndex.signatures(spark, indexDir)
       .select(idCol)
     val delta = silver.join(indexedIds, Seq(idCol), "left_anti")
@@ -208,6 +211,7 @@ object CorpusIngest {
         d
       }
     } else {
+      graft.io.VectorIndex.ensureLive(spark, indexDir) // before the ledger read
       val delta = silver.join(
         graft.io.VectorIndex.storedIds(spark, indexDir), Seq(idCol), "left_anti")
       // decide BEFORE appending: dup status is judged against the
@@ -224,7 +228,8 @@ object CorpusIngest {
 
   /** Shared drain preamble of the window-index maintainers: drain
     * landed files into silver, bootstrap an empty index on first call,
-    * anti-join the ledger → this drain's unprocessed delta. */
+    * heal a crashed rewrite, anti-join the ledger → this drain's
+    * unprocessed delta. */
   private def windowDelta(
       spark: SparkSession,
       landingDir: String,
@@ -242,6 +247,7 @@ object CorpusIngest {
     if (!graft.io.Commits.hasMeta(spark, indexDir))
       WindowIndex.build(silver.limit(0), textCol, idCol, indexDir, n, kind)
 
+    WindowIndex.ensureLive(spark, indexDir) // before the ledger read
     silver.join(
       WindowIndex.processedIds(spark, indexDir), Seq(idCol), "left_anti")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{Commits, FoldedFiles, GraphIndex}
+import graft.io.{Commits, GraphIndex}
 
 /**
  * Incremental navigation-graph maintenance at the ingest front door —
@@ -12,7 +12,7 @@ import graft.io.{Commits, FoldedFiles, GraphIndex}
  * ([[CorpusIngest.maintainVectors]] keeps the IVF index current; this
  * keeps the NSW graph current): vector batches land as JSONL, each
  * drain advances them into silver exactly once
- * ([[IngestStream.drainOnce]]), and the not-yet-indexed silver files
+ * ([[IngestStream.drainFresh]]), and the not-yet-indexed silver files
  * search-then-link into the standing graph
  * ([[GraphIndex.ingestLocked]] — one shared-rounds beam search per
  * drain, touched-nodes-only adjacency rewrite).
@@ -62,16 +62,11 @@ object GraphIngest {
       candidateK: Int = 0,
       alphaNum: Int = 0,
       alphaDen: Int = 10): Long = Commits.withClaim(spark, indexDir) {
-    IngestStream.drainOnce(spark, landingDir, schema,
-      requiredCols = Seq(idCol, vecCol), normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
     // a missing silver dir has no fresh files
-    val (fresh, commitFolded) =
-      FoldedFiles.fresh(spark, silverDir, s"$indexDir/folded")
-    if (fresh.isEmpty) 0L
-    else {
-      val batch = spark.read.schema(schema).parquet(fresh: _*)
-        .select(col(idCol), col(vecCol))
+    IngestStream.drainFresh(spark, landingDir, schema, Seq(idCol, vecCol),
+        silverDir, checkpointDir, s"$indexDir/folded").fold(0L) {
+      case (fresh, commitFolded) =>
+      val batch = fresh.select(col(idCol), col(vecCol))
       val n =
         if (!Commits.hasMeta(spark, indexDir)) {
           // bootstrap: the first data drain trains the graph (build

@@ -102,4 +102,26 @@ object IngestStream {
     if (fs.exists(silverPath)) spark.read.schema(schema).parquet(silverDir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
+
+  /** [[drainOnce]] (no normalization), then the silver files not yet
+    * folded into the index whose [[graft.io.FoldedFiles]] record is at
+    * `recordBase`, read with the ENFORCED `schema` — paired with the
+    * callback that commits the advanced record (call it LAST, after
+    * the index commit). None when no file is fresh: an empty drain
+    * launches no Spark job. Filesystem cost beyond the drain: the
+    * [[graft.io.FoldedFiles.fresh]] listing and record read. */
+  def drainFresh(
+      spark: SparkSession,
+      srcDir: String,
+      schema: StructType,
+      requiredCols: Seq[String],
+      silverDir: String,
+      checkpointDir: String,
+      recordBase: String): Option[(DataFrame, () => Unit)] = {
+    drainOnce(spark, srcDir, schema, requiredCols, normalizeCols = Nil,
+      outDir = silverDir, checkpointDir = checkpointDir)
+    val (fresh, commitFolded) = graft.io.FoldedFiles.fresh(spark, silverDir, recordBase)
+    if (fresh.isEmpty) None
+    else Some((spark.read.schema(schema).parquet(fresh: _*), commitFolded))
+  }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +11,8 @@ import org.apache.spark.sql.functions._
  * durable stats ledger (the Delta/Iceberg txn-log stats pattern,
  * maintained at ingest instead of rebuilt by scans).
  *
- * Mechanics mirror [[WarcIngest]]'s drain contract exactly:
+ * Mechanics are [[WarcIngest]]'s drain contract, through the same
+ * [[graft.io.FileLedger]]:
  *  - the diff of listed data files against the ledger is a DISTRIBUTED
  *    left-anti join (a multi-year zone's ledger never reaches the
  *    driver; only the batch-∝ new-file list is collected);
@@ -35,32 +34,6 @@ import org.apache.spark.sql.functions._
  */
 object LayoutMaintain {
 
-  /** Recursive listing of `.parquet` data files under `dir` (sorted
-    * for deterministic drain order); empty when absent. */
-  private def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val stack = scala.collection.mutable.Stack(p)
-    while (stack.nonEmpty) {
-      fs.listStatus(stack.pop()).foreach { st =>
-        if (st.isDirectory) stack.push(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) out += st.getPath.toString
-      }
-    }
-    out.sorted.toSeq
-  }
-
-  /** Listed files NOT yet in the ledger — distributed anti-join; only
-    * the batch-∝ diff is collected. */
-  private[graft] def newFiles(
-      spark: SparkSession, listed: Seq[String], ledgerDir: String): DataFrame = {
-    import spark.implicits._
-    val ledger = spark.read.parquet(ledgerDir).select(col("file"))
-    listed.toDF("file").join(ledger, Seq("file"), "left_anti")
-  }
-
   /**
    * One drain: stat the new files of `tableDir` over `cols`, append to
    * `statsDir`, then record the files in `ledgerDir`.
@@ -79,23 +52,8 @@ object LayoutMaintain {
     // at-least-once), but a concurrent drain is an operator error that
     // should fail visibly, not dilute silently into duplicate rows
     graft.io.Commits.withClaim(spark, ledgerDir) {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // "ledger exists" = holds DATA files: the drain claim marker
-    // (hidden `_` name) creates the directory on a first drain
-    def hasLedgerData: Boolean = {
-      val p = new Path(ledgerDir); val fs = p.getFileSystem(hconf)
-      fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
-    val listed = listDataFiles(spark, tableDir)
-    val batch: Seq[String] =
-      if (listed.isEmpty) Seq.empty
-      else if (hasLedgerData)
-        newFiles(spark, listed, ledgerDir)
-          .collect().map(_.getString(0)).sorted.toSeq
-      else listed
+    val listed = graft.io.FileLedger.list(spark, tableDir, _.endsWith(".parquet"))
+    val batch = graft.io.FileLedger.fresh(spark, listed, ledgerDir)
     val aggs = count(lit(1)).as("n_rows") +:
       cols.flatMap(c => Seq(min(col(c)).as(s"${c}_mn"), max(col(c)).as(s"${c}_mx")))
     if (batch.isEmpty) {
@@ -111,8 +69,7 @@ object LayoutMaintain {
         .agg(aggs.head, aggs.tail: _*)
         .localCheckpoint() // stats append + return; never recompute
       stats.write.mode("append").parquet(statsDir)
-      import spark.implicits._
-      batch.toDF("file").write.mode("append").parquet(ledgerDir)
+      graft.io.FileLedger.record(spark, batch, ledgerDir)
       stats
     }
   } }

@@ -109,9 +109,6 @@ object SearchIngest {
     // postings at the same generation number — the claim serializes
     // writers up front (released on any in-process exit)
     Commits.withClaim(spark, indexDir) {
-    IngestStream.drainOnce(spark, landingDir, schema,
-      requiredCols = Seq(idCol, textCol), normalizeCols = Nil,
-      outDir = silverDir, checkpointDir = checkpointDir)
     // the drain's BATCH is the silver files not yet folded into the
     // index, judged against the DURABLE folded record — an append-only
     // silver keeps every superseded version of a re-crawled doc, so
@@ -119,57 +116,55 @@ object SearchIngest {
     // forever (and pay an O(silver) scan per drain); the durable diff
     // keeps the drain O(batch) AND survives a crash between the silver
     // drain and the fold (an in-memory pre/post listing would not)
-    val (fresh, commitFolded) =
-      graft.io.FoldedFiles.fresh(spark, silverDir, foldedDir(indexDir))
-    val batch =
-      if (fresh.nonEmpty) spark.read.schema(schema).parquet(fresh: _*)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    // one version per doc per drain is the landing-zone contract; a
-    // violating batch resolves to the max (hash, text) — deterministic
-    val docs = batch.select(col(idCol).as("doc_id"),
-        col(textCol).as("__text"))
-      .withColumn("__h", xxhash64(col("__text")))
-      .groupBy("doc_id")
-      .agg(max(struct(col("__h"), col("__text"))).as("__m"))
-      .select(col("doc_id"), col("__m.__text").as("__text"),
-        col("__m.__h").as("__h"))
-    val ledgerRead = Commits.readVersioned(spark, ledgerDir(indexDir))
-    val ledgerVersion = ledgerRead.map(_._1).getOrElse(-1)
-    val ledger = ledgerRead.map(_._2).getOrElse(
-      spark.range(0).select(col("id").as("doc_id"),
-        col("id").as("text_hash"), col("id").cast("int").as("gen")))
-    // (id, hash) delta: new docs AND re-crawled changed text
-    val delta = docs
-      .join(broadcast(ledger.select(col("doc_id"),
-        col("text_hash").as("__lh"))), Seq("doc_id"), "left_outer")
-      .filter(col("__lh").isNull || col("__lh") =!= col("__h"))
-      .select(col("doc_id"), col("__text"), col("__h"))
-      .localCheckpoint() // sized ∝ the drain; feeds postings AND ledger
-    val nDelta = delta.count()
-    if (nDelta > 0) {
-      val gen = maxGenOnDisk(spark, indexDir) + 1
-      graft.ops.Search.invertedIndex(
-          delta.select(col("doc_id"), col("__text")), "__text", "doc_id")
-        .withColumn("tbucket", pmod(xxhash64(col("token")), lit(buckets)))
-        .withColumn("gen", lit(gen))
-        .write.mode("append")
-        .partitionBy("gen", "tbucket")
-        .parquet(postingsDir(indexDir))
-      // ledger SECOND: a crash before this point leaves gen an
-      // invisible orphan; the version CAS makes a racing drain fail
-      // visibly instead of silently dropping this drain's mapping
-      val newLedger = ledger
-        .join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .unionByName(delta.select(col("doc_id"),
-          col("__h").as("text_hash"), lit(gen).as("gen")))
-      Commits.commitVersion(newLedger, ledgerDir(indexDir), ledgerVersion)
+    IngestStream.drainFresh(spark, landingDir, schema, Seq(idCol, textCol),
+        silverDir, checkpointDir, foldedDir(indexDir)).fold(0L) {
+      case (batch, commitFolded) =>
+      // one version per doc per drain is the landing-zone contract; a
+      // violating batch resolves to the max (hash, text) — deterministic
+      val docs = batch.select(col(idCol).as("doc_id"),
+          col(textCol).as("__text"))
+        .withColumn("__h", xxhash64(col("__text")))
+        .groupBy("doc_id")
+        .agg(max(struct(col("__h"), col("__text"))).as("__m"))
+        .select(col("doc_id"), col("__m.__text").as("__text"),
+          col("__m.__h").as("__h"))
+      val ledgerRead = Commits.readVersioned(spark, ledgerDir(indexDir))
+      val ledgerVersion = ledgerRead.map(_._1).getOrElse(-1)
+      val ledger = ledgerRead.map(_._2).getOrElse(
+        spark.range(0).select(col("id").as("doc_id"),
+          col("id").as("text_hash"), col("id").cast("int").as("gen")))
+      // (id, hash) delta: new docs AND re-crawled changed text
+      val delta = docs
+        .join(broadcast(ledger.select(col("doc_id"),
+          col("text_hash").as("__lh"))), Seq("doc_id"), "left_outer")
+        .filter(col("__lh").isNull || col("__lh") =!= col("__h"))
+        .select(col("doc_id"), col("__text"), col("__h"))
+        .localCheckpoint() // sized ∝ the drain; feeds postings AND ledger
+      val nDelta = delta.count()
+      if (nDelta > 0) {
+        val gen = maxGenOnDisk(spark, indexDir) + 1
+        graft.ops.Search.invertedIndex(
+            delta.select(col("doc_id"), col("__text")), "__text", "doc_id")
+          .withColumn("tbucket", pmod(xxhash64(col("token")), lit(buckets)))
+          .withColumn("gen", lit(gen))
+          .write.mode("append")
+          .partitionBy("gen", "tbucket")
+          .parquet(postingsDir(indexDir))
+        // ledger SECOND: a crash before this point leaves gen an
+        // invisible orphan; the version CAS makes a racing drain fail
+        // visibly instead of silently dropping this drain's mapping
+        val newLedger = ledger
+          .join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
+          .unionByName(delta.select(col("doc_id"),
+            col("__h").as("text_hash"), lit(gen).as("gen")))
+        Commits.commitVersion(newLedger, ledgerDir(indexDir), ledgerVersion)
+      }
+      // folded record LAST (even on an all-unchanged batch): a crash
+      // before this line re-scans the batch next drain, where the hash
+      // delta is empty and this commit heals forward
+      commitFolded()
+      nDelta
     }
-    // folded record LAST (even on an all-unchanged batch): a crash
-    // before this line re-scans `fresh` next drain, where the hash
-    // delta is empty and this commit heals forward
-    if (fresh.nonEmpty) commitFolded()
-    nDelta
   } }
 
   /**

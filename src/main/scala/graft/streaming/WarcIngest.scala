@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,12 +13,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
  * have not been processed yet (cost ∝ the batch, never the corpus —
  * the [[CorpusIngest]] discipline applied to the WARC source).
  *
- * Ledger design: an append-only parquet log of processed file paths
- * (duplicate appends are harmless — the anti-join diff treats the
- * ledger as a set). The diff of listed files against the ledger is a
- * DISTRIBUTED left-anti join: a multi-year 100 TB landing zone's
- * ledger is millions of rows and never reaches the driver — only the
- * batch-∝ new-files result is collected. Why not
+ * Ledger design: the [[graft.io.FileLedger]] of processed archive
+ * paths (set semantics, distributed anti-join diff). Why not
  * Structured Streaming's file source: SS checkpoints key on the FILE
  * format reader, and [[graft.sources.WarcSource]] is a batch
  * DataSourceV2 — a driver-listed diff against a durable ledger gives
@@ -50,37 +44,6 @@ object WarcIngest {
     StructField("payload", org.apache.spark.sql.types.BinaryType, nullable = true),
     StructField("source_file", StringType, nullable = false)))
 
-  /** Recursive listing of `.warc`/`.warc.gz` under `dir` (sorted for
-    * deterministic drain order); empty when the dir does not exist. */
-  private def listArchives(spark: SparkSession, dir: String): Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val out = ArrayBuffer.empty[String]
-    val stack = scala.collection.mutable.Stack(p)
-    while (stack.nonEmpty) {
-      fs.listStatus(stack.pop()).foreach { st =>
-        if (st.isDirectory) stack.push(st.getPath)
-        else if (st.getPath.getName.endsWith(".warc") ||
-          st.getPath.getName.endsWith(".warc.gz")) out += st.getPath.toString
-      }
-    }
-    out.sorted.toSeq
-  }
-
-  /** The listed archives NOT yet in the ledger, as a DISTRIBUTED
-    * left-anti join: the ledger (multi-year, zone-∝) is processed by
-    * executors and never collected — only this batch-∝ diff reaches
-    * the driver. Catalyst picks the strategy (ledger-side broadcast
-    * while the ledger is small, shuffle join once it is not — an anti
-    * join never broadcasts its preserved side, so no hint is pinned). */
-  private[graft] def newArchives(
-      spark: SparkSession, listed: Seq[String], ledgerDir: String): DataFrame = {
-    import spark.implicits._
-    val ledger = spark.read.parquet(ledgerDir).select(col("file"))
-    listed.toDF("file").join(ledger, Seq("file"), "left_anti")
-  }
-
   def drainWarc(
       spark: SparkSession,
       landingDir: String,
@@ -96,26 +59,10 @@ object WarcIngest {
     // the crash-replay path itself stays automatic via the record_id
     // anti-join below)
     graft.io.Commits.withClaim(spark, ledgerDir) {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def exists(d: String): Boolean = {
-      val p = new Path(d); p.getFileSystem(hconf).exists(p)
-    }
-    // "ledger exists" = holds DATA files: the drain claim marker
-    // (hidden `_` name) may have created the directory on a first drain
-    def hasLedgerData: Boolean = {
-      val p = new Path(ledgerDir); val fs = p.getFileSystem(hconf)
-      fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
-    val listed = listArchives(spark, landingDir)
-    val newFiles: Seq[String] =
-      if (listed.isEmpty) Seq.empty
-      else if (hasLedgerData)
-        newArchives(spark, listed, ledgerDir)
-          .collect().map(_.getString(0)).sorted.toSeq
-      else listed
+    val newFiles = graft.io.FileLedger.fresh(spark,
+      graft.io.FileLedger.list(spark, landingDir,
+        n => n.endsWith(".warc") || n.endsWith(".warc.gz")),
+      ledgerDir)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], silverSchema)
     if (newFiles.isEmpty) return empty
@@ -129,8 +76,9 @@ object WarcIngest {
           col("content_type"), col("payload"), col("path").as("source_file"))
     }.reduce(_ unionByName _)
 
+    val silverPath = new Path(silverDir)
     val fresh =
-      (if (exists(silverDir)) {
+      (if (graft.io.Commits.fsOf(spark, silverPath).exists(silverPath)) {
         val seen = spark.read.schema(silverSchema).parquet(silverDir)
           .select(col("record_id"))
         batch.join(seen, Seq("record_id"), "left_anti")
@@ -139,8 +87,7 @@ object WarcIngest {
 
     if (!fresh.isEmpty) fresh.write.mode("append").parquet(silverDir)
     // ledger append LAST (see crash-safety note in the header)
-    import spark.implicits._
-    newFiles.toDF("file").coalesce(1).write.mode("append").parquet(ledgerDir)
+    graft.io.FileLedger.record(spark, newFiles, ledgerDir)
     fresh
   }
 }

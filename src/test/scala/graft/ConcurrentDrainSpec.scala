@@ -409,19 +409,24 @@ class ConcurrentDrainSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(report(0L), "list 0 drifted and must retrain")
 
-    // SELF-HEAL: simulate a crash inside the maintenance quantizer
-    // swap (between the two renames — centroids retired to _prev, the
-    // staged copy not yet promoted); the next touch restores the
-    // previous quantizer and the store stays fully probeable
+    // crash inside the maintenance quantizer swap (between the two
+    // renames — centroids retired to _prev, the staged copy not yet
+    // promoted): a probe reads the previous quantizer from _prev
+    // without touching the store, and the next writer restores it
     val fs = fsOf(dir)
     fs.delete(new Path(s"$dir/centroids_staging"), true)
     require(fs.rename(new Path(s"$dir/centroids"), new Path(s"$dir/centroids_prev")))
-    val healed = VectorIndex.probe(
+    def probeRows() = VectorIndex.probe(
       Seq(Array(1.0f, 0.0f)).toDF("embedding"), dir, k = 2, nprobe = 2)
-    assert(healed.count() == 2,
-      "the crashed-swap window must heal on the next touch")
+      .collect().toSeq
+    val inWindow = probeRows()
+    assert(inWindow.size == 2, "the crashed-swap window must stay probeable")
+    assert(!fs.exists(new Path(s"$dir/centroids")) &&
+      fs.exists(new Path(s"$dir/centroids_prev")), "a probe must not heal")
+    VectorIndex.compact(spark, dir)
     assert(fs.exists(new Path(s"$dir/centroids")) &&
-      !fs.exists(new Path(s"$dir/centroids_prev")))
+      !fs.exists(new Path(s"$dir/centroids_prev")), "the next writer heals")
+    assert(probeRows() == inWindow)
   }
 
   // ---------------------------------------------------------- LayoutMaintain

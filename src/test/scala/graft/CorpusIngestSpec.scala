@@ -193,6 +193,88 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(ledger() == 4)
   }
 
+  /** Two bases fed the same two waves by `drain`; the second base's
+    * wave-2 drain starts inside a crashed swap window of its index
+    * store `name`. That drain must succeed, report what the crash-free
+    * control reports, leave the store healed and its `ledger` equal to
+    * the control's. */
+  private def drainFromCrashWindow[R](
+      name: String, stage: String,
+      land: (String, String) => Unit,
+      drain: String => R,
+      ledger: String => Seq[Long]): Unit = {
+    def base(tag: String) = {
+      val b = TestSpark.tmpDir(s"corpus_ingest_crash_${name}_$tag")
+      new java.io.File(b, "landing").mkdirs()
+      land(s"$b/landing", "wave1.jsonl")
+      drain(b)
+      b
+    }
+    val ctl = base("ctl")
+    val crashed = base("crash")
+    val d = TestSpark.crashSwap(s"$crashed/index", name, stage)
+    land(s"$ctl/landing", "wave2.jsonl")
+    land(s"$crashed/landing", "wave2.jsonl")
+    assert(drain(crashed) == drain(ctl))
+    assert(TestSpark.swapState(d) == ((true, false, false)))
+    assert(ledger(crashed) == ledger(ctl))
+  }
+
+  private def landWave(wave1: Seq[(Long, String)], wave2: Seq[(Long, String)])(
+      dir: String, name: String): Unit =
+    land(dir, name, if (name == "wave1.jsonl") wave1 else wave2)
+
+  test("maintain: a drain started inside a crashed sigs rewrite heals and matches the control") {
+    drainFromCrashWindow("sigs", "compacting",
+      landWave(Seq(1L -> t1, 2L -> t1, 3L -> t2), Seq(4L -> t1, 5L -> t2)),
+      b => CorpusIngest.maintain(
+        spark, s"$b/landing", schema, "doc_id", "text",
+        silverDir = s"$b/silver", checkpointDir = s"$b/ckpt",
+        indexDir = s"$b/index", threshold = 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+      b => SignatureIndex.signatures(spark, s"$b/index")
+        .select("doc_id").as[Long].collect().sorted.toSeq)
+  }
+
+  test("maintainSpans: a drain started inside a crashed store rewrite heals and matches the control") {
+    drainFromCrashWindow("store", "compacting",
+      landWave(
+        Seq(1L -> "k1 k2 shared run here k3", 2L -> "k4 k5 shared run here k6"),
+        Seq(3L -> "k7 k8 shared run here k9", 4L -> "n1 n2 n3 n4 n5")),
+      b => CorpusIngest.maintainSpans(
+        spark, s"$b/landing", schema, "doc_id", "text",
+        silverDir = s"$b/silver", checkpointDir = s"$b/ckpt",
+        indexDir = s"$b/index", n = 3).collect().toSet,
+      b => graft.io.WindowIndex.processedIds(spark, s"$b/index")
+        .as[Long].collect().sorted.toSeq)
+  }
+
+  test("maintainVectors: a drain started inside a crashed lists rewrite heals and matches the control") {
+    val vschema = graft.schema.Metadata.structFromSpec(
+      """
+      vec_id: long
+      embedding: array<float>
+      """)
+    def landVecs(dir: String, name: String): Unit = {
+      val rows =
+        if (name == "wave1.jsonl") Seq(1L -> "1, 0, 0", 2L -> "0.999, 0.001, 0",
+          10L -> "0, 1, 0")
+        else Seq(20L -> "0.998, 0.002, 0", 30L -> "0, 0, 1", 31L -> "0, 0.001, 0.999")
+      val w = new java.io.PrintWriter(new java.io.File(dir, name))
+      try rows.foreach { case (id, v) =>
+        w.println(s"""{"vec_id": $id, "embedding": [$v]}""")
+      } finally w.close()
+    }
+    drainFromCrashWindow("lists", "staging", landVecs,
+      b => CorpusIngest.maintainVectors(
+        spark, s"$b/landing", vschema, "vec_id", "embedding",
+        silverDir = s"$b/silver", checkpointDir = s"$b/ckpt",
+        indexDir = s"$b/index", threshold = 0.9, nprobe = 2, nlist = 2)
+        .collect().toSet,
+      b => graft.io.VectorIndex.storedIds(spark, s"$b/index")
+        .as[Long].collect().sorted.toSeq)
+  }
+
   test("maintainDimension: versioned SCD2 state, exactly-once delta, replay-safe ledger") {
     val base = TestSpark.tmpDir("corpus_ingest_dim")
     val landing = new java.io.File(base, "landing"); landing.mkdirs()

@@ -132,19 +132,44 @@ class SignatureIndexSpec extends AnyFunSuite {
     assert(pairs.count() > 0)
   }
 
-  test("a crash between compact's renames heals on the next read") {
+  test("a crash between compact's renames: reads resolve it, the next writer heals") {
     val dir = TestSpark.tmpDir("sigidx_crash")
     SignatureIndex.build(corpus, "text", "doc_id", dir)
-    val before = SignatureIndex.signatures(spark, dir)
+    def sigSet() = SignatureIndex.signatures(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val before = sigSet()
     // simulate the crash window: live dir retired, staged dir half-written
     val live = new java.io.File(s"$dir/sigs")
     assert(live.renameTo(new java.io.File(s"$dir/sigs_prev")))
     new java.io.File(s"$dir/sigs_compacting").mkdirs()
-    val healed = SignatureIndex.signatures(spark, dir)
+    assert(sigSet() == before, "reader must transparently read sigs_prev")
+    assert(new java.io.File(s"$dir/sigs_prev").exists() && !live.exists(),
+      "a read must not heal the window")
+    // the next writer heals before its rewrite
+    SignatureIndex.compact(spark, dir, numFiles = 2)
+    assert(sigSet() == before)
+    assert(live.exists() && !new java.io.File(s"$dir/sigs_prev").exists())
+  }
+
+  test("reads resolve a crashed-rewrite window WITHOUT mutating the store") {
+    val dir = TestSpark.tmpDir("sigidx_read_resolve")
+    SignatureIndex.build(corpus, "text", "doc_id", dir)
+    def sigSet() = SignatureIndex.signatures(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(healed == before, "reader must transparently restore sigs_prev")
-    assert(!new java.io.File(s"$dir/sigs_prev").exists())
+    val before = sigSet()
+    val pairs = SignatureIndex.probe(docs, batch, "text", dir, 0.8).collect().toSet
+    // a delete/compact crashed between its two renames
+    val d = TestSpark.crashSwap(dir, "sigs", "compacting")
+    assert(sigSet() == before)
+    assert(SignatureIndex.probe(docs, batch, "text", dir, 0.8).collect().toSet == pairs)
+    assert(!SignatureIndex.compactIfFragmented(spark, dir, targetFiles = 1000))
+    assert(TestSpark.swapState(d) == ((false, true, true)),
+      "a read must not rename the store or delete the staged rewrite")
+    // the next WRITER heals the window, then appends
+    SignatureIndex.append(batch, "text", dir)
+    assert(TestSpark.swapState(d) == ((true, false, false)))
+    assert(sigSet().keySet == before.keySet ++
+      batch.select("doc_id").as[Long].collect().toSet)
   }
 
   test("append validates against the stored meta, not caller arguments") {

@@ -33,6 +33,24 @@ object TestSpark {
     p.toString
   }
 
+  /** Crash simulation for a [[graft.io.Commits.swap]] store `<dir>/<name>`:
+    * the state a rewrite leaves when it dies between its two renames —
+    * the live dir retired to `_prev`, the staged rewrite half-written. */
+  def crashSwap(dir: String, name: String, stage: String): graft.io.Commits.SwapDirs = {
+    val d = graft.io.Commits.SwapDirs(dir, name, stage)
+    val fs = d.live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.rename(d.live, d.prev), s"no live ${d.live} to crash")
+    fs.create(new org.apache.hadoop.fs.Path(d.stage, "part-00000.parquet")).close()
+    d
+  }
+
+  /** Which of (live, prev, stage) exist: `(false, true, true)` is the
+    * untouched crash window, `(true, false, false)` a healed store. */
+  def swapState(d: graft.io.Commits.SwapDirs): (Boolean, Boolean, Boolean) = {
+    val fs = d.live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs.exists(d.live), fs.exists(d.prev), fs.exists(d.stage))
+  }
+
   /** Crash simulation for [[graft.io.Commits]]-versioned single-column
     * records: snapshot the current content so [[restoreVersion]] can
     * roll the record back to it (as if a later writer died before its

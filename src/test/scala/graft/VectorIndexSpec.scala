@@ -137,6 +137,46 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(got.toSeq == expected)
   }
 
+  /** Every claim-free read inside a crashed swap window of `name`
+    * (`lists` or `centroids`) answers as before the crash and leaves
+    * the window untouched; the next writer heals it. */
+  private def crashWindowReads(name: String): Unit = {
+    val dir = TestSpark.tmpDir(s"vecidx_read_resolve_$name")
+    VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
+    val qs = emb.filter($"vec_id" < 3)
+    def reads() = (
+      VectorIndex.storedIds(spark, dir).as[Long].collect().sorted.toSeq,
+      VectorIndex.centroids(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap,
+      VectorIndex.probe(emb.filter($"vec_id" === 0), dir, k = 5, nprobe = 2)
+        .collect().toSeq,
+      VectorIndex.probeBatch(qs, "vec_id", dir, k = 5, nprobe = 2)
+        .collect().toSet,
+      VectorIndex.probeThreshold(qs, "vec_id", dir, minCosine = 0.5, nprobe = 2)
+        .collect().toSet,
+      VectorIndex.probeFilteredBatch(qs, "vec_id", dir, $"vec_id" % 2 === 0,
+        k = 5, nprobe = 2).collect().toSet)
+    val before = reads()
+    val d = TestSpark.crashSwap(dir, name, "staging")
+    assert(reads() == before, s"reads must answer from ${name}_prev")
+    assert(TestSpark.swapState(d) == ((false, true, true)),
+      "a read must not rename the store or delete the staged rewrite")
+    // the next WRITER heals the window, then appends
+    VectorIndex.append(Seq(900001L).toDF("vec_id")
+      .crossJoin(emb.filter($"vec_id" === 0).select("embedding")), dir)
+    assert(TestSpark.swapState(d) == ((true, false, false)))
+    assert(VectorIndex.storedIds(spark, dir).as[Long].collect().sorted.toSeq ==
+      (before._1 :+ 900001L).sorted)
+  }
+
+  test("reads resolve a crashed lists rewrite WITHOUT mutating the store") {
+    crashWindowReads("lists")
+  }
+
+  test("reads resolve a crashed centroids swap WITHOUT mutating the store") {
+    crashWindowReads("centroids")
+  }
+
   test("deleting every vector leaves a valid empty index; appends revive it") {
     val dir = TestSpark.tmpDir("vecidx_empty_all")
     VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)

@@ -76,7 +76,7 @@ class WarcIngestSpec extends AnyFunSuite {
       "file:/zone/archive-49999.warc.gz", // processed (also replayed)
       "file:/zone/archive-50000.warc.gz", // new
       "file:/zone/fresh.warc.gz")        // new
-    val diff = WarcIngest.newArchives(spark, listed, s"$base/ledger")
+    val diff = graft.io.FileLedger.unseen(spark, listed, s"$base/ledger")
     // the plan is join-based: the ledger streams through executors,
     // it is never collected to the driver
     val plan = diff.queryExecution.executedPlan.toString

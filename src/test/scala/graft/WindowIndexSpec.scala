@@ -256,6 +256,56 @@ class WindowIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/store/counts").inputFiles.length <= nBuild)
   }
 
+  private def storeState(dir: String) = (
+    WindowIndex.counts(spark, dir).groupBy("hh").agg(sum("cnt").as("c"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
+    WindowIndex.processedIds(spark, dir).as[Long].collect().sorted.toSeq)
+
+  test("reads resolve a crashed-rewrite window WITHOUT mutating the store") {
+    val dir = TestSpark.tmpDir("winidx_read_resolve")
+    WindowIndex.build(corpus, "text", "doc_id", dir, n = 3)
+    val before = storeState(dir)
+    val spans = spanSet(WindowIndex.probe(batch, "text", dir))
+    // a delete/compact crashed between its two renames
+    val d = TestSpark.crashSwap(dir, "store", "compacting")
+    assert(storeState(dir) == before)
+    assert(spanSet(WindowIndex.probe(batch, "text", dir)) == spans)
+    assert(!WindowIndex.compactIfFragmented(spark, dir, targetFiles = 1000))
+    assert(TestSpark.swapState(d) == ((false, true, true)),
+      "a read must not rename the store or delete the staged rewrite")
+    // the next WRITER heals the window, then appends
+    WindowIndex.append(batch, "text", dir)
+    assert(TestSpark.swapState(d) == ((true, false, false)))
+    assert(storeState(dir)._2 == (before._2 ++
+      batch.select("doc_id").as[Long].collect()).sorted)
+  }
+
+  test("compact started inside a crashed-rewrite window heals, then equals a clean compact") {
+    def accreted(name: String) = {
+      val dir = TestSpark.tmpDir(name)
+      WindowIndex.build(corpus, "text", "doc_id", dir, n = 3)
+      WindowIndex.append(batch.limit(10), "text", dir)
+      WindowIndex.append(batch.limit(20), "text", dir)
+      dir
+    }
+    val ctlDir = accreted("winidx_compact_ctl")
+    WindowIndex.compact(spark, ctlDir, numFiles = 2)
+    val dir = accreted("winidx_compact_crash")
+    val d = TestSpark.crashSwap(dir, "store", "compacting")
+    WindowIndex.compact(spark, dir, numFiles = 2)
+    assert(TestSpark.swapState(d) == ((true, false, false)))
+    assert(storeState(dir) == storeState(ctlDir))
+  }
+
+  test("compactIfFragmented: never-built root is a no-op, a missing root fails loudly") {
+    assert(!WindowIndex.compactIfFragmented(
+      spark, TestSpark.tmpDir("winidx_never_built"), targetFiles = 2))
+    intercept[IllegalArgumentException] {
+      WindowIndex.compactIfFragmented(
+        spark, TestSpark.tmpDir("winidx_root") + "/nope", targetFiles = 2)
+    }
+  }
+
   test("a crashed append (no commit marker) is invisible, and the replay is exactly-once") {
     // control: the same wave ingested with no crash anywhere
     val ctlDir = TestSpark.tmpDir("winidx_crash_ctl")
