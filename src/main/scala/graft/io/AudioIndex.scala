@@ -134,20 +134,14 @@ object AudioIndex {
     * drifted parameters. Call after a successful [[probe]]. */
   def append(batch: DataFrame, payloadCol: String, dir: String): Unit = {
     val spark = batch.sparkSession
-    Commits.withClaim(spark, dir)(appendLocked(batch, payloadCol, dir))
-  }
-
-  /** [[append]] for callers that ALREADY hold the store's claim (the
-    * streaming maintainer serializes its whole drain under one). */
-  private[graft] def appendLocked(
-      batch: DataFrame, payloadCol: String, dir: String): Unit = {
-    val spark = batch.sparkSession
-    ensureLive(spark, dir)
-    val m = meta(spark, dir)
-    AudioDedup.fingerprints(
-        batch, m.idCol, payloadCol, m.frameLen, m.bins, m.fanout)
-      .sortWithinPartitions("fp")
-      .write.mode("append").parquet(fpsPath(dir))
+    Commits.withClaim(spark, dir) {
+      ensureLive(spark, dir)
+      val m = meta(spark, dir)
+      AudioDedup.fingerprints(
+          batch, m.idCol, payloadCol, m.frameLen, m.bins, m.fanout)
+        .sortWithinPartitions("fp")
+        .write.mode("append").parquet(fpsPath(dir))
+    }
   }
 
   /** The daily-batch operation: probe the CURRENT index for the new

@@ -4,7 +4,8 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /**
  * Filesystem commit protocol for the durable-index maintainers — the
@@ -35,7 +36,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    leaves a stale claim that the exception names, and
  *    [[forceReleaseClaim]] recovers once the operator/scheduler knows
  *    no drain is in flight (the single-writer-per-store convention all
- *    public object-store formats document for this case).
+ *    public object-store formats document for this case). [[withClaim]]
+ *    is re-entrant for the thread holding it, so every public writer
+ *    takes the claim itself, also when a maintainer already holds it.
  *
  * What this deliberately does NOT attempt: multi-writer transactions
  * across datasets without a coordination service — plain rename gives
@@ -75,7 +78,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    orphan instead of accreting;
  *  - **meta** ([[writeMeta]], [[readMeta]]): the index identity in
  *    `_graft_index.json`, committed AFTER the data, so a crashed build
- *    leaves no readable index.
+ *    leaves no readable index;
+ *  - **generational store** ([[GenStore]]): merge-on-read rows under
+ *    `<data>/gen=<n>` plus a [[commitVersion]]ed ledger naming each
+ *    key's live generation; readers ([[liveRows]]) join the rows to
+ *    the ledger on (key, gen). A commit ([[commitGen]]) writes its rows
+ *    at one past the highest number ON DISK, making the dir even for
+ *    zero rows, and only then CASes the ledger: a crash in between
+ *    leaves an orphan no ledger names, and its number is never reused.
+ *    Compaction ([[compactGens]]) reads the ledger once, writes the
+ *    live rows at a fresh number, repoints every key to it, and only
+ *    then prunes the dirs below it.
  */
 object Commits {
 
@@ -188,6 +201,82 @@ object Commits {
     next
   }
 
+  /** The parts a generational store supplies: its rows under
+    * `<data>/gen=<n>` (read by `rows`, appended through `layout`, which
+    * partitions by `gen`) and its versioned `ledger` of (`key`, the
+    * store's own columns, `gen`). */
+  final case class GenStore(data: String, ledger: String, key: String,
+      rows: SparkSession => DataFrame, layout: DataFrame => DataFrameWriter[Row])
+
+  /** The `gen=<n>` dirs of `s` on disk, committed or orphaned. */
+  private def gens(fs: FileSystem, s: GenStore): Seq[(Int, Path)] = {
+    val p = new Path(s.data)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith("gen="))
+      .flatMap(d => scala.util.Try(d.getName.stripPrefix("gen=").toInt)
+        .toOption.map(_ -> d))
+  }
+
+  /** The committed ledger of `s` as (version, rows), or None before the
+    * first generation commit. */
+  def readLedger(spark: SparkSession, s: GenStore): Option[(Int, DataFrame)] =
+    readVersioned(spark, s.ledger)
+
+  /** [[readLedger]] of a store that must exist — fails naming it. */
+  def committedLedger(spark: SparkSession, s: GenStore): (Int, DataFrame) =
+    readLedger(spark, s).getOrElse(sys.error(s"no committed ledger under ${s.ledger}"))
+
+  /** The live rows of `s`: each key's rows at its `ledger` generation
+    * (broadcast semi-join — the ledger is keys only, the data is
+    * scanned once and never shuffled). */
+  def liveRows(spark: SparkSession, s: GenStore, ledger: DataFrame): DataFrame =
+    s.rows(spark).join(broadcast(ledger.select(col(s.key), col("gen"))),
+      Seq(s.key, "gen"), "left_semi")
+
+  /** Write `rows` as a fresh generation: one past the highest number ON
+    * DISK, whose dir is made even for zero rows, so no later writer
+    * reuses a number a ledger or an orphan names. */
+  private def writeGen(spark: SparkSession, s: GenStore, rows: DataFrame): Int = {
+    val fs = fsOf(spark, new Path(s.data))
+    val gen = gens(fs, s).map(_._1).maxOption.fold(0)(_ + 1)
+    fs.mkdirs(new Path(s.data, s"gen=$gen"))
+    s.layout(rows.withColumn("gen", lit(gen))).mode("append").parquet(s.data)
+    gen
+  }
+
+  /**
+   * Commit `rows` as a new generation of `s`: the rows first, then the
+   * ledger CAS from the `read` (version, ledger) — None on the first
+   * commit — to (old entries minus the `dropped` keys) ∪ (`entries` at
+   * the new number). A crash before the CAS leaves an invisible orphan.
+   */
+  def commitGen(spark: SparkSession, s: GenStore, read: Option[(Int, DataFrame)],
+      rows: DataFrame, entries: DataFrame, dropped: DataFrame): Unit = {
+    val added = entries.withColumn("gen", lit(writeGen(spark, s, rows)))
+    commitVersion(read.fold(added) { case (_, old) =>
+      old.join(dropped.select(col(s.key)), Seq(s.key), "left_anti").unionByName(added)
+    }, s.ledger, read.fold(-1)(_._1))
+  }
+
+  /**
+   * Fold every live row of `s` into one fresh generation: read the
+   * ledger once, write its live rows at a new number, repoint every
+   * ledger row there (CAS), and only then prune the generation dirs
+   * below it (dead rows and orphans). Returns the dirs pruned.
+   */
+  def compactGens(spark: SparkSession, s: GenStore): Int = {
+    val (version, ledger) = committedLedger(spark, s)
+    val gen = writeGen(spark, s,
+      liveRows(spark, s, ledger).drop("gen")
+        .localCheckpoint()) // sever lineage from the dirs being pruned
+    commitVersion(ledger.drop("gen").withColumn("gen", lit(gen)), s.ledger, version)
+    val fs = fsOf(spark, new Path(s.data))
+    val dead = gens(fs, s).collect { case (g, d) if g < gen => d }
+    dead.foreach(fs.delete(_, true))
+    dead.length
+  }
+
   private def claimPath(storeDir: String) =
     new Path(storeDir, "_drain.claim")
 
@@ -240,13 +329,28 @@ object Commits {
   def forceReleaseClaim(spark: SparkSession, storeDir: String): Unit =
     releaseClaim(spark, storeDir)
 
+  /** Claim files this thread holds through [[withClaim]]. */
+  private val heldClaims = ThreadLocal.withInitial[java.util.Set[Path]](
+    () => new java.util.HashSet[Path]())
+
   /** Run `body` under the store's exclusive drain claim — released on
     * ANY in-process exit (success or exception), so only a process
     * crash leaves it stale. The serialization fence for maintainers
-    * whose drain spans multiple non-transactional appends. */
+    * whose drain spans multiple non-transactional appends. Re-entrant
+    * for the thread that holds it: a nested call runs `body` with no
+    * filesystem call and only the outermost call releases, so a
+    * maintainer's claim covers the public writers it calls. Other
+    * threads and processes still fail on the create-exclusive. */
   def withClaim[T](spark: SparkSession, storeDir: String)(body: => T): T = {
-    acquireClaim(spark, storeDir)
-    try body finally releaseClaim(spark, storeDir)
+    val p = claimPath(storeDir)
+    val claim = fsOf(spark, p).makeQualified(p)
+    val held = heldClaims.get
+    if (held.contains(claim)) body
+    else {
+      acquireClaim(spark, storeDir)
+      held.add(claim)
+      try body finally { held.remove(claim); releaseClaim(spark, storeDir) }
+    }
   }
 
   private[graft] def fsOf(spark: SparkSession, p: Path): FileSystem =

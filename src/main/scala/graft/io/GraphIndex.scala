@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.ops.Similarity
 import graft.ops.Nsw
@@ -17,16 +18,16 @@ import graft.ops.Nsw
  * this store is built once and then maintained by daily
  * search-then-link drains instead of rebuilt per batch.
  *
- * Layout (the [[graft.streaming.SearchIngest]] merge-on-read recipe,
- * applied to adjacency lists):
+ * Layout — a [[Commits]] generational store (the protocol, its crash
+ * contract and its compaction live there, shared with
+ * [[graft.streaming.SearchIngest]]'s postings):
  *
  *  - `adj/gen=<n>/` — adjacency rows (id, nbr, cos_micro), id-sorted
  *    within files so point lookups prune on footer min/max. A node's
  *    FULL adjacency list lives in exactly one generation;
  *  - `ledger/v=<m>/` — (id, gen): which generation holds each node's
- *    live adjacency. Versioned through [[Commits.commitVersion]], so
- *    every drain's edge flips go live all-or-nothing and a racing
- *    writer fails visibly on the CAS;
+ *    live adjacency, so every drain's edge flips go live
+ *    all-or-nothing and a racing writer fails visibly on the CAS;
  *  - the [[Commits]] index meta — identity + search geometry
  *    (committed LAST at build: a crashed build leaves no readable
  *    index).
@@ -44,13 +45,12 @@ import graft.ops.Nsw
  * loudly asking to be split, because batch² past that is the honest
  * quadratic this family refuses to pay silently.
  *
- * Crash/concurrency contract (the maintainer family's): the drain
- * runs under the store's exclusive claim; the adjacency generation is
- * written FIRST under a never-reused number (max-on-disk + 1), so a
- * crash before the ledger CAS leaves an invisible orphan; the ledger
- * CAS is the single commit point; a replayed batch anti-joins the
- * ledger (already-indexed ids skip) and heals to the same state.
- * Dead generations are pruned by [[compact]], never by drains.
+ * Crash/concurrency contract (the maintainer family's): every writer
+ * runs under the store's exclusive claim; a generation commit is
+ * [[Commits.commitGen]] (orphans invisible, numbers never reused); a
+ * replayed batch anti-joins the ledger (already-indexed ids skip) and
+ * heals to the same state. Dead generations are pruned by [[compact]],
+ * never by drains.
  */
 object GraphIndex {
 
@@ -68,24 +68,18 @@ object GraphIndex {
       candidateK: Int, alphaNum: Int, alphaDen: Int)
 
   private def adjPath(dir: String) = s"$dir/adj"
-  private def ledgerDir(dir: String) = s"$dir/ledger"
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val adjSchema = StructType(
+    Seq("id", "nbr", "cos_micro").map(StructField(_, LongType)) :+
+      StructField("gen", IntegerType))
 
-  /** Highest adjacency generation ON DISK (committed or orphaned) —
-    * the collision-free source of the next one (a crashed drain's
-    * orphan number is never reused; [[graft.streaming.SearchIngest]]'s
-    * lesson). */
-  private def maxGenOnDisk(spark: SparkSession, dir: String): Int = {
-    val p = new Path(adjPath(dir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) -1
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("gen="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("gen=").toInt).toOption)
-      .reduceOption(_ max _).getOrElse(-1)
-  }
+  /** Adjacency partitioned by gen and id-sorted, keyed by node id. The
+    * explicit schema reads an EDGE-FREE graph (single-vector
+    * bootstrap, a delete-all followed by compact: the dynamic-partition
+    * writer leaves no parquet file) as an empty frame. */
+  private def store(dir: String) = Commits.GenStore(adjPath(dir), s"$dir/ledger",
+    "id", _.read.schema(adjSchema).parquet(adjPath(dir)),
+    _.sortWithinPartitions("id").write.partitionBy("gen"))
 
   /** Per-id top-`k` adjacency from symmetric candidate edges — the
     * shared pruning rule of build and drain: dedup (id, nbr) to max
@@ -126,14 +120,13 @@ object GraphIndex {
     require(Seq(idCol, embCol).forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")),
       "id/emb columns must be plain identifiers (stored in index meta)")
     val spark = corpus.sparkSession
-    val base = new Path(dir)
-    val fs = fsOf(spark, base)
+    val fs = Commits.fsOf(spark, new Path(dir))
     // targeted reset: only the index's own parts — a maintainer's held
     // drain claim (and its durable folded-files record) must survive a
     // bootstrap build running UNDER that claim
     fs.delete(Commits.metaPath(dir), false)
     fs.delete(new Path(adjPath(dir)), true)
-    fs.delete(new Path(ledgerDir(dir)), true)
+    fs.delete(new Path(store(dir).ledger), true)
     val poolK = if (alphaNum > 0) math.max(candidateK, k) else k
     val g0 = Nsw.knnGraph(corpus, idCol, embCol,
       planesPerBand, bands, dims, poolK, minCosine = -1.0, maxBucketSize)
@@ -142,16 +135,11 @@ object GraphIndex {
         g0, corpus, idCol, embCol, r = k, alphaNum, alphaDen))
       .select(col("id").cast("long").as("id"), col("nbr").cast("long").as("nbr"),
         col("cos_micro").cast("long").as("cos_micro"))
-      .withColumn("gen", lit(0))
-    g.sortWithinPartitions("id") // footer min/max → point-lookup pruning
-      .write.mode("overwrite").partitionBy("gen").parquet(adjPath(dir))
     // ledger = EVERY corpus id (isolated vectors hold an empty list):
     // the indexed-set record the maintainer's replay anti-join needs,
     // and the hook back-links attach to when neighbors arrive later
-    Commits.commitVersion(
-      corpus.select(col(idCol).cast("long").as("id")).distinct()
-        .withColumn("gen", lit(0)),
-      ledgerDir(dir), -1)
+    val ids = corpus.select(col(idCol).cast("long").as("id")).distinct()
+    Commits.commitGen(spark, store(dir), None, g, ids, ids)
     Commits.writeMeta(spark, dir, "id_col" -> idCol, "emb_col" -> embCol,
       "dims" -> dims, "k" -> k, "planes_per_band" -> planesPerBand,
       "bands" -> bands, "max_bucket_size" -> maxBucketSize,
@@ -176,39 +164,14 @@ object GraphIndex {
     * — the ledger is ids-only, the MoR resolve of
     * [[graft.streaming.SearchIngest.readIndex]]). */
   def edges(spark: SparkSession, dir: String): DataFrame = {
-    val ledger = Commits.readVersioned(spark, ledgerDir(dir))
-      .getOrElse(sys.error(s"no committed ledger under ${ledgerDir(dir)}"))
-      ._2.select(col("id"), col("gen"))
-    // an EDGE-FREE graph is a valid state (single-vector bootstrap, a
-    // delete-all followed by compact): Spark's dynamic-partition writer
-    // creates no files for zero rows, so read with the explicit schema
-    // and hand back an empty frame instead of a schema-inference crash
-    // (the VectorIndex empty-but-readable contract)
-    val p = new Path(adjPath(dir))
-    val fs = fsOf(spark, p)
-    def hasData: Boolean = fs.exists(p) && fs.listStatus(p)
-      .filter(_.isDirectory).exists(g => fs.listStatus(g.getPath)
-        .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-    val adjSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("nbr",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("cos_micro",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    if (!hasData)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], adjSchema)
-    else spark.read.parquet(adjPath(dir))
-      .join(broadcast(ledger), Seq("id", "gen"), "left_semi")
+    val s = store(dir)
+    Commits.liveRows(spark, s, Commits.committedLedger(spark, s)._2)
       .select(col("id"), col("nbr"), col("cos_micro"))
   }
 
   /** Ids currently in the graph (the ledger — adjacency-holding nodes). */
   def storedIds(spark: SparkSession, dir: String): DataFrame =
-    Commits.readVersioned(spark, ledgerDir(dir))
-      .getOrElse(sys.error(s"no committed ledger under ${ledgerDir(dir)}"))
-      ._2.select(col("id"))
+    Commits.committedLedger(spark, store(dir))._2.select(col("id"))
 
   /** Beam search over the stored graph with the geometry committed at
     * build time — [[Nsw.graphSearchBatch]] against the MoR
@@ -286,24 +249,9 @@ object GraphIndex {
       dir: String,
       corpus: DataFrame,
       newVecs: DataFrame,
-      maxBatchLink: Int = 4096): Long =
-    Commits.withClaim(spark, dir)(
-      ingestLocked(spark, dir, corpus, newVecs, maxBatchLink))
-
-  /** [[ingestBatch]] for callers that ALREADY hold the store's drain
-    * claim (the streaming maintainer serializes silver + index under
-    * one claim — re-acquiring here would self-conflict; the
-    * [[VectorIndex.appendLocked]] convention). */
-  private[graft] def ingestLocked(
-      spark: SparkSession,
-      dir: String,
-      corpus: DataFrame,
-      newVecs: DataFrame,
-      maxBatchLink: Int): Long = {
+      maxBatchLink: Int = 4096): Long = Commits.withClaim(spark, dir) {
     val m = meta(spark, dir)
-    val (ledgerVersion, ledger) =
-      Commits.readVersioned(spark, ledgerDir(dir))
-        .getOrElse(sys.error(s"no committed ledger under ${ledgerDir(dir)}"))
+    val read = Commits.committedLedger(spark, store(dir))
     // one vector per id per drain is the landing-zone contract; an
     // at-least-once producer can still violate it, and a duplicate id
     // would otherwise throw inside the batch search and WEDGE a
@@ -313,7 +261,7 @@ object GraphIndex {
       .select(col(m.idCol).cast("long").as("id"), col(m.embCol).as("__e"))
       .filter(col("id").isNotNull)
       .groupBy("id").agg(max(col("__e")).as("__e"))
-      .join(broadcast(ledger.select(col("id"))), Seq("id"), "left_anti")
+      .join(broadcast(read._2.select(col("id"))), Seq("id"), "left_anti")
       .localCheckpoint() // feeds searches, internal pairs, and the link
     val nDelta = batch.count()
     if (nDelta == 0) 0L
@@ -381,15 +329,7 @@ object GraphIndex {
         standingEdges.join(broadcast(touched), Seq("id"), "left_semi")
           .unionByName(sym))
         .localCheckpoint() // sized ∝ touched·k; feeds adj AND ledger
-      // adjacency generation FIRST (orphan if we crash), ledger CAS LAST
-      val gen = maxGenOnDisk(spark, dir) + 1
-      merged.withColumn("gen", lit(gen))
-        .sortWithinPartitions("id")
-        .write.mode("append").partitionBy("gen").parquet(adjPath(dir))
-      val newLedger = ledger
-        .join(touched, Seq("id"), "left_anti")
-        .unionByName(touched.withColumn("gen", lit(gen)))
-      Commits.commitVersion(newLedger, ledgerDir(dir), ledgerVersion)
+      Commits.commitGen(spark, store(dir), Some(read), merged, touched, touched)
       nDelta
     }
   }
@@ -413,13 +353,11 @@ object GraphIndex {
    */
   def delete(spark: SparkSession, dir: String, deletedIds: DataFrame): Long =
     Commits.withClaim(spark, dir) {
-      val (ledgerVersion, ledger) =
-        Commits.readVersioned(spark, ledgerDir(dir))
-          .getOrElse(sys.error(s"no committed ledger under ${ledgerDir(dir)}"))
+      val read = Commits.committedLedger(spark, store(dir))
       val del = deletedIds
         .select(col(deletedIds.columns.head).cast("long").as("id"))
         .distinct()
-        .join(ledger.select("id"), Seq("id"), "left_semi") // unknown ids no-op
+        .join(read._2.select("id"), Seq("id"), "left_semi") // unknown ids no-op
         .localCheckpoint()
       val nDel = del.count()
       if (nDel == 0) 0L
@@ -437,48 +375,18 @@ object GraphIndex {
           .join(broadcast(owners), Seq("id"), "left_semi")
           .join(broadcast(del.select(col("id").as("nbr"))), Seq("nbr"), "left_anti")
           .select(col("id"), col("nbr"), col("cos_micro"))
-        val gen = maxGenOnDisk(spark, dir) + 1
-        rewritten.withColumn("gen", lit(gen))
-          .sortWithinPartitions("id")
-          .write.mode("append").partitionBy("gen").parquet(adjPath(dir))
-        val newLedger = ledger
-          .join(broadcast(del), Seq("id"), "left_anti")
-          .join(owners, Seq("id"), "left_anti")
-          .unionByName(owners.withColumn("gen", lit(gen)))
-        Commits.commitVersion(newLedger, ledgerDir(dir), ledgerVersion)
+        Commits.commitGen(spark, store(dir), Some(read), rewritten, owners,
+          del.unionByName(owners))
         nDel
       }
     }
 
   /**
    * Merge-on-read compaction: rewrite every LIVE adjacency list into
-   * one fresh generation (max-on-disk + 1 — a crashed compaction's
-   * number is never reused), swap the ledger all-or-nothing, then
-   * prune dead generation directories. Cost ∝ live edges, paid on
-   * schedule instead of per drain. Returns directories pruned.
+   * one fresh generation and prune the dead ones
+   * ([[Commits.compactGens]]). Cost ∝ live edges, paid on schedule
+   * instead of per drain. Returns directories pruned.
    */
   def compact(spark: SparkSession, dir: String): Int =
-    Commits.withClaim(spark, dir) {
-      val live = edges(spark, dir).localCheckpoint()
-      val gen = maxGenOnDisk(spark, dir) + 1
-      live.withColumn("gen", lit(gen))
-        .sortWithinPartitions("id")
-        .write.mode("append").partitionBy("gen").parquet(adjPath(dir))
-      val (ledgerVersion, ledger) =
-        Commits.readVersioned(spark, ledgerDir(dir))
-          .getOrElse(sys.error(s"no committed ledger under ${ledgerDir(dir)}"))
-      Commits.commitVersion(
-        ledger.select(col("id")).withColumn("gen", lit(gen)),
-        ledgerDir(dir), ledgerVersion)
-      val p = new Path(adjPath(dir))
-      val fs = fsOf(spark, p)
-      val dead = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter { d =>
-          d.getName.startsWith("gen=") &&
-            scala.util.Try(d.getName.stripPrefix("gen=").toInt).toOption
-              .exists(_ < gen)
-        }
-      dead.foreach(fs.delete(_, true))
-      dead.length
-    }
+    Commits.withClaim(spark, dir)(Commits.compactGens(spark, store(dir)))
 }

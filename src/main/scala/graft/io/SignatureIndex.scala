@@ -34,8 +34,10 @@ import graft.ops.Dedup
  * subsequent operation reads them from the store — callers cannot
  * drift.
  *
- * Concurrency contract: single writer (one ingest pipeline owns the
- * index), many readers — the same contract as the reference's
+ * Concurrency contract: writers (append/compact/delete/ingestBatch)
+ * serialize under the store's drain claim ([[Commits.withClaim]]), so
+ * a concurrent writer fails visibly; readers take no claim — the same
+ * single-writer, many-reader contract as the reference's
  * overwrite-per-run layers. Appends rely on Spark's parquet commit
  * protocol; a crashed append leaves uncommitted temp files that
  * parquet readers ignore.
@@ -121,12 +123,13 @@ object SignatureIndex {
    * healed by the next writer ([[ensureLive]]); readers resolve the
    * window without touching it.
    */
-  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
-    ensureLive(spark, dir)
-    val m = meta(spark, dir)
-    Commits.rewrite(spark, sigsDirs(dir), "compact")(
-      _.repartitionByRange(numFiles, col(m.idCol)).sortWithinPartitions(m.idCol))
-  }
+  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit =
+    Commits.withClaim(spark, dir) {
+      ensureLive(spark, dir)
+      val m = meta(spark, dir)
+      Commits.rewrite(spark, sigsDirs(dir), "compact")(
+        _.repartitionByRange(numFiles, col(m.idCol)).sortWithinPartitions(m.idCol))
+    }
 
   /**
    * Remove docs from the index — the takedown / right-to-be-forgotten
@@ -140,15 +143,17 @@ object SignatureIndex {
    * doc — equivalent to an index rebuilt from the corpus minus the
    * deleted docs (signatures are per-doc, so dropping rows IS the
    * rebuild; spec-pinned). Crash-safe via the same swap as
-   * [[compact]]; serialize with appends (single-writer contract).
+   * [[compact]], under the same claim.
    */
   def delete(deletedIds: DataFrame, dir: String): Unit = {
     val spark = deletedIds.sparkSession
-    ensureLive(spark, dir)
-    val m = meta(spark, dir)
-    Commits.rewrite(spark, sigsDirs(dir), "delete")(_.join(
-      broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
-      Seq(m.idCol), "left_anti"))
+    Commits.withClaim(spark, dir) {
+      ensureLive(spark, dir)
+      val m = meta(spark, dir)
+      Commits.rewrite(spark, sigsDirs(dir), "delete")(_.join(
+        broadcast(deletedIds.select(col(deletedIds.columns.head).as(m.idCol))),
+        Seq(m.idCol), "left_anti"))
+    }
   }
 
   /** Near-dup pairs between `newDocs` and everything indexed at `dir`
@@ -186,12 +191,15 @@ object SignatureIndex {
     * parameters come from the stored meta — a batch CANNOT be appended
     * with drifted parameters. Call after a successful [[probe]]. */
   def append(newDocs: DataFrame, textCol: String, dir: String): Unit = {
-    ensureLive(newDocs.sparkSession, dir)
-    val m = meta(newDocs.sparkSession, dir)
-    Dedup.minhashSignatures(
-      newDocs, textCol, m.idCol, m.numHashes, m.shingleWords, m.kind)
-      .sortWithinPartitions(m.idCol)
-      .write.mode("append").parquet(sigsPath(dir))
+    val spark = newDocs.sparkSession
+    Commits.withClaim(spark, dir) {
+      ensureLive(spark, dir)
+      val m = meta(spark, dir)
+      Dedup.minhashSignatures(
+        newDocs, textCol, m.idCol, m.numHashes, m.shingleWords, m.kind)
+        .sortWithinPartitions(m.idCol)
+        .write.mode("append").parquet(sigsPath(dir))
+    }
   }
 
   /** The daily-batch operation: probe the CURRENT index for the new
@@ -203,9 +211,10 @@ object SignatureIndex {
       newDocs: DataFrame,
       textCol: String,
       dir: String,
-      threshold: Double): DataFrame = {
-    val pairs = probe(allDocs, newDocs, textCol, dir, threshold).localCheckpoint()
-    append(newDocs, textCol, dir)
-    pairs
-  }
+      threshold: Double): DataFrame =
+    Commits.withClaim(newDocs.sparkSession, dir) {
+      val pairs = probe(allDocs, newDocs, textCol, dir, threshold).localCheckpoint()
+      append(newDocs, textCol, dir)
+      pairs
+    }
 }

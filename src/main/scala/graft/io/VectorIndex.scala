@@ -436,15 +436,7 @@ object VectorIndex {
     * (deterministic tag + overwrite + marker-last commit). */
   def append(newVecs: DataFrame, dir: String): Unit = {
     val spark = newVecs.sparkSession
-    Commits.withClaim(spark, dir)(appendLocked(newVecs, dir))
-  }
-
-  /** [[append]] for callers that ALREADY hold the store's drain claim
-    * (the streaming maintainers serialize their whole drain — silver,
-    * decisions, index — under one claim; re-acquiring here would
-    * self-conflict). */
-  private[graft] def appendLocked(newVecs: DataFrame, dir: String): Unit = {
-    val spark = newVecs.sparkSession
+    Commits.withClaim(spark, dir) {
     ensureLive(spark, dir)
     val m = meta(spark, dir)
     requireDims(newVecs, m.vecCol, m.dims, "append batch")
@@ -455,7 +447,7 @@ object VectorIndex {
       .select(col(m.idCol), col("cluster").as("list_id"))
     val data = newVecs.select(col(m.idCol), col(m.vecCol)).join(assigned, Seq(m.idCol))
     writeBatch(data, listsPath(dir), Commits.batchTag(newVecs, m.idCol), spark)
-  }
+  } }
 
   /** Rewrite the whole lists store as ONE committed `__base__` batch
     * holding `data`, via [[Commits.swap]] — the shared tail of

@@ -53,7 +53,8 @@ import graft.ops.{Dedup, Spans}
  * Same single-writer / many-reader contract and crash-safe compaction
  * ([[Commits.swap]] of the ONE `store/` root: readers resolve the
  * crash window read-only, the next writer heals it) as the signature
- * store; serialize [[compact]] with appends.
+ * store: every writer (append/compact/delete/ingestBatch) runs under
+ * the store's drain claim ([[Commits.withClaim]]).
  */
 object WindowIndex {
 
@@ -204,22 +205,24 @@ object WindowIndex {
     * them. Idempotent per doc set (deterministic tag + overwrite). */
   def append(newDocs: DataFrame, textCol: String, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    ensureLive(spark, dir)
-    val m = meta(spark, dir)
-    writeDocs(newDocs, textCol, dir, Commits.batchTag(newDocs, m.idCol), m)
+    Commits.withClaim(spark, dir) {
+      ensureLive(spark, dir)
+      val m = meta(spark, dir)
+      writeDocs(newDocs, textCol, dir, Commits.batchTag(newDocs, m.idCol), m)
+    }
   }
 
   /** Re-aggregate the LIVE partitions to one (hh, cnt) row per hash in
     * `numFiles` hash-range-clustered files (plus the compacted ledger),
     * swapped in crash-safely. Orphan partitions of crashed appends are NOT
-    * carried over — compaction is also the garbage collector. Must not
-    * run concurrently with an append (single-writer contract). */
-  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
-    ensureLive(spark, dir)
-    rewriteStore(spark, dir,
-      counts(spark, dir).groupBy(col("hh")).agg(sum(col("cnt")).as("cnt")),
-      processedIds(spark, dir), numFiles)
-  }
+    * carried over — compaction is also the garbage collector. */
+  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit =
+    Commits.withClaim(spark, dir) {
+      ensureLive(spark, dir)
+      rewriteStore(spark, dir,
+        counts(spark, dir).groupBy(col("hh")).agg(sum(col("cnt")).as("cnt")),
+        processedIds(spark, dir), numFiles)
+    }
 
   /** Rewrite the whole store as ONE `__base__` batch holding
     * (`newCounts`, `newIds`) via [[Commits.swap]] — the shared tail of
@@ -253,11 +256,12 @@ object WindowIndex {
    * live docs keep their residual count, so a span duplicated between
    * a deleted doc and a survivor correctly stops being "duplicated"
    * only if the survivor was its sole other occurrence — equivalent to
-   * a rebuild on corpus-minus-deleted (spec-pinned). Single-writer
-   * contract: serialize with appends/compactions.
+   * a rebuild on corpus-minus-deleted (spec-pinned). Runs under the
+   * store's claim, serialized with appends and compactions.
    */
   def delete(deletedDocs: DataFrame, textCol: String, dir: String): Unit = {
     val spark = deletedDocs.sparkSession
+    Commits.withClaim(spark, dir) {
     ensureLive(spark, dir)
     val m = meta(spark, dir)
     // A duplicated id in the takedown request would subtract that doc's
@@ -283,7 +287,7 @@ object WindowIndex {
     rewriteStore(spark, dir, remaining,
       processedIds(spark, dir).join(broadcast(delIds), Seq(m.idCol), "left_anti"),
       liveCountFiles)
-  }
+  } }
 
   /** [[compact]] only when committed batches have fragmented the store
     * past `2 × targetFiles` counts files ([[Commits.fragmented]]) —
@@ -302,9 +306,10 @@ object WindowIndex {
     * result reflects the pre-append index), and the whole call is
     * REPLAY-SAFE: a crashed earlier attempt left only an invisible
     * orphan, which the retry overwrites. */
-  def ingestBatch(newDocs: DataFrame, textCol: String, dir: String): DataFrame = {
-    val spans = probe(newDocs, textCol, dir).localCheckpoint()
-    append(newDocs, textCol, dir)
-    spans
-  }
+  def ingestBatch(newDocs: DataFrame, textCol: String, dir: String): DataFrame =
+    Commits.withClaim(newDocs.sparkSession, dir) {
+      val spans = probe(newDocs, textCol, dir).localCheckpoint()
+      append(newDocs, textCol, dir)
+      spans
+    }
 }

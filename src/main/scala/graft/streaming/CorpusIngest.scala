@@ -220,7 +220,7 @@ object CorpusIngest {
           delta, idCol, vecCol, indexDir, threshold, nprobe)
         .localCheckpoint()
       if (!delta.isEmpty)
-        graft.io.VectorIndex.appendLocked(
+        graft.io.VectorIndex.append(
           delta.select(col(idCol), col(vecCol)), indexDir)
       d
     }

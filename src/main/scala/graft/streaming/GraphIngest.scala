@@ -14,7 +14,7 @@ import graft.io.{Commits, GraphIndex}
  * drain advances them into silver exactly once
  * ([[IngestStream.drainFresh]]), and the not-yet-indexed silver files
  * search-then-link into the standing graph
- * ([[GraphIndex.ingestLocked]] — one shared-rounds beam search per
+ * ([[GraphIndex.ingestBatch]] — one shared-rounds beam search per
  * drain, touched-nodes-only adjacency rewrite).
  *
  * Ledger discipline (the [[SearchIngest]] folded-files record, the
@@ -23,7 +23,7 @@ import graft.io.{Commits, GraphIndex}
  * record — every drain reads only new files (O(drain), never an
  * O(silver) rescan), and the folded record commits LAST so a crash
  * anywhere replays the same files, where the graph ledger's id
- * anti-join (inside [[GraphIndex.ingestLocked]]) heals the replay to a
+ * anti-join (inside [[GraphIndex.ingestBatch]]) heals the replay to a
  * no-op. The whole drain serializes under the index claim; a
  * concurrent drain fails visibly on the claim or a version CAS.
  *
@@ -74,7 +74,7 @@ object GraphIngest {
           // folded record committed below survive it)
           val cnt = batch.count()
           // the α policy rides the bootstrap into the index meta;
-          // every later drain's ingestLocked reads it from there and
+          // every later drain's ingestBatch reads it from there and
           // RobustPrunes its merges (GraphIndex.Meta)
           GraphIndex.build(batch, idCol, vecCol, indexDir, dims, k,
             planesPerBand, bands, maxBucketSize, nEntries, beamWidth,
@@ -105,7 +105,7 @@ object GraphIngest {
               s"${drift.mkString("; ")} — rebuild to change the policy")
           // corpus for the searches = standing silver ∪ batch; the
           // beam's isin point lookups prune this scan per round
-          GraphIndex.ingestLocked(spark, indexDir,
+          GraphIndex.ingestBatch(spark, indexDir,
             spark.read.schema(schema).parquet(silverDir)
               .select(col(idCol), col(vecCol)),
             batch, maxBatchLink)

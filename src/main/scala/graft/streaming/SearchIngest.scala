@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -11,25 +9,15 @@ import graft.io.Commits
 /**
  * Streaming maintenance of the durable positional search index — the
  * landing-zone twin of [[graft.ops.Search.upsertIndex]], built
- * MERGE-ON-READ so a drain never rewrites the standing postings:
+ * MERGE-ON-READ so a drain never rewrites the standing postings. The
+ * postings are a generational store (the protocol, its crash contract
+ * and its compaction: [[graft.io.Commits]], "generational store"):
  *
- *  - postings append under `gen=<n>` partitions (one generation per
- *    drain). The generation number is max(on-disk gen)+1 — derived
- *    from the postings DIRECTORIES, not the ledger — so a crashed
- *    writer's orphan generation is never reused: orphans stay
- *    invisible (the ledger never points at them) until compaction
- *    prunes them;
- *  - a doc LEDGER (doc_id, text_hash, gen — ids and hashes only,
- *    never text) names each document's LIVE generation. It is a
- *    VERSIONED store ([[graft.io.Commits.commitVersion]]):
- *    each rewrite stages into a hidden tmp dir and renames into
- *    `ledger/v=<n>` — a crash mid-swap can no longer lose the whole
- *    doc→generation mapping (the previous version is intact until the
- *    new one is complete), and a concurrent drain that raced this one
- *    fails VISIBLY on the version CAS instead of silently clobbering
- *    the winner's ledger. The ledger commits AFTER the postings, so a
- *    crash in between leaves an orphan generation the reader never
- *    sees;
+ *  - each drain appends its postings as one generation
+ *    (`postings/gen=<n>/tbucket=<b>`), then commits its docs into the
+ *    doc LEDGER (doc_id, text_hash, gen — ids and hashes only, never
+ *    text), whose version CAS makes a racing drain fail VISIBLY
+ *    instead of silently clobbering the winner's ledger;
  *  - a FOLDED record (same versioned protocol, `folded/v=<n>`) is the
  *    durable list of silver files already folded into the index. The
  *    drain batch is silver-files MINUS this record — durable, so a
@@ -54,31 +42,21 @@ import graft.io.Commits
  */
 object SearchIngest {
 
-  private def ledgerDir(indexDir: String) = s"$indexDir/ledger"
   private def foldedDir(indexDir: String) = s"$indexDir/folded"
-  private def postingsDir(indexDir: String) = s"$indexDir/postings"
 
-  /** Highest generation present ON DISK (committed or orphaned), or -1
-    * on an empty store — the collision-free source of the next gen. */
-  private def maxGenOnDisk(spark: SparkSession, indexDir: String): Int = {
-    val p = new Path(postingsDir(indexDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("gen="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("gen=").toInt).toOption)
-      .reduceOption(_ max _).getOrElse(-1)
+  /** Postings partitioned by (gen, tbucket), keyed by doc_id. */
+  private def store(indexDir: String) = {
+    val postings = s"$indexDir/postings"
+    Commits.GenStore(postings, s"$indexDir/ledger", "doc_id",
+      _.read.parquet(postings), _.write.partitionBy("gen", "tbucket"))
   }
 
   /** The live positional index: postings restricted to each doc's
     * ledger generation (broadcast semi-structure — ledger is ids-only).
     * Columns: (token, doc_id, positions, tf) + the layout's `tbucket`. */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val ledger = Commits.readVersioned(spark, ledgerDir(indexDir))
-      .getOrElse(sys.error(s"no committed ledger under ${ledgerDir(indexDir)}"))
-      ._2.select(col("doc_id"), col("gen"))
-    spark.read.parquet(postingsDir(indexDir))
-      .join(broadcast(ledger), Seq("doc_id", "gen"), "left_semi")
+    val s = store(indexDir)
+    Commits.liveRows(spark, s, Commits.committedLedger(spark, s)._2)
   }
 
   /**
@@ -128,37 +106,23 @@ object SearchIngest {
         .agg(max(struct(col("__h"), col("__text"))).as("__m"))
         .select(col("doc_id"), col("__m.__text").as("__text"),
           col("__m.__h").as("__h"))
-      val ledgerRead = Commits.readVersioned(spark, ledgerDir(indexDir))
-      val ledgerVersion = ledgerRead.map(_._1).getOrElse(-1)
-      val ledger = ledgerRead.map(_._2).getOrElse(
-        spark.range(0).select(col("id").as("doc_id"),
-          col("id").as("text_hash"), col("id").cast("int").as("gen")))
+      val s = store(indexDir)
+      val read = Commits.readLedger(spark, s) // None on the first drain
       // (id, hash) delta: new docs AND re-crawled changed text
-      val delta = docs
-        .join(broadcast(ledger.select(col("doc_id"),
-          col("text_hash").as("__lh"))), Seq("doc_id"), "left_outer")
-        .filter(col("__lh").isNull || col("__lh") =!= col("__h"))
-        .select(col("doc_id"), col("__text"), col("__h"))
+      val delta = read.fold(docs) { case (_, ledger) => docs
+          .join(broadcast(ledger.select(col("doc_id"),
+            col("text_hash").as("__lh"))), Seq("doc_id"), "left_outer")
+          .filter(col("__lh").isNull || col("__lh") =!= col("__h"))
+          .select(col("doc_id"), col("__text"), col("__h")) }
         .localCheckpoint() // sized ∝ the drain; feeds postings AND ledger
       val nDelta = delta.count()
-      if (nDelta > 0) {
-        val gen = maxGenOnDisk(spark, indexDir) + 1
-        graft.ops.Search.invertedIndex(
-            delta.select(col("doc_id"), col("__text")), "__text", "doc_id")
-          .withColumn("tbucket", pmod(xxhash64(col("token")), lit(buckets)))
-          .withColumn("gen", lit(gen))
-          .write.mode("append")
-          .partitionBy("gen", "tbucket")
-          .parquet(postingsDir(indexDir))
-        // ledger SECOND: a crash before this point leaves gen an
-        // invisible orphan; the version CAS makes a racing drain fail
-        // visibly instead of silently dropping this drain's mapping
-        val newLedger = ledger
-          .join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .unionByName(delta.select(col("doc_id"),
-            col("__h").as("text_hash"), lit(gen).as("gen")))
-        Commits.commitVersion(newLedger, ledgerDir(indexDir), ledgerVersion)
-      }
+      if (nDelta > 0)
+        Commits.commitGen(spark, s, read,
+          graft.ops.Search.invertedIndex(
+              delta.select(col("doc_id"), col("__text")), "__text", "doc_id")
+            .withColumn("tbucket", pmod(xxhash64(col("token")), lit(buckets))),
+          delta.select(col("doc_id"), col("__h").as("text_hash")),
+          delta.select(col("doc_id")))
       // folded record LAST (even on an all-unchanged batch): a crash
       // before this line re-scans the batch next drain, where the hash
       // delta is empty and this commit heals forward
@@ -169,48 +133,14 @@ object SearchIngest {
 
   /**
    * Merge-on-read compaction — fold every LIVE posting into one fresh
-   * generation and drop the dead ones (the executor the q230 planner
-   * decides WHEN to run). Crash-safe by the same ledger-last protocol
-   * as a drain: the consolidated generation is written first under a
-   * NEVER-REUSED number (max on-disk gen + 1, so a crashed compaction
-   * at gen N can never leave orphan partitions that a later writer at
-   * the same N would make live), the versioned-ledger swap makes it
-   * live all-or-nothing (readers join on (doc, gen) — they see either
-   * all-old or all-new, and the previous ledger version survives until
-   * the new one is complete), and only THEN are dead generation
-   * directories and stale staging dirs pruned. Cost ∝ live postings —
-   * the rewrite merge-on-read defers, paid once, on schedule, instead
-   * of on every drain.
+   * generation and drop the dead ones and the orphans
+   * ([[graft.io.Commits.compactGens]]; the executor the q230 planner
+   * decides WHEN to run). Cost ∝ live postings — the rewrite
+   * merge-on-read defers, paid once, on schedule, instead of on every
+   * drain.
    *
    * Returns the number of generation directories pruned.
    */
   def compactIndex(spark: SparkSession, indexDir: String): Int =
-    Commits.withClaim(spark, indexDir) {
-    val live = readIndex(spark, indexDir)
-      .localCheckpoint() // sever lineage from the dirs being replaced
-    val gen = maxGenOnDisk(spark, indexDir) + 1
-    live.drop("gen")
-      .withColumn("gen", lit(gen))
-      .write.mode("append")
-      .partitionBy("gen", "tbucket")
-      .parquet(postingsDir(indexDir))
-    val (ledgerVersion, ledger) =
-      Commits.readVersioned(spark, ledgerDir(indexDir))
-        .getOrElse(sys.error(s"no committed ledger under ${ledgerDir(indexDir)}"))
-    Commits.commitVersion(
-      ledger.select(col("doc_id"), col("text_hash"), lit(gen).as("gen")),
-      ledgerDir(indexDir), ledgerVersion)
-    // dead generations are now unreachable — prune their directories
-    val pPath = new Path(postingsDir(indexDir))
-    val fs = pPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dead = fs.listStatus(pPath)
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith("gen=") && n != s"gen=$gen"
-      }
-    dead.foreach(fs.delete(_, true))
-    dead.length
-  }
+    Commits.withClaim(spark, indexDir)(Commits.compactGens(spark, store(indexDir)))
 }

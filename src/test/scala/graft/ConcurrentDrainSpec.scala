@@ -166,6 +166,28 @@ class ConcurrentDrainSpec extends AnyFunSuite {
     assert(Commits.withClaim(spark, store)(44) == 44)
   }
 
+  test("withClaim is re-entrant for its own thread only; the outermost call releases") {
+    val store = TestSpark.tmpDir("commits_claim_nested")
+    val claim = new Path(store, "_drain.claim")
+    def otherThread(): Throwable = {
+      var err: Throwable = null
+      val t = new Thread(() =>
+        try Commits.withClaim(spark, store)(()) catch { case e: Throwable => err = e })
+      t.start(); t.join()
+      err
+    }
+    val got = Commits.withClaim(spark, store) {
+      val inner = Commits.withClaim(spark, store)(Commits.withClaim(spark, store)(7))
+      assert(fsOf(store).exists(claim), "a nested exit must not release the claim")
+      assert(otherThread().isInstanceOf[Commits.ConcurrentWriteException],
+        "another thread must not enter a held claim")
+      inner
+    }
+    assert(got == 7)
+    assert(!fsOf(store).exists(claim), "the outermost exit releases")
+    assert(otherThread() == null)
+  }
+
   // ------------------------------------------------------------ SearchIngest
 
   test("search index heals a crash between silver drain and index fold") {

@@ -290,4 +290,57 @@ class GraphIndexSpec extends AnyFunSuite {
     buildAt(plainDir, standing)
     assert(GraphIndex.meta(spark, plainDir).alphaNum == 0)
   }
+
+  test("edge-free build: a crashed drain's orphan stays invisible, its number is never reused") {
+    import spark.implicits._
+    val dir = TestSpark.tmpDir("graph_index_single_crash") + "/idx"
+    buildAt(dir, emb.filter(col("vec_id") === 0))
+    assert(GraphIndex.edges(spark, dir).count() == 0)
+    // a drain that crashed after writing its rows at the next number on
+    // disk, before the ledger CAS: an edge 0 → 1 of a vector no ledger
+    // names
+    val adj = new Path(s"$dir/adj")
+    val next = adj.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(adj).map(_.getPath.getName).filter(_.startsWith("gen="))
+      .map(_.stripPrefix("gen=").toInt).maxOption.fold(0)(_ + 1)
+    Seq((0L, 1L, 900000L)).toDF("id", "nbr", "cos_micro")
+      .withColumn("gen", lit(next))
+      .write.mode("append").partitionBy("gen").parquet(s"$dir/adj")
+    assert(GraphIndex.edges(spark, dir).count() == 0,
+      s"the orphan at gen=$next must stay invisible")
+    // a real drain skips the orphan's number
+    assert(GraphIndex.ingestBatch(spark, dir, emb.filter(col("vec_id").isin(0L, 1L)),
+      emb.filter(col("vec_id") === 1)) == 1L)
+    val liveGens = Commits.readVersioned(spark, s"$dir/ledger").get._2
+      .select("gen").distinct().collect().map(_.getInt(0)).toSet
+    assert(!liveGens.contains(next), s"gen=$next must never become live (got $liveGens)")
+    assert(GraphIndex.edges(spark, dir).filter(col("cos_micro") === 900000L).count() == 0)
+  }
+
+  test("an edge-free graph reads empty and accepts a drain: single-vector build, delete-all + compact") {
+    import spark.implicits._
+    def drainIsFindable(dir: String, standing: Seq[Long]): Unit = {
+      assert(GraphIndex.edges(spark, dir).count() == 0)
+      val batchIds = Seq(40L, 41L)
+      val corpus = emb.filter(col("vec_id").isin(standing ++ batchIds: _*))
+      assert(GraphIndex.ingestBatch(spark, dir, corpus,
+        emb.filter(col("vec_id").isin(batchIds: _*))) == 2L)
+      val top = GraphIndex.searchBatch(spark, dir, corpus,
+          emb.filter(col("vec_id").isin(batchIds: _*))
+            .select(col("vec_id").as("query_id"), col("embedding")), "query_id", k = 1)
+        .select("query_id", "vec_id").as[(Long, Long)].collect().toMap
+      assert(top == batchIds.map(i => i -> i).toMap,
+        s"each drained vector must find itself (got $top)")
+    }
+    val single = TestSpark.tmpDir("graph_index_single") + "/idx"
+    buildAt(single, emb.filter(col("vec_id") === 0))
+    drainIsFindable(single, Seq(0L))
+
+    val emptied = TestSpark.tmpDir("graph_index_emptied") + "/idx"
+    buildAt(emptied, emb.filter(col("vec_id") < 20))
+    assert(GraphIndex.edges(spark, emptied).count() > 0)
+    assert(GraphIndex.delete(spark, emptied, (1L until 20L).toDF("vec_id")) == 19L)
+    GraphIndex.compact(spark, emptied)
+    drainIsFindable(emptied, Seq(0L))
+  }
 }

@@ -194,4 +194,16 @@ class SignatureIndexSpec extends AnyFunSuite {
         spark, TestSpark.tmpDir("sigidx_root") + "/nope", targetFiles = 2)
     }
   }
+
+  test("a direct append fails visibly while another writer holds the claim") {
+    val dir = TestSpark.tmpDir("sigidx_claim")
+    SignatureIndex.build(corpus, "text", "doc_id", dir)
+    graft.io.Commits.acquireClaim(spark, dir)
+    intercept[graft.io.Commits.ConcurrentWriteException] {
+      SignatureIndex.append(batch, "text", dir)
+    }
+    graft.io.Commits.forceReleaseClaim(spark, dir)
+    SignatureIndex.append(batch, "text", dir)
+    assert(SignatureIndex.signatures(spark, dir).count() == docs.count())
+  }
 }

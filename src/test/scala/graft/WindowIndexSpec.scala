@@ -343,4 +343,16 @@ class WindowIndexSpec extends AnyFunSuite {
       "post-heal report equals the full-corpus truth restricted to the batch")
     assert(state(dir) == state(ctlDir), "post-heal store equals the crash-free store")
   }
+
+  test("a direct append fails visibly while another writer holds the claim") {
+    val dir = TestSpark.tmpDir("winidx_claim")
+    WindowIndex.build(corpus, "text", "doc_id", dir, n = 3)
+    graft.io.Commits.acquireClaim(spark, dir)
+    intercept[graft.io.Commits.ConcurrentWriteException] {
+      WindowIndex.append(batch, "text", dir)
+    }
+    graft.io.Commits.forceReleaseClaim(spark, dir)
+    WindowIndex.append(batch, "text", dir)
+    assert(WindowIndex.processedIds(spark, dir).count() == docs.count())
+  }
 }
