@@ -312,7 +312,7 @@ object GraphIndex {
       // (cos_micro desc, nbr asc) — the stored graph's micro-integer
       // rank order, applied through the same pruning kernel
       val fwd = prune(
-        walks.select(col("query_id").as("id"),
+        walks.select(col("__bq").as("id"),
             col(m.idCol).cast("long").as("nbr"),
             round(col("cosine_sim") * 1e6, 0).cast("long").as("cos_micro"))
           .unionByName(internal.select(col("query_id").as("id"),

@@ -3,8 +3,9 @@ package graft.io
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.ops.{Clustering, Similarity}
 
@@ -24,9 +25,11 @@ import graft.ops.{Clustering, Similarity}
  *    time: file listing, IO, and scan all shrink by ~nprobe/nlist.
  *    This is the storage-level realization of what q29/q61 do with an
  *    in-memory assignment join. [[probeBatch]] is the query-SET form:
- *    every query ranks its own nprobe lists, the scan covers the
- *    UNION of probed lists (still a static partition filter), and one
- *    job returns per-query rankings;
+ *    one id-only collect ranks every query's own nprobe lists (and
+ *    carries the dims check), then ONE scan of the UNION of probed
+ *    lists (still a static partition filter) scores and ranks every
+ *    query — the fixed per-call cost is that collect, read with the
+ *    stored schemas (no footer inference);
  *  - `append` assigns a new batch against the STORED centroids (the
  *    quantizer is frozen at build time — the standard IVF contract;
  *    retrain = rebuild) and lands it as a COMMITTED BATCH: the data
@@ -88,58 +91,52 @@ object VectorIndex {
   private def resolved(spark: SparkSession, d: Commits.SwapDirs): Path =
     Commits.resolve(fs(spark, d.live), d)
 
-  /** Fail loudly on any vector whose width differs from the index
-    * dims — one cheap aggregate over the (batch-sized) frame. */
-  private def requireDims(df: DataFrame, vecCol: String, dims: Int, what: String): Unit = {
-    val bad = df.filter(size(col(vecCol)) =!= dims).limit(1).count()
-    require(bad == 0, s"$what contains vectors whose width != index dims ($dims)")
-  }
+  /** TRUE for a vector the index cannot score: NULL (ANSI `size(NULL)`
+    * is NULL, so a bare width test would pass it) or width != dims. */
+  private def malformed(v: Column, dims: Int): Column =
+    coalesce(size(v) =!= dims, lit(true))
+
+  private def requireWellFormed(ok: Boolean, what: String, dims: Int): Unit =
+    require(ok, s"$what contains null vectors or vectors whose width != index dims ($dims)")
+
+  /** Fail loudly on any null vector or vector whose width differs from
+    * the index dims — one short-circuiting scan of the (batch-sized)
+    * frame. */
+  private def requireDims(df: DataFrame, vecCol: String, dims: Int, what: String): Unit =
+    requireWellFormed(
+      df.filter(malformed(col(vecCol), dims)).limit(1).count() == 0, what, dims)
 
   /** Tags of the committed batches under the `lists` dir — the only
     * batches a reader sees; orphans of crashed appends stay invisible. */
   private def liveTags(spark: SparkSession, lists: Path): Seq[String] =
     Commits.committedBatches(spark, lists.toString).map(Commits.tagOf)
 
-  /** Does any live batch hold at least one parquet file? (An index
-    * whose vectors were all deleted has committed batches but no
-    * files — `spark.read.parquet` would die on schema inference.) */
-  private def liveHasFiles(spark: SparkSession, lists: Path, tags: Seq[String]): Boolean =
-    tags.exists { t =>
-      val p = new Path(lists, s"batch=$t")
-      val f = fs(spark, p)
-      val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-
   /** The live stored vectors (idCol, vecCol, list_id) — committed
-    * batches only; empty-but-valid frame (schema from meta) when every
-    * vector has been deleted. The `batch`/`list_id` predicates are
+    * batches only, read with the stored schema (`Meta.schemaDdl` plus
+    * the `batch`/`list_id` partition columns): no footer inference, so
+    * building the frame launches no job, and an index whose vectors
+    * were all deleted (committed batches, no files) reads as an empty
+    * frame of that schema. The `batch`/`list_id` predicates are
     * partition filters, so callers layering a `list_id` IN-filter on
     * top keep planning-time directory pruning. Read-only: the lists dir
     * is [[resolved]] once. */
   private def liveLists(spark: SparkSession, dir: String, m: Meta): DataFrame = {
     val lists = resolved(spark, listsDirs(dir))
     val tags = liveTags(spark, lists)
-    if (tags.isEmpty || !liveHasFiles(spark, lists, tags))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(m.schemaDdl).add("list_id", LongType))
-    else {
-      // retired (batch, list) partitions are superseded by a newer
-      // maintenance batch — excluded with partition-column predicates,
-      // so directory pruning still plans around them
-      val retired = liveRetirements(spark, lists, tags)
-      val keep = retired.foldLeft(col("batch").isin(tags: _*)) {
+    // retired (batch, list) partitions are superseded by a newer
+    // maintenance batch — excluded with partition-column predicates,
+    // so directory pruning still plans around them
+    val keep = liveRetirements(spark, lists, tags)
+      .foldLeft(col("batch").isin(tags: _*)) {
         case (p, (t, ls)) =>
           p && !(col("batch") === t && col("list_id").isin(ls: _*))
       }
-      spark.read.parquet(lists.toString)
-        .filter(keep)
-        .drop("batch")
-    }
+    spark.read
+      .schema(StructType.fromDDL(m.schemaDdl)
+        .add("batch", StringType).add("list_id", LongType))
+      .parquet(lists.toString)
+      .filter(keep)
+      .drop("batch")
   }
 
   /** The ids currently stored in the index — the processed-vectors
@@ -226,40 +223,58 @@ object VectorIndex {
       j.num("iters"), j.str("schema"))
   }
 
+  private val centroidSchema = StructType.fromDDL("cid BIGINT, cemb ARRAY<DOUBLE>")
+
   /** The stored centroids as (cid, cemb) — nlist rows, from the
-    * [[resolved]] centroids dir. */
+    * [[resolved]] centroids dir, read with their fixed schema (no
+    * footer-inference job). */
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(resolved(spark, centsDirs(dir)).toString)
+    spark.read.schema(centroidSchema)
+      .parquet(resolved(spark, centsDirs(dir)).toString)
 
   /**
-   * The list scan every query-set probe shares: each query ranks the
-   * centroids `cents` and keeps its `nprobe` best lists (per-query
-   * window over a queries×nlist frame — tiny). The (query_id, list_id,
-   * __q) pairs, ≤ queries × nprobe rows, are materialized once and
-   * read twice: their list-id union is a static, planning-time
-   * partition filter on `lists` (≤ nlist literal ids), and a broadcast
-   * join on list_id scores each candidate only against the queries
-   * that probed its list. Output: (query_id, idCol, cosine_sim).
+   * The list scan every query-set probe shares. Each query ranks the
+   * centroids `cents` (per-query window over the queries×nlist frame
+   * of ids and scores, kept in one partition so the window needs no
+   * shuffle) and ONE collect
+   * brings back only its `nprobe` winners as (query_id, list_id,
+   * malformed) — ids and a flag, ≤ queries × nprobe rows; the driver
+   * never holds a vector. The flag is the dims check, folded into that
+   * collect: a null or wrong-width query fails here, before any list
+   * is read. The winners' list-id union is a static, planning-time
+   * partition filter on `lists` (≤ nlist literal ids); each query row
+   * fans out to its own winners (an id map literal, so no join builds
+   * the pairs) and the (query_id, __q, list_id) pairs are broadcast on
+   * list_id, so each candidate is scored only against the queries that
+   * probed its list. A null query id probes nothing. Output:
+   * (query_id, idCol, cosine_sim).
    */
   private def scoreProbed(
       q: DataFrame, cents: DataFrame, lists: DataFrame, m: Meta,
       nprobe: Int): DataFrame = {
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__csim").desc, col("cid").asc)
-    val pairs = cents
+    val spark = q.sparkSession
+    val wq = Window.partitionBy("query_id").orderBy(col("__csim").desc, col("cid").asc)
+    val ranked = cents
       .crossJoin(broadcast(q))
-      .select(col("query_id"), col("cid"), col("__q"),
+      .select(col("query_id"), col("cid"),
+        malformed(col("__q"), m.dims).as("__bad"),
         Similarity.cosine(col("cemb").cast("array<double>"), col("__q")).as("__csim"))
+      .coalesce(1)
       .withColumn("__rn", row_number().over(wq))
       .filter(col("__rn") <= nprobe)
-      .select(col("query_id"), col("cid").as("list_id"), col("__q"))
-      .localCheckpoint()
-    val listIds = pairs.select("list_id").distinct().collect().map(_.getLong(0))
+      .select(col("query_id"), col("cid").as("list_id"), col("__bad"))
+    val won = ranked.collect()
+    requireWellFormed(!won.exists(_.getBoolean(2)), "probe queries", m.dims)
+    val listsOf = won.filterNot(_.isNullAt(0)).groupBy(_.get(0).toString)
+      .map { case (qid, rs) => qid -> rs.map(_.getLong(1)).toSeq }
+    val pairs = q.select(col("query_id"), col("__q"),
+      explode(element_at(typedlit(listsOf), col("query_id").cast("string")))
+        .as("list_id"))
     lists
-      .filter(col("list_id").isin(listIds: _*))
+      .filter(col("list_id").isin(won.map(_.getLong(1)).distinct: _*))
       .join(broadcast(pairs), "list_id")
       .select(col("query_id"), col(m.idCol),
-        Similarity.cosineFast(q.sparkSession, col(m.vecCol), col("__q"))
+        Similarity.cosineFast(spark, col(m.vecCol), col("__q"))
           .as("cosine_sim"))
   }
 
@@ -280,11 +295,12 @@ object VectorIndex {
       nprobe: Int): DataFrame = {
     val spark = queryDf.sparkSession
     val m = meta(spark, dir)
-    val nq = queryDf.limit(2).count()
-    require(nq == 1,
-      s"probe expects exactly one query row, got ${if (nq == 0) "none" else "2+"} — " +
+    // one short-circuiting collect: the row count AND the dims check
+    val shape = queryDf.select(malformed(col(m.vecCol), m.dims)).limit(2).collect()
+    require(shape.length == 1,
+      s"probe expects exactly one query row, got ${if (shape.isEmpty) "none" else "2+"} — " +
         "use probeBatch for query sets")
-    requireDims(queryDf, m.vecCol, m.dims, "probe query")
+    requireWellFormed(!shape.head.getBoolean(0), "probe query", m.dims)
     val q = queryDf.select(col(m.vecCol).as("__q"))
     val ranked = centroids(spark, dir)
       .crossJoin(broadcast(q))
@@ -304,11 +320,12 @@ object VectorIndex {
   }
 
   /**
-   * [[probe]] for a query SET — ONE job for N queries: each query
+   * [[probe]] for a query SET — one scan for N queries: each query
    * ranks its own `nprobe` lists and the scan covers the UNION of
-   * probed list directories ([[scoreProbed]]). Final ranking is the
-   * salted two-stage [[Similarity.perQueryTopK]]. Output: (query_id,
-   * rank, idCol, cosine_sim).
+   * probed list directories ([[scoreProbed]]; a null or wrong-width
+   * query fails there, eagerly). Final ranking is the salted two-stage
+   * [[Similarity.perQueryTopK]]. Output: (query_id, rank, idCol,
+   * cosine_sim).
    */
   def probeBatch(
       queries: DataFrame,
@@ -318,7 +335,6 @@ object VectorIndex {
       nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     val m = meta(spark, dir)
-    requireDims(queries, m.vecCol, m.dims, "probe queries")
     val q = queries.select(col(qidCol).as("query_id"), col(m.vecCol).as("__q"))
     val scored = scoreProbed(
       q, centroids(spark, dir), liveLists(spark, dir, m), m, nprobe)
@@ -343,7 +359,6 @@ object VectorIndex {
       nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     val m = meta(spark, dir)
-    requireDims(queries, m.vecCol, m.dims, "probe queries")
     val q = queries.select(col(qidCol).as("query_id"), col(m.vecCol).as("__q"))
     scoreProbed(q, centroids(spark, dir), liveLists(spark, dir, m), m, nprobe)
       .filter(col("cosine_sim") >= minCosine)
@@ -389,7 +404,6 @@ object VectorIndex {
     val m = meta(spark, dir)
     require(k >= 1 && nprobe >= 1 && escalations >= 0 && growth >= 1,
       "degenerate escalation geometry")
-    requireDims(queries, m.vecCol, m.dims, "probe queries")
     val q = queries.select(col(qidCol).cast("long").as("query_id"),
       col(m.vecCol).as("__q")).localCheckpoint() // re-read per rung
     var active = q.select("query_id").collect().map(_.getLong(0)).toSeq
@@ -445,7 +459,11 @@ object VectorIndex {
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
     val assigned = Clustering.assign(newVecs, m.idCol, m.vecCol, cents)
       .select(col(m.idCol), col("cluster").as("list_id"))
-    val data = newVecs.select(col(m.idCol), col(m.vecCol)).join(assigned, Seq(m.idCol))
+    // land the stored column types: every file matches `Meta.schemaDdl`,
+    // which is the schema every read applies
+    val stored = StructType.fromDDL(m.schemaDdl)
+    val data = newVecs.select(stored.map(f => col(f.name).cast(f.dataType)): _*)
+      .join(assigned, Seq(m.idCol))
     writeBatch(data, listsPath(dir), Commits.batchTag(newVecs, m.idCol), spark)
   } }
 

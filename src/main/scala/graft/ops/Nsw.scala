@@ -368,6 +368,8 @@ object Nsw {
       state: BeamState = null): DataFrame = {
     require(k >= 1 && nEntries >= 1 && beamWidth >= 1 && maxSteps >= 0,
       "degenerate geometry")
+    require(qidCol != idCol,
+      s"graphSearchBatch: query id column '$qidCol' must differ from corpus id column '$idCol'")
     val spark = corpus.sparkSession
     import scala.jdk.CollectionConverters._
     // the query batch rides the rounds as a broadcast local relation —
@@ -513,7 +515,7 @@ object Nsw {
       }
     }
     spark.createDataFrame(out.asJava, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id",
+      org.apache.spark.sql.types.StructField(qidCol,
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("rank",
         org.apache.spark.sql.types.LongType, nullable = false),

@@ -212,8 +212,12 @@ object CorpusIngest {
       }
     } else {
       graft.io.VectorIndex.ensureLive(spark, indexDir) // before the ledger read
+      // materialized once: the dedup probe, the emptiness test and the
+      // append (dims check, tag, write) all read it, and each re-run
+      // would rescan silver and every live list file
       val delta = silver.join(
         graft.io.VectorIndex.storedIds(spark, indexDir), Seq(idCol), "left_anti")
+        .localCheckpoint()
       // decide BEFORE appending: dup status is judged against the
       // pre-drain corpus, and the report must not see the delta itself
       val d = graft.ops.Similarity.incrementalSemanticDedup(

@@ -133,7 +133,7 @@ class GraphNavSpec extends AnyFunSuite {
           queries, "qid", g, k = 10, nEntries = 4, beamWidth = 16,
           maxSteps = 12,
           entries = Nsw.strideEntries(corpus, "vid", 16))
-        .select(col("query_id"), col("vid"))
+        .select(col("qid").as("query_id"), col("vid"))
         .join(exact, Seq("query_id", "vid")).count()
     val raw = Nsw.knnGraph(corpus, "vid", "emb",
       planesPerBand = 4, bands = 2, dims = 32, k = 6, minCosine = -1.0)

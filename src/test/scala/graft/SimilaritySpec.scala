@@ -774,6 +774,28 @@ class SimilaritySpec extends AnyFunSuite {
     assert(viaDirty == viaClean)
   }
 
+  test("graphSearchBatch names its query-id output qidCol; qidCol == idCol is rejected") {
+    val emb = TestSpark.table("embeddings")
+    val g = Nsw.knnGraph(emb, "vec_id", "embedding",
+      planesPerBand = 4, bands = 4, dims = 64, k = 8,
+      minCosine = -1.0, maxBucketSize = 1000)
+      .select(col("id"), col("nbr")).localCheckpoint()
+    val queries = emb.filter(col("vec_id").isin(0L, 7L))
+      .select(col("vec_id").as("qid"), col("embedding"))
+    def walk(qs: org.apache.spark.sql.DataFrame, qidCol: String) =
+      Nsw.graphSearchBatch(emb, "vec_id", "embedding", qs, qidCol, g,
+        k = 5, beamWidth = 8, maxSteps = 6)
+    val viaQid = walk(queries, "qid")
+    assert(viaQid.columns.toSeq == Seq("qid", "rank", "vec_id", "cosine_sim"))
+    val viaQueryId = walk(queries.withColumnRenamed("qid", "query_id"), "query_id")
+    assert(viaQid.select("qid", "rank", "vec_id", "cosine_sim").collect().toSeq ==
+      viaQueryId.collect().toSeq)
+    val err = intercept[IllegalArgumentException] {
+      walk(queries.withColumnRenamed("qid", "vec_id"), "vec_id")
+    }
+    assert(err.getMessage.contains("'vec_id'"))
+  }
+
   test("pointLookup: the id set reaches the parquet scan as a pushed filter") {
     val dir = TestSpark.tmpDir("point_lookup") + "/emb"
     TestSpark.table("embeddings")

@@ -51,6 +51,31 @@ object TestSpark {
     (fs.exists(d.live), fs.exists(d.prev), fs.exists(d.stage))
   }
 
+  /** `body`'s result and the number of Spark jobs it launched —
+    * counted by a listener over the jobs carrying this call's own local
+    * property (broadcast threads inherit it), the bus drained before
+    * the count is read. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val token = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == token) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, token)
+    try {
+      val r = body
+      org.apache.spark.TestBus.drain(sc)
+      (r, n.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
   /** Crash simulation for [[graft.io.Commits]]-versioned single-column
     * records: snapshot the current content so [[restoreVersion]] can
     * roll the record back to it (as if a later writer died before its

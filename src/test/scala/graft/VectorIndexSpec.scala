@@ -137,6 +137,63 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(got.toSeq == expected)
   }
 
+  test("probeBatch runs in at most 6 jobs; building the centroids or lists frame runs none") {
+    val dir = TestSpark.tmpDir("vecidx_jobs")
+    VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
+    VectorIndex.append(emb.filter($"vec_id" < 5)
+      .select(($"vec_id" + 900000L).as("vec_id"), $"embedding"), dir)
+    val (_, frameJobs) = TestSpark.jobsOf {
+      (VectorIndex.centroids(spark, dir), VectorIndex.storedIds(spark, dir))
+    }
+    assert(frameJobs == 0, s"reading with the stored schemas must infer nothing")
+    val qs = emb.filter($"vec_id" < 32)
+    val (rows, probeJobs) = TestSpark.jobsOf {
+      VectorIndex.probeBatch(qs, "vec_id", dir, k = 10, nprobe = 2).collect()
+    }
+    assert(rows.length == 32 * 10)
+    assert(probeJobs <= 6, s"probeBatch + collect ran $probeJobs jobs")
+  }
+
+  test("probeBatch, probeThreshold, probeFilteredBatch: malformed queries fail loudly") {
+    val dir = TestSpark.tmpDir("vecidx_dims_batch")
+    VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
+    val good = emb.filter($"vec_id" < 3).select("vec_id", "embedding")
+    val short = good.unionByName(
+      Seq((777L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding"))
+    val nul = good.unionByName(
+      Seq(778L).toDF("vec_id").withColumn("embedding", lit(null).cast("array<float>")))
+    for ((bad, what) <- Seq((short, "short"), (nul, "null"))) {
+      val calls: Seq[(String, () => Any)] = Seq(
+        "probeBatch" -> (() => VectorIndex.probeBatch(bad, "vec_id", dir, k = 5, nprobe = 2)),
+        "probeThreshold" -> (() =>
+          VectorIndex.probeThreshold(bad, "vec_id", dir, minCosine = 0.5, nprobe = 2)),
+        "probeFilteredBatch" -> (() => VectorIndex.probeFilteredBatch(
+          bad, "vec_id", dir, $"vec_id" % 2 === 0, k = 5, nprobe = 2)))
+      for ((name, call) <- calls) {
+        val err = intercept[IllegalArgumentException](call())
+        assert(err.getMessage.contains("width != index dims"), s"$name, $what query: $err")
+      }
+    }
+  }
+
+  test("a null vector is malformed: append and probeBatch reject it") {
+    val dir = TestSpark.tmpDir("vecidx_null_vec")
+    VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
+    val nul = Seq(900002L).toDF("vec_id")
+      .withColumn("embedding", lit(null).cast("array<float>"))
+    val appendErr = intercept[IllegalArgumentException](VectorIndex.append(nul, dir))
+    assert(appendErr.getMessage.contains("width != index dims"))
+    assert(VectorIndex.storedIds(spark, dir).filter($"vec_id" === 900002L).isEmpty)
+    val probeErr = intercept[IllegalArgumentException] {
+      VectorIndex.probeBatch(nul, "vec_id", dir, k = 5, nprobe = 2)
+    }
+    assert(probeErr.getMessage.contains("width != index dims"))
+    val oneErr = intercept[IllegalArgumentException] {
+      VectorIndex.probe(nul, dir, k = 5, nprobe = 2)
+    }
+    assert(oneErr.getMessage.contains("width != index dims"))
+  }
+
   /** Every claim-free read inside a crashed swap window of `name`
     * (`lists` or `centroids`) answers as before the crash and leaves
     * the window untouched; the next writer heals it. */
