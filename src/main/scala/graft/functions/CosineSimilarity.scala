@@ -7,9 +7,11 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /**
- * Codegen'd cosine similarity over two `array<float>` columns — the hot
- * kernel of every ANN path (`Similarity.bruteForceTopK` scores the whole
- * corpus with it).
+ * Codegen'd cosine similarity over two `array<float>` or
+ * `array<double>` columns (either side, in any mix) — the hot kernel of
+ * every ANN path (`Similarity.bruteForceTopK` scores the whole corpus
+ * with it) and of every centroid ranking (the stored IVF centroids are
+ * `array<double>`).
  *
  * Why a custom Catalyst `Expression`: the composable formulation
  * (`aggregate(zip_with(a, b, _*_), 0d, _+_)`, `Similarity.dot`) is
@@ -22,7 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
  *
  * Numerics are kept BIT-IDENTICAL to the HOF formulation (and the
  * DuckDB oracle): products and sums accumulate in ascending element
- * order as doubles, and the result is `dot/(√na·√nb)` — so swapping it
+ * order as doubles (a float element widens exactly, as the HOF's
+ * `cast("double")` does), and the result is `dot/(√na·√nb)` — so swapping it
  * into an oracle-checked query cannot move a hash. Null in either array
  * slot or operand → null (matches `zip_with`+`aggregate` null
  * semantics... HOFs propagate null elements into the lambda; here a
@@ -41,12 +44,12 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _                       => false
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _                                    => false
     }
     if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<float> arguments, " +
+      s"$prettyName expects two array<float> or array<double> arguments, " +
         s"got ${left.dataType.sql} and ${right.dataType.sql}")
   }
 
@@ -57,6 +60,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // the isNull-variable path)
   override def nullable: Boolean = true
 
+  private def floats(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private lazy val leftFloats = floats(left)
+  private lazy val rightFloats = floats(right)
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -66,8 +74,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
+      val xv = if (leftFloats) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (rightFloats) y.getFloat(i).toDouble else y.getDouble(i)
       dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
@@ -84,6 +92,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
+      def elem(arr: String, fl: Boolean) =
+        if (fl) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
       s"""
          |int $n = $a.numElements();
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
@@ -92,8 +102,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |} else {
          |  for (int $i = 0; $i < $n; $i++) {
          |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $xv = (double) $a.getFloat($i);
-         |    double $yv = (double) $b.getFloat($i);
+         |    double $xv = ${elem(a, leftFloats)};
+         |    double $yv = ${elem(b, rightFloats)};
          |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
          |  }
          |}

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /**
  * Native-function surface: registration of graft's custom Catalyst
@@ -22,6 +24,19 @@ object GraftFunctions {
   private val cosineBuilder: Seq[Expression] => Expression = { args =>
     require(args.length == 2, s"graft_cosine expects 2 arguments, got ${args.length}")
     CosineSimilarity(args.head, args(1))
+  }
+
+  private val nearestCentroidId = FunctionIdentifier("graft_nearest_centroid")
+  private val nearestCentroidInfo = new ExpressionInfo(
+    classOf[NearestCentroidKernel].getName, "graft_nearest_centroid")
+  private val nearestCentroidBuilder: Seq[Expression] => Expression = { args =>
+    require(args.length == 3,
+      s"graft_nearest_centroid expects (vector, ids, centroids), got ${args.length} args")
+    NearestCentroidKernel(args.head,
+      constArray(args(1), "graft_nearest_centroid", "ids", LongType)
+        .map(_.asInstanceOf[Long]),
+      constArray(args(2), "graft_nearest_centroid", "centroids", ArrayType(DoubleType))
+        .map(c => c.asInstanceOf[Seq[Any]].map(_.asInstanceOf[Double])))
   }
 
   private val winnowId = FunctionIdentifier("graft_winnow")
@@ -52,6 +67,30 @@ object GraftFunctions {
       v.toDouble
     case other => throw new IllegalArgumentException(
       s"$fn $name must be a numeric literal, got $other")
+  }
+
+  /** The elements of a constant, null-free array argument whose element
+    * type is `elem` (a nested array's containsNull is not checked —
+    * its elements are checked one by one), as Scala values. */
+  private def constArray(e: Expression, fn: String, name: String, elem: DataType): Seq[Any] = {
+    def sameType(a: DataType, b: DataType): Boolean = (a, b) match {
+      case (ArrayType(x, _), ArrayType(y, _)) => sameType(x, y)
+      case _ => a == b
+    }
+    def fail(why: String) = throw new IllegalArgumentException(
+      s"$fn $name must be a constant null-free array<${elem.sql}>, got $e ($why)")
+    if (!e.foldable) fail("not constant")
+    e.dataType match {
+      case ArrayType(t, _) if sameType(t, elem) =>
+      case other => fail(other.sql)
+    }
+    def scala(v: Any, t: DataType): Any = (v, t) match {
+      case (null, _) => fail("null value")
+      case (a: ArrayData, ArrayType(et, _)) =>
+        (0 until a.numElements()).map(i => scala(a.get(i, et), et))
+      case (x, _) => x
+    }
+    scala(e.eval(), e.dataType).asInstanceOf[Seq[Any]]
   }
 
   private val htmlMainId = FunctionIdentifier("graft_html_main")
@@ -354,6 +393,7 @@ object GraftFunctions {
     (detectCharsetId, detectCharsetInfo, detectCharsetBuilder),
     (decodeTextId, decodeTextInfo, decodeTextBuilder),
     (cosineId, cosineInfo, cosineBuilder),
+    (nearestCentroidId, nearestCentroidInfo, nearestCentroidBuilder),
     (winnowId, winnowInfo, winnowBuilder),
     (tokenCountId, tokenCountInfo, tokenCountBuilder),
     (langIdId, langIdInfo, langIdBuilder),
@@ -385,6 +425,17 @@ object GraftFunctions {
   def cosine(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)
     org.apache.spark.sql.functions.call_function("graft_cosine", a, b)
+  }
+
+  /** Column-API handle on the fused nearest-centroid kernel
+    * ([[NearestCentroidKernel]]): the id of `centroids`' member with
+    * the greatest 6-decimal cosine to `vec`, ties → lowest id. */
+  def nearestCentroid(
+      spark: SparkSession, vec: Column, centroids: Seq[(Long, Seq[Double])]): Column = {
+    register(spark)
+    org.apache.spark.sql.functions.call_function("graft_nearest_centroid", vec,
+      org.apache.spark.sql.functions.typedlit(centroids.map(_._1)),
+      org.apache.spark.sql.functions.typedlit(centroids.map(_._2)))
   }
 
   /** Column-API handle on the winnowing kernel. */

@@ -207,9 +207,11 @@ object VectorIndex {
     Seq(lists.live, lists.prev, lists.stage).foreach(f.delete(_, true))
     cents.toDF("cid", "cemb")
       .write.mode("overwrite").parquet(centsPath(dir))
-    val assigned = Clustering.assign(corpus, idCol, vecCol, cents)
-      .select(col(idCol), col("cluster").as("list_id"))
-    val data = corpus.select(col(idCol), col(vecCol)).join(assigned, Seq(idCol))
+    // list_id comes from the assignment's own projection: one stored
+    // row per given row, whatever the ids (a join on the id would
+    // multiply a duplicated id into every list its rows land in)
+    val data = Clustering.assign(corpus, idCol, vecCol, cents)
+      .select(col(idCol), col(vecCol), col("cluster").as("list_id"))
     writeBatch(data, listsPath(dir), baseTag, spark)
     Commits.writeMeta(spark, dir, "id_col" -> idCol, "vec_col" -> vecCol,
       "dims" -> dims, "nlist" -> nlist, "iters" -> iters,
@@ -258,7 +260,7 @@ object VectorIndex {
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("cid"),
         malformed(col("__q"), m.dims).as("__bad"),
-        Similarity.cosine(col("cemb").cast("array<double>"), col("__q")).as("__csim"))
+        Similarity.cosineFast(spark, col("cemb"), col("__q")).as("__csim"))
       .coalesce(1)
       .withColumn("__rn", row_number().over(wq))
       .filter(col("__rn") <= nprobe)
@@ -305,7 +307,7 @@ object VectorIndex {
     val ranked = centroids(spark, dir)
       .crossJoin(broadcast(q))
       .select(col("cid"),
-        Similarity.cosine(col("cemb").cast("array<double>"), col("__q")).as("__csim"))
+        Similarity.cosineFast(spark, col("cemb"), col("__q")).as("__csim"))
       .orderBy(col("__csim").desc, col("cid").asc)
       .limit(nprobe)
       .select("cid")
@@ -457,13 +459,14 @@ object VectorIndex {
     val cents = centroids(spark, dir)
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    val assigned = Clustering.assign(newVecs, m.idCol, m.vecCol, cents)
-      .select(col(m.idCol), col("cluster").as("list_id"))
-    // land the stored column types: every file matches `Meta.schemaDdl`,
-    // which is the schema every read applies
+    // land the stored column types (every file matches `Meta.schemaDdl`,
+    // the schema every read applies) and assign what is stored; list_id
+    // comes from the assignment's projection, one row per given row
     val stored = StructType.fromDDL(m.schemaDdl)
-    val data = newVecs.select(stored.map(f => col(f.name).cast(f.dataType)): _*)
-      .join(assigned, Seq(m.idCol))
+    val data = Clustering.assign(
+        newVecs.select(stored.map(f => col(f.name).cast(f.dataType)): _*),
+        m.idCol, m.vecCol, cents)
+      .select(col(m.idCol), col(m.vecCol), col("cluster").as("list_id"))
     writeBatch(data, listsPath(dir), Commits.batchTag(newVecs, m.idCol), spark)
   } }
 
@@ -571,8 +574,7 @@ object VectorIndex {
       .agg(count(lit(1)).as("n_members"))
     val drift = round(
       greatest(lit(0.0), // float guard: true cosine ≤ 1, rounding can graze it
-        lit(1.0) - graft.ops.Similarity.cosine(
-          col("cemb").cast("array<double>"), col("__mean"))), 6)
+        lit(1.0) - Similarity.cosineFast(spark, col("cemb"), col("__mean"))), 6)
     val report = centroids(spark, dir)
       .select(col("cid").as("list_id"), col("cemb"))
       .join(meanArr, Seq("list_id"), "left")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
  * assignment this trains).
  *
  * Scale design (100 TB): each Lloyd iteration is
- *  - one narrow pass scoring every vector against a BROADCAST centroid
- *    table (k·dims doubles — KBs) with a `greatest(struct…)` argmax in
- *    the projection: no per-vector window, no shuffle of embeddings;
+ *  - one narrow pass scoring every vector against the centroid table
+ *    (k·dims doubles — KBs, plan constants) with ONE fused argmax
+ *    expression per row ([[graft.functions.NearestCentroidKernel]]: a
+ *    primitive loop over the centroids, no lambda functions): no
+ *    per-vector window, no shuffle of embeddings;
  *  - one aggregation keyed on (cluster, dim) with map-side partials —
  *    the exchange carries k·dims partial sums per partition, not
  *    vectors.
@@ -29,29 +31,17 @@ import org.apache.spark.sql.functions._
  */
 object Clustering {
 
-  /** Cosine between a float-embedding column and a double-array
-    * centroid literal (HOF formulation, double accumulation in element
-    * order — matches the oracle's arithmetic exactly). */
-  private def cosineToCentroid(emb: Column, centroid: Seq[Double]): Column = {
-    val c = typedlit(centroid)
-    def dot(a: Column, b: Column) = aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    round(try_divide(dot(emb, c), sqrt(dot(emb, emb)) * sqrt(dot(c, c))), 6)
-  }
-
   /** Nearest-centroid id for an embedding EXPRESSION: argmax by
-    * (rounded) cosine, ties → lowest centroid id, via `greatest` over
-    * (sim, −cid) structs — pure projection arithmetic, usable many
-    * times in ONE select (each PQ block is one of these). */
-  def nearestCentroid(emb: Column, centroids: Seq[(Long, Seq[Double])]): Column = {
+    * (6-decimal-rounded) cosine, ties → lowest centroid id, a null,
+    * zero-norm or wrong-width vector → the lowest id. One fused kernel
+    * per row ([[graft.functions.NearestCentroidKernel]]), bit-identical
+    * to the oracle's `greatest` over (rounded cosine, −cid) pairs —
+    * pure projection arithmetic, usable many times in ONE select (each
+    * PQ block is one of these). */
+  def nearestCentroid(
+      spark: SparkSession, emb: Column, centroids: Seq[(Long, Seq[Double])]): Column = {
     require(centroids.size >= 2, "kmeans needs k >= 2")
-    val scored = centroids.map { case (cid, c) =>
-      struct(
-        cosineToCentroid(emb, c).as("sim"),
-        lit(-cid).as("negcid"))
-    }
-    -greatest(scored: _*).getField("negcid")
+    graft.functions.GraftFunctions.nearestCentroid(spark, emb, centroids)
   }
 
   /** One assignment pass: nearest centroid by (rounded) cosine, ties →
@@ -64,7 +54,7 @@ object Clustering {
     df.select(
       col(idCol),
       col(embCol),
-      nearestCentroid(col(embCol), centroids).as("cluster"))
+      nearestCentroid(df.sparkSession, col(embCol), centroids).as("cluster"))
   }
 
   /**
@@ -150,9 +140,10 @@ object Clustering {
       embCol: String,
       centroids: Seq[(Long, Seq[Double])]): DataFrame = {
     require(centroids.size >= 2, "silhouette needs k >= 2")
+    val spark = df.sparkSession
     val sims = array(centroids.map { case (cid, c) =>
       struct(lit(cid).as("cid"),
-        cosineToCentroid(col(embCol), c).as("sim"))
+        Similarity.cosineFast(spark, col(embCol), typedlit(c)).as("sim"))
     }: _*)
     val own = element_at(filter(col("__sims"),
       x => x.getField("cid") === col("cluster")), 1).getField("sim")
@@ -164,7 +155,7 @@ object Clustering {
       .otherwise((own - other) / denom)
     df
       .select(col(idCol),
-        nearestCentroid(col(embCol), centroids).as("cluster"),
+        nearestCentroid(spark, col(embCol), centroids).as("cluster"),
         sims.as("__sims"))
       .select(col("cluster"), round(s * 1e6).cast("long").as("__sm"))
       .groupBy("cluster")

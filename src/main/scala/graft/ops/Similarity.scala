@@ -26,7 +26,14 @@ import org.apache.spark.sql.functions._
  *    functions are CodegenFallback, so the composable
  *    `zip_with`+`aggregate` formulation ([[dot]]/[[cosine]], kept as
  *    the reference implementation and parity check) pays interpreted
- *    lambda dispatch per row.
+ *    lambda dispatch per row. Candidate scoring, the centroid rankings
+ *    of the IVF and IVF-PQ probes (float query against `array<double>`
+ *    centroids) and every nearest-centroid assignment
+ *    ([[Clustering.nearestCentroid]]'s fused argmax) run on kernels;
+ *    HOF arithmetic remains where a row needs per-element products
+ *    other than one cosine: the sign-LSH and [[projectedTopK]]
+ *    projections, the IVF-PQ residuals, [[vectorAudit]] and the
+ *    scalar-quantizer dot products.
  *
  * All similarity outputs are rounded to 6 decimals: the only
  * cross-engine nondeterminism is float-sum association order, which is
@@ -415,11 +422,12 @@ object Similarity {
    * at index build; the quantizer quality changes (balanced lists →
    * better recall at the same nprobe), the probe plan does not.
    *
-   * List assignment and list ranking go through [[Clustering.assign]]'s
-   * rounded HOF cosine (6 decimals, ties → lowest centroid id) so the
+   * List assignment ([[Clustering.assign]]'s fused argmax) and list
+   * ranking ([[cosineFast]]) use the rounded cosine (6 decimals, ties →
+   * lowest centroid id), bit-identical to the HOF arithmetic, so the
    * whole path — training included — stays oracle-replayable; the
-   * final candidate scoring uses the codegen'd [[cosineFast]] kernel,
-   * same as every other ANN path.
+   * final candidate scoring uses the same [[cosineFast]] kernel as
+   * every other ANN path.
    */
   def ivfTopKTrained(
       corpus: DataFrame,
@@ -440,7 +448,7 @@ object Similarity {
     val q = queryDf.select(col(embCol).as("__q"))
     val probeLists = broadcast(
       q.crossJoin(broadcast(centDf))
-        .select(col("cid"), col("__q"), cosine(col("cemb"), col("__q")).as("__csim"))
+        .select(col("cid"), col("__q"), cosineFast(spark, col("cemb"), col("__q")).as("__csim"))
         .orderBy(col("__csim").desc, col("cid").asc)
         .limit(nprobe)
         .select(col("cid").as("list_id"), col("__q")))
@@ -484,7 +492,7 @@ object Similarity {
     val probeLists = broadcast(
       q.crossJoin(broadcast(centDf))
         .select(col("query_id"), col("cid"), col("__q"),
-          cosine(col("cemb"), col("__q")).as("__csim"))
+          cosineFast(spark, col("cemb"), col("__q")).as("__csim"))
         .withColumn("__rn", row_number().over(wq))
         .filter(col("__rn") <= nprobe)
         .select(col("query_id"), col("cid").as("list_id"), col("__q")))
@@ -518,6 +526,7 @@ object Similarity {
       iters: Int): Seq[Seq[(Long, Seq[Double])]] = {
     require(blocks >= 1 && dims % blocks == 0, "blocks must divide dims")
     require(k >= 2 && iters >= 1)
+    val spark = corpus.sparkSession
     val d = dims / blocks
     // ONE seeds job for every block (Clustering.train's seed rule on
     // each sliced frame picks the same k lowest ids; the slice happens
@@ -537,11 +546,8 @@ object Similarity {
       // the position, look the row's cluster up in the per-block
       // assignment array — blocks × k × d rows back to the driver
       val assignCols = books.zipWithIndex.map { case (cs, b) =>
-        Clustering.nearestCentroid(slice(col(embCol), b * d + 1, d), cs)
+        Clustering.nearestCentroid(spark, slice(col(embCol), b * d + 1, d), cs)
       }
-      // two selects: the argmin structs' field access must resolve in a
-      // plain projection BEFORE the generator select (the Generate
-      // rewrite resolves getField against unaliased struct names)
       val means = corpus
         .select(array(assignCols: _*).as("__cl"), col(embCol))
         .select(col("__cl"), posexplode(col(embCol)).as(Seq("__d", "__v")))
@@ -574,9 +580,10 @@ object Similarity {
       embCol: String,
       dims: Int,
       codebooks: Seq[Seq[(Long, Seq[Double])]]): DataFrame = {
+    val spark = corpus.sparkSession
     val d = dims / codebooks.size
     val codeCols = codebooks.zipWithIndex.map { case (cents, b) =>
-      Clustering.nearestCentroid(slice(col(embCol), b * d + 1, d), cents).as(s"code_$b")
+      Clustering.nearestCentroid(spark, slice(col(embCol), b * d + 1, d), cents).as(s"code_$b")
     }
     corpus.select(col(idCol) +: codeCols: _*)
   }
@@ -593,9 +600,9 @@ object Similarity {
    * Training is `blocks × iters` bounded passes paid once at index
    * build ([[pqCodebooks]]). ENCODING is the part that must scale, and
    * it is ONE narrow projection ([[pqEncode]]): all `blocks` argmaxes
-   * (`greatest(struct)` over literal centroids) evaluate in the same
-   * whole-stage-codegen pass — no joins, no shuffles, no per-block
-   * scans.
+   * (one fused [[Clustering.nearestCentroid]] kernel each, over
+   * constant centroids) evaluate in the same whole-stage-codegen pass
+   * — no joins, no shuffles, no per-block scans.
    *
    * Output: (idCol, code_0 … code_{blocks−1}); code ids are seed ids
    * within the block's codebook (deterministic, oracle-replayable).
@@ -764,14 +771,14 @@ object Similarity {
       .localCheckpoint()
     val books = pqCodebooks(res, idCol, "__res", dims, blocks, k, pqIters)
     val codeCols = books.zipWithIndex.map { case (cs, b) =>
-      Clustering.nearestCentroid(slice(col("__res"), b * d + 1, d), cs).as(s"code_$b")
+      Clustering.nearestCentroid(spark, slice(col("__res"), b * d + 1, d), cs).as(s"code_$b")
     }
     val codes = res.select(col(idCol) +: col("list_id") +: codeCols: _*)
     val centDf = cents.toDF("cid", "cemb")
     val q = queryDf.select(col(embCol).as("__q"))
     val probeLists = broadcast(
       q.crossJoin(broadcast(centDf))
-        .select(col("cid"), cosine(col("cemb"), col("__q")).as("__csim"))
+        .select(col("cid"), cosineFast(spark, col("cemb"), col("__q")).as("__csim"))
         .orderBy(col("__csim").desc, col("cid").asc)
         .limit(nprobe)
         .select(col("cid").as("list_id")))
@@ -839,7 +846,7 @@ object Similarity {
       .localCheckpoint()
     val books = pqCodebooks(res, idCol, "__res", dims, blocks, k, pqIters)
     val codeCols = books.zipWithIndex.map { case (cs, b) =>
-      Clustering.nearestCentroid(slice(col("__res"), b * d + 1, d), cs).as(s"code_$b")
+      Clustering.nearestCentroid(spark, slice(col("__res"), b * d + 1, d), cs).as(s"code_$b")
     }
     val codes = res.select(col(idCol) +: col("list_id") +: codeCols: _*)
     val centDf = cents.toDF("cid", "cemb")
@@ -850,7 +857,7 @@ object Similarity {
     val probePairs = broadcast(
       q.crossJoin(broadcast(centDf))
         .select(col("query_id"), col("cid"),
-          cosine(col("cemb"), col("__q")).as("__csim"))
+          cosineFast(spark, col("cemb"), col("__q")).as("__csim"))
         .withColumn("__rn", row_number().over(wq))
         .filter(col("__rn") <= nprobe)
         .select(col("query_id"), col("cid").as("list_id")))

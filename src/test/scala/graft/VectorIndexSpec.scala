@@ -112,6 +112,31 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(hits == 1L, s"retried append must not duplicate the vector, got $hits rows")
   }
 
+  test("a duplicated id stores one row per given row in build and append") {
+    val dir = TestSpark.tmpDir("vecidx_dup_ids")
+    val base = emb.filter($"vec_id" < 40).select("vec_id", "embedding")
+    // id 5 twice, the second copy carrying another vector (so it may
+    // land in another list)
+    val corpus = base.unionByName(emb.filter($"vec_id" === 39)
+      .select(lit(5L).as("vec_id"), $"embedding"))
+    VectorIndex.build(corpus, "vec_id", "embedding", dir, nlist = 4, iters = 2)
+    assert(VectorIndex.storedIds(spark, dir).count() == 41)
+    assert(VectorIndex.storedIds(spark, dir).filter($"vec_id" === 5).count() == 2)
+
+    val vecs = emb.filter($"vec_id".isin(0, 20, 39)).orderBy("vec_id")
+      .select("embedding").as[Seq[Float]].collect()
+    VectorIndex.append(Seq((100L, vecs(0)), (100L, vecs(1)), (101L, vecs(2)))
+      .toDF("vec_id", "embedding"), dir)
+    val stored = VectorIndex.storedIds(spark, dir)
+    assert(stored.count() == 44)
+    assert(stored.filter($"vec_id" === 100L).count() == 2)
+    // a probe by the first copy finds id 100 once at cosine 1.0
+    val hits = VectorIndex.probeBatch(Seq((1L, vecs(0))).toDF("qid", "embedding"),
+        "qid", dir, k = 3, nprobe = 4)
+      .filter($"vec_id" === 100L).collect()
+    assert(hits.length == 1 && hits.head.getDouble(3) == 1.0, hits.toSeq)
+  }
+
   test("single-query contract: a multi-row queryDf is rejected, not silently interleaved") {
     val dir = TestSpark.tmpDir("vecidx_guard")
     VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
