@@ -15,9 +15,31 @@ import org.apache.spark.sql.SparkSession
  *  - UTC session timezone (all date/timestamp literals in the engine
  *    are timezone-free);
  *  - shuffle partitions default to the local core count rather than
- *    200 — callers on a real cluster should size this to data volume.
+ *    200 — callers on a real cluster should size this to data volume;
+ *  - `file:` served by [[graft.io.GraftLocalFileSystem]] and
+ *    [[graft.io.GraftLocalFs]] ([[localFileSystem]]). Without Hadoop's
+ *    native library the stock local filesystem forks a `chmod` for every
+ *    file and dir it creates (~5 ms each) and a `readlink` for every
+ *    FileContext rename: 361 `chmod`s per medallion batch, and 467
+ *    `chmod`s plus 104 `readlink`s per `vector_serving` benchmark run
+ *    (`tools/forkcount.sh`). The graft classes make both one syscall.
+ *    With nothing configured, Spark's jars select Hive's
+ *    `ProxyLocalFileSystem` for `file:`, whose rename refuses an
+ *    existing file; the graft class keeps that. Hadoop's FileSystem
+ *    cache ignores the configuration, so the first `file:` FileSystem
+ *    created in a JVM serves every later `FileSystem.get`: build the
+ *    session before anything else touches a local path. FileContext is
+ *    not cached and follows each configuration. Hadoop loads both
+ *    classes through the configuration's classloader, so graft must be
+ *    on the application classpath (spark-shell `--driver-class-path`,
+ *    not `--jars`).
  */
 object GraftSession {
+
+  /** The Spark settings that select the graft `file:` filesystems. */
+  val localFileSystem: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.GraftLocalFs].getName)
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
@@ -27,4 +49,5 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions",
         Runtime.getRuntime.availableProcessors().toString)
+      .config(localFileSystem)
 }

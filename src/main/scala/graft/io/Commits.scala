@@ -45,6 +45,18 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
  * single-slot CAS, which is exactly enough to turn every silent
  * lost-update into a visible error.
  *
+ * ==Rename semantics relied on==
+ * Hadoop's old-API `FileSystem.rename`, as the engine's `file:`
+ * filesystem ([[GraftLocalFileSystem]]) gives it: a dir renamed onto a
+ * free name moves in one rename(2); renamed onto an existing non-empty
+ * dir it lands INSIDE that dir and still returns true (the race
+ * [[publishAtomic]]'s token detects); a file renamed onto an existing
+ * file returns false and leaves both (writers that replace a file
+ * delete the target first, as `PairReports` does). Hive's
+ * `ProxyLocalFileSystem`, which Spark's jars select for `file:` when
+ * nothing is configured, behaves the same; Hadoop's plain
+ * `LocalFileSystem` would overwrite the file.
+ *
  * ==Durable-index protocol==
  * The published indexes ([[VectorIndex]], [[SignatureIndex]],
  * [[AudioIndex]], [[WindowIndex]], [[GraphIndex]]) and the media

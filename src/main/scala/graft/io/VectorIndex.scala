@@ -196,9 +196,6 @@ object VectorIndex {
       "column names are stored in index meta and must be plain identifiers")
     val spark = corpus.sparkSession
     import spark.implicits._
-    require(!corpus.isEmpty,
-      s"cannot build a vector index over an empty corpus ($dir): " +
-        "the quantizer has nothing to train on")
     val cents = Clustering.train(corpus, idCol, vecCol, nlist, iters)
     val dims = cents.head._2.length
     requireDims(corpus, vecCol, dims, "build corpus")

@@ -63,7 +63,8 @@ object Clustering {
    * (the caller's final [[assign]] is then iteration `iters`). Seeds =
    * embeddings of the `k` lowest ids, and the cluster LABEL is the
    * seed's own id (stable under any id numbering — the oracle replays
-   * it verbatim). A cluster that loses all members keeps its previous
+   * it verbatim). An empty frame fails at the seed collect, before any
+   * pass runs. A cluster that loses all members keeps its previous
    * centroid (standard degenerate-case handling). The k·dims centroid
    * matrix is the only driver-side state.
    */
@@ -76,6 +77,7 @@ object Clustering {
     require(k >= 2 && iters >= 1)
     val seeds = df.orderBy(col(idCol).asc).limit(k)
       .select(col(idCol).cast("long"), col(embCol)).collect()
+    require(seeds.nonEmpty, "cannot train k-means over an empty corpus")
     var centroids: Seq[(Long, Seq[Double])] = seeds.map { r =>
       r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq
     }.toSeq

@@ -442,8 +442,10 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = Clustering.train(corpus, idCol, embCol, nlist, iters)
+    // list_id from the assignment's own projection: a join back on the
+    // id would multiply a duplicated id into every list its rows land in
     val assigned = Clustering.assign(corpus, idCol, embCol, cents)
-      .select(col(idCol), col("cluster").as("list_id"))
+      .select(col(idCol), col(embCol), col("cluster").as("list_id"))
     val centDf = cents.toDF("cid", "cemb") // nlist rows — broadcast literal
     val q = queryDf.select(col(embCol).as("__q"))
     val probeLists = broadcast(
@@ -452,7 +454,7 @@ object Similarity {
         .orderBy(col("__csim").desc, col("cid").asc)
         .limit(nprobe)
         .select(col("cid").as("list_id"), col("__q")))
-    corpus.join(assigned, idCol)
+    assigned
       .join(probeLists, "list_id")
       .select(col(idCol), cosineFast(spark, col(embCol), col("__q")).as("cosine_sim"))
       .orderBy(col("cosine_sim").desc, col(idCol).asc)
@@ -483,8 +485,9 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = Clustering.train(corpus, idCol, embCol, nlist, iters)
+    // list_id from the assignment's own projection, as in ivfTopKTrained
     val assigned = Clustering.assign(corpus, idCol, embCol, cents)
-      .select(col(idCol), col("cluster").as("list_id"))
+      .select(col(idCol), col(embCol), col("cluster").as("list_id"))
     val centDf = cents.toDF("cid", "cemb") // nlist rows — broadcast literal
     val q = queries.select(col(qidCol).as("query_id"), col(embCol).as("__q"))
     val wq = Window.partitionBy("query_id")
@@ -496,7 +499,7 @@ object Similarity {
         .withColumn("__rn", row_number().over(wq))
         .filter(col("__rn") <= nprobe)
         .select(col("query_id"), col("cid").as("list_id"), col("__q")))
-    val scored = corpus.join(assigned, idCol)
+    val scored = assigned
       .join(probeLists, "list_id")
       .select(col("query_id"), col(idCol),
         cosineFast(spark, col(embCol), col("__q")).as("cosine_sim"))

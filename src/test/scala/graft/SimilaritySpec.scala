@@ -297,6 +297,25 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.toSeq == expected)
   }
 
+  test("ivfTopKTrained and its batch twin score each corpus row once, ids duplicated or not") {
+    val emb = TestSpark.table("embeddings").select("vec_id", "embedding")
+    // 41 rows, id 30 twice with different vectors (above the 8 seed
+    // ids, so the centroid labels stay distinct); every list probed
+    val corpus = emb.filter(col("vec_id") < 40)
+      .unionByName(emb.filter(col("vec_id") === 40).withColumn("vec_id", lit(30L)))
+    val q = emb.filter(col("vec_id") === 0)
+    val single = Similarity.ivfTopKTrained(
+      corpus, q, "vec_id", "embedding", k = 50, nlist = 8, nprobe = 8, iters = 2)
+      .as[(Long, Double)].collect()
+    assert(single.length == 41)
+    assert(single.count(_._1 == 30L) == 2 &&
+      single.filter(_._1 == 30L).map(_._2).distinct.length == 2)
+    val batch = Similarity.ivfTopKTrainedBatch(
+      corpus, q, "vec_id", "embedding", "vec_id", k = 50, nlist = 8, nprobe = 8, iters = 2)
+      .as[(Long, Long, Long, Double)].collect()
+    assert(batch.map(r => (r._3, r._4)).toSeq == single.toSeq)
+  }
+
   test("pqTopKWithBatch == one pqTopKWith per query; duplicate query ids rejected") {
     val emb = TestSpark.table("embeddings")
     val books = Similarity.pqCodebooks(emb, "vec_id", "embedding", 64, 4, 4, 2)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for the whole suite (Spark startup is ~5 s;
   * per-suite sessions would dominate test wall-time). Mirrors the
-  * driver's config: UTC, small shuffle partitioning, UI off. */
+  * engine's session config: UTC, small shuffle partitioning, UI off,
+  * and the `file:` filesystem ([[GraftSession.localFileSystem]]). */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -13,6 +14,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileSystem)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .getOrCreate()

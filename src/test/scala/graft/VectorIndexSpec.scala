@@ -162,6 +162,16 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(got.toSeq == expected)
   }
 
+  test("build runs no job of its own to reject an empty corpus") {
+    // training's seed collect finds an empty corpus; no separate isEmpty job
+    val (_, jobs) = TestSpark.jobsOf {
+      VectorIndex.build(emb, "vec_id", "embedding", TestSpark.tmpDir("vecidx_build_jobs"),
+        nlist = 8, iters = 2)
+    }
+    // 8 with a standalone isEmpty check ahead of training
+    assert(jobs == 7, s"build ran $jobs jobs")
+  }
+
   test("probeBatch runs in at most 6 jobs; building the centroids or lists frame runs none") {
     val dir = TestSpark.tmpDir("vecidx_jobs")
     VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
