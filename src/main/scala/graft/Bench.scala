@@ -18,6 +18,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup at the smallest SF: JIT-compiles the codegen'd

@@ -20,6 +20,7 @@ object BenchOne {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))

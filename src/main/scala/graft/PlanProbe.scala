@@ -15,7 +15,8 @@ object PlanProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileSystem).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the q151 graph, verbatim from EntryGraph
     val docs = spark.read.parquet(s"$dir/documents.parquet")

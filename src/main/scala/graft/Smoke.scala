@@ -5,7 +5,8 @@ object Smoke {
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions","4")
       .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
+      .config("spark.ui.enabled","false")
+      .config(GraftSession.localFileSystem).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY ROWS=" + df.count())

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 
 /**
  * The durable folded-files record shared by the streaming maintainers
@@ -25,13 +26,21 @@ object FoldedFiles {
 
   /** The not-yet-folded silver data files (sorted), plus the callback
     * that commits the advanced record — the maintainer MUST call it
-    * LAST, after its downstream index commit. */
+    * LAST, after its downstream index commit. A silver dir written by
+    * Spark's file sink takes its files from the sink's `_spark_metadata`
+    * log (read on the driver, no job): a crashed micro-batch leaves part
+    * files the log never committed, and its replay writes them again
+    * under new names. A dir without the log is listed. */
   def fresh(spark: SparkSession, silverDir: String, recordBase: String)
       : (Seq[String], () => Unit) = {
     val silverPath = new Path(silverDir)
     val fs = silverPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sinkLog = new Path(silverPath, "_spark_metadata")
     val silverFiles: Set[String] =
-      if (!fs.exists(silverPath)) Set.empty
+      if (fs.exists(sinkLog))
+        new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, sinkLog.toString, None)
+          .allFiles().map(_.toFileStatus.getPath.toString).filter(_.endsWith(".parquet")).toSet
+      else if (!fs.exists(silverPath)) Set.empty
       else fs.listStatus(silverPath).filter(_.isFile)
         .map(_.getPath.toString).filter(_.endsWith(".parquet")).toSet
     val read = Commits.readVersioned(spark, recordBase)

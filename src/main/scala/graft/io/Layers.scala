@@ -64,6 +64,12 @@ object Layers {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** Schema-enforced Parquet scan: with the layer's declared schema no
+    * footer-inference job runs before the scan; partition columns take
+    * their declared types. */
+  def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
   /**
    * Events-table reader: normalizes `ts` to session-zoned
    * `TimestampType` regardless of the physical encoding the fixture

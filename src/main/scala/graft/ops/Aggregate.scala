@@ -9,17 +9,10 @@ import org.apache.spark.sql.functions._
  * declarative aggregation DSL the reference *declared* but never executed
  * (`configs/breweries_gold_pipeline.yml:41-51`, SURVEY §2.6 A4).
  *
- * Two physical shapes for the same logical "union of roll-ups":
- *
- *  - [[unionRollups]] — parity shape: one `groupBy` per roll-up +
- *    `unionByName(allowMissingColumns = true)` (reference U1). N roll-ups
- *    ⇒ N aggregates over N scans (Catalyst usually reuses the exchange,
- *    but not the scan).
- *  - [[groupingSetsRollup]] — optimized shape: a single `GROUPING SETS`
- *    aggregate ⇒ ONE scan + ONE `Expand` + ONE partial/final aggregate,
- *    which is the plan you want at 100 TB (scan cost dominates; Expand
- *    multiplies rows only by the number of grouping sets, and partial
- *    aggregation collapses them map-side before the single shuffle).
+ * The reference's "union of roll-ups" has one implementation,
+ * [[unionRollups]]: a single scan feeds ONE aggregate for every grouped
+ * roll-up (each row replicated once per roll-up, keyed by its index),
+ * so N roll-ups cost one scan and one shuffle, not N of each.
  */
 object Aggregate {
 
@@ -44,17 +37,33 @@ object Aggregate {
   }
 
   /**
-   * A1-A3 + U1 + P3 + P4 parity — union of roll-ups aligned by name with
-   * null padding for grouping columns absent from a branch, stamped with
-   * a caller-supplied (deterministic) transformation date.
+   * A1-A3 + U1 + P3 + P4 parity — the union of roll-ups aligned by name,
+   * grouping columns absent from a roll-up null-padded, stamped with a
+   * caller-supplied (deterministic) transformation date. Rows, column
+   * names, column order, types and nullability are those of one
+   * [[run]] per spec joined by `unionByName(allowMissingColumns)`.
+   *
+   * The grouped specs share one pass: each row is replicated once per
+   * spec index; grouping column j is aliased `__k<j>` and nulled on the
+   * rows of specs that do not group by it; one `groupBy(index, keys…)`
+   * evaluates every distinct metric expression once, on the ORIGINAL
+   * columns (so `count(distinct state)` in a spec without `state` is
+   * unaffected by another spec grouping on it); a final projection
+   * picks each row's metrics and tag by its spec index. A global spec
+   * (empty `groupBy`) keeps its own [[run]] branch: over empty input a
+   * global aggregate returns one row, a grouped one none. A metric of a
+   * grouped spec is therefore an aggregate expression: a bare grouping
+   * column is not among the one-pass grouping keys.
    */
   def unionRollups(df: DataFrame, specs: Seq[AggSpec], transformationDate: String): DataFrame = {
     require(specs.nonEmpty, "at least one AggSpec")
-    val branches = specs.map(run(df, _))
+    val (grouped, global) = specs.partition(_.groupBy.nonEmpty)
+    val branches = (if (grouped.isEmpty) Nil else Seq(onePass(df, grouped.toIndexedSeq))) ++
+      global.map(run(df, _))
     val unioned = branches.reduce(_.unionByName(_, allowMissingColumns = true))
     // Canonical column order: all grouping cols (first-appearance order),
     // then metrics, then tags — explicit select so the output contract is
-    // stable regardless of branch order (SURVEY §7.4 risk 3).
+    // stable regardless of spec order (SURVEY §7.4 risk 3).
     val groupCols = specs.flatMap(_.groupBy).distinct
     val metricCols = specs.flatMap(_.metrics.map(_.name)).distinct
     val ordered = (groupCols ++ metricCols :+ "aggregation").map(col)
@@ -62,6 +71,44 @@ object Aggregate {
       .withColumn("transformation_date", lit(transformationDate))
       .select(ordered :+ col("transformation_date"): _*)
   }
+
+  /** The grouped specs of [[unionRollups]] in one aggregate. */
+  private def onePass(df: DataFrame, specs: IndexedSeq[AggSpec]): DataFrame = {
+    val keys = specs.flatMap(_.groupBy).distinct
+    val exprs = specs.flatMap(_.metrics.map(_.expression)).distinct
+    val keyed = df
+      .withColumn("__spec", explode(array(specs.indices.map(lit): _*)))
+      .select(col("*") +: keys.zipWithIndex.map { case (c, j) =>
+        perSpec(specs.map(s => Some(c).filter(s.groupBy.contains)))(col).as(s"__k$j")
+      }: _*)
+    val metricCols = exprs.zipWithIndex.map { case (e, i) => expr(e).as(s"__m$i") }
+    val agged = keyed
+      .groupBy(col("__spec") +: keys.indices.map(j => col(s"__k$j")): _*)
+      .agg(metricCols.head, metricCols.tail: _*)
+    val names = specs.flatMap(_.metrics.map(_.name)).distinct
+    agged.select(
+      keys.indices.map(j => col(s"__k$j").as(keys(j))) ++
+        names.map(m => perSpec(specs.map(_.metrics.find(_.name == m)
+          .map(x => exprs.indexOf(x.expression))))(i => col(s"__m$i")).as(m)) :+
+        perSpec(specs.map(s => Some(s.tag)))(lit).as("aggregation"): _*)
+  }
+
+  /** `values(i)` on the rows of spec `i` (None: null). A value every
+    * spec shares stays bare, and a CASE covering every spec ends in
+    * ELSE, so nullability matches the per-spec union's. */
+  private def perSpec[V](values: IndexedSeq[Option[V]])(toCol: V => Column): Column =
+    values.distinct match {
+      case Seq(Some(v)) => toCol(v)
+      case _ =>
+        val spec = col("__spec")
+        val defined = values.zipWithIndex.collect { case (Some(v), i) => i -> toCol(v) }
+        val total = defined.size == values.size
+        val cased = if (total) defined.init else defined
+        val chain = cased.tail.foldLeft(when(spec === cased.head._1, cased.head._2)) {
+          case (c, (i, v)) => c.when(spec === i, v)
+        }
+        if (total) chain.otherwise(defined.last._2) else chain
+    }
 
   /** One decomposable metric for [[saltedRollup]]: `func` must be an
     * algebraic aggregate that recombines by itself (`sum`, `min`, `max`)
@@ -116,37 +163,13 @@ object Aggregate {
     stage1.groupBy(groupBy.map(col): _*).agg(merge.head, merge.tail: _*)
   }
 
-  /**
-   * Optimized twin of [[unionRollups]]: a single GROUPING SETS aggregate.
-   * The `aggregation` tag is reconstructed from `grouping(col)` flags so
-   * output rows are labeled identically to the union shape.
-   *
-   * `sets` maps tag → grouping columns for that set.
-   */
+  /** [[unionRollups]] over `sets` (tag → grouping columns), every set
+    * carrying the same `metrics`. */
   def groupingSetsRollup(
       df: DataFrame,
       sets: Seq[(String, Seq[String])],
       metrics: Seq[Metric],
-      transformationDate: String): DataFrame = {
-    val allCols = sets.flatMap(_._2).distinct
-    val gs = df.groupingSets(
-      sets.map(_._2.map(col)),
-      allCols.map(col): _*)
-    val gmask = allCols
-      .map(c => grouping(c).cast("string"))
-      .reduceLeft[Column]((a, b) => concat(a, b))
-      .as("__gmask")
-    val metricCols = metrics.map(_.toColumn) :+ gmask
-    val agged = gs.agg(metricCols.head, metricCols.tail: _*)
-    // tag per grouping-set mask: '0' = column present in the set.
-    val maskFor: Seq[String] => String =
-      set => allCols.map(c => if (set.contains(c)) "0" else "1").mkString
-    val tagCol = sets.foldRight(lit(null).cast("string")) { case ((tag, set), acc) =>
-      when(col("__gmask") === maskFor(set), lit(tag)).otherwise(acc)
-    }
-    agged
-      .withColumn("aggregation", tagCol)
-      .withColumn("transformation_date", lit(transformationDate))
-      .drop("__gmask")
-  }
+      transformationDate: String): DataFrame =
+    unionRollups(df, sets.map { case (tag, cols) => AggSpec(cols, metrics, tag) },
+      transformationDate)
 }

@@ -61,12 +61,13 @@ object Clustering {
    * Train Lloyd's k-means and return the final centroid matrix:
    * `iters − 1` centroid updates over `iters − 1` assignment passes
    * (the caller's final [[assign]] is then iteration `iters`). Seeds =
-   * embeddings of the `k` lowest ids, and the cluster LABEL is the
-   * seed's own id (stable under any id numbering — the oracle replays
-   * it verbatim). An empty frame fails at the seed collect, before any
-   * pass runs. A cluster that loses all members keeps its previous
-   * centroid (standard degenerate-case handling). The k·dims centroid
-   * matrix is the only driver-side state.
+   * embeddings of the `k` lowest distinct ids (an id with several rows
+   * seeds with its least vector in array order), and the cluster LABEL
+   * is the seed's own id (stable under any id numbering — the oracle
+   * replays it verbatim). An empty frame fails at the seed collect,
+   * before any pass runs. A cluster that loses all members keeps its
+   * previous centroid (standard degenerate-case handling). The k·dims
+   * centroid matrix is the only driver-side state.
    */
   def train(
       df: DataFrame,
@@ -75,8 +76,18 @@ object Clustering {
       k: Int,
       iters: Int): Seq[(Long, Seq[Double])] = {
     require(k >= 2 && iters >= 1)
-    val seeds = df.orderBy(col(idCol).asc).limit(k)
+    // the k lowest DISTINCT ids, each id's least vector: the (id, emb)
+    // order puts that copy first; the limit doubles only while
+    // duplicated ids leave fewer than k distinct ones
+    def lowest(n: Int) = df.orderBy(col(idCol).asc, col(embCol).asc).limit(n)
       .select(col(idCol).cast("long"), col(embCol)).collect()
+    var n = k
+    var rows = lowest(n)
+    while (rows.length == n && rows.distinctBy(_.getLong(0)).length < k) {
+      n *= 2
+      rows = lowest(n)
+    }
+    val seeds = rows.distinctBy(_.getLong(0)).take(k)
     require(seeds.nonEmpty, "cannot train k-means over an empty corpus")
     var centroids: Seq[(Long, Seq[Double])] = seeds.map { r =>
       r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toSeq

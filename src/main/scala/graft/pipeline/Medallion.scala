@@ -13,7 +13,8 @@ import graft.schema.Metadata
 /**
  * Config-assembled medallion pipeline: bronze (JSONL capture) → silver
  * (schema-enforced read, clean, partitioned parquet) → gold (declarative
- * roll-ups) → quality (rule report + JSON artifact), chained through
+ * roll-ups over one silver scan) → quality (rule report + JSON
+ * artifact), chained through
  * [[Runner]] with per-stage retry/metrics — the engine-native analog of
  * the reference's YAML→Airflow DAG factory
  * (`dags/breweries_gold_dag.py:45-185`) and its quality report sink
@@ -92,7 +93,9 @@ object Medallion {
       aggStage.taskId,
       run = { spark =>
         val obs = org.apache.spark.sql.Observation()
-        val silverDf = Layers.readParquet(spark, silverDir)
+        // silver is read with the schema it was written from, so the
+        // stage's only jobs are the roll-up's shuffle and its write
+        val silverDf = Layers.readParquet(spark, silverDir, Metadata.toStruct(meta.fields))
         val goldDf = Aggregate.unionRollups(silverDf, aggStage.aggregations, transformationDate)
           .observe(obs, count(lit(1)).as("rollup_rows"))
         Layers.writeGold(goldDf, goldDir)

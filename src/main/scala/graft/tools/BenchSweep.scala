@@ -27,6 +27,7 @@ object BenchSweep {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]

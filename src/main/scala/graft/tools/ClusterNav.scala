@@ -37,6 +37,7 @@ object ClusterNav {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -32,6 +32,7 @@ object FilterNav {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -18,6 +18,7 @@ object SimMargin {
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -23,6 +23,7 @@ object SimhashAudit {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -8,6 +8,7 @@ import graft.ops.Aggregate.{AggSpec, Metric}
 
 class AggregateSpec extends AnyFunSuite {
   import TestSpark.spark
+  import spark.implicits._
 
   private val date = "2025-10-15"
 
@@ -79,6 +80,63 @@ class AggregateSpec extends AnyFunSuite {
       assert(viaGs.collect().map(key).sorted.toSeq ==
         viaUnion.collect().map(key).sorted.toSeq, s"seed=$seed sets=$sets")
     }
+  }
+
+  /** The per-spec shape [[Aggregate.unionRollups]] must reproduce: one
+    * `groupBy` per spec, unioned by name with null padding. */
+  private def perSpecUnion(df: org.apache.spark.sql.DataFrame, specs: Seq[AggSpec]) = {
+    val unioned = specs.map { s =>
+      val ms = s.metrics.map(m => expr(m.expression).as(m.name))
+      (if (s.groupBy.isEmpty) df.agg(ms.head, ms.tail: _*)
+       else df.groupBy(s.groupBy.map(col): _*).agg(ms.head, ms.tail: _*))
+        .withColumn("aggregation", lit(s.tag))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val order = specs.flatMap(_.groupBy).distinct ++
+      specs.flatMap(_.metrics.map(_.name)).distinct :+ "aggregation"
+    unioned.withColumn("transformation_date", lit(date))
+      .select((order :+ "transformation_date").map(col): _*)
+  }
+
+  test("unionRollups: one pass == per-spec groupBy union (nulls, repeated sets, globals, empty)") {
+    val df = Seq(
+      (Some("a"), "x", "r1", 1.0), (Some("a"), "x", "r1", 2.0), (None, "x", "r2", 3.0),
+      (None, "y", "r2", 4.0), (Some("b"), "y", "r1", 5.0), (Some("b"), "x", "r3", 6.0))
+      .toDF("p", "q", "r", "v")
+    val specs = Seq(
+      AggSpec(Seq("p", "q"), Seq(Metric("n", "count(*)"), Metric("s", "sum(v)")), "pq"),
+      AggSpec(Seq("q", "p"), Seq(Metric("n", "count(*)")), "qp"),
+      // reads q, which other specs group by; "n" is a double here
+      AggSpec(Seq("r"), Seq(Metric("dq", "count(distinct q)"), Metric("n", "sum(v)")), "by_r"),
+      AggSpec(Nil, Seq(Metric("n", "count(*)"), Metric("top", "max(v)")), "all"))
+    val key = (r: org.apache.spark.sql.Row) => r.toSeq.map(String.valueOf).mkString("|")
+    for ((input, label) <- Seq(df -> "rows", df.filter(lit(false)) -> "empty");
+         set <- Seq(specs, specs.take(3), specs.drop(2), specs.takeRight(1))) {
+      val got = Aggregate.unionRollups(input, set, date)
+      val want = perSpecUnion(input, set)
+      assert(got.schema == want.schema, s"$label ${set.map(_.tag)}")
+      assert(got.collect().map(key).sorted.toSeq == want.collect().map(key).sorted.toSeq,
+        s"$label ${set.map(_.tag)}")
+    }
+    val byTag = Aggregate.unionRollups(df, specs, date).collect()
+      .groupBy(_.getAs[String]("aggregation"))
+    assert(byTag("pq").length == 5 && byTag("qp").length == 5)
+    assert(byTag("pq").count(_.isNullAt(0)) == 2, "a real null key is its own group")
+    assert(byTag("by_r").map(r => r.getAs[String]("r") -> r.getAs[Long]("dq")).toMap ==
+      Map("r1" -> 2L, "r2" -> 2L, "r3" -> 1L))
+    assert(byTag("all").map(_.getAs[Double]("n")).toSeq == Seq(6.0))
+    assert(Aggregate.unionRollups(df.filter(lit(false)), specs, date).collect()
+      .map(_.getAs[String]("aggregation")).toSeq == Seq("all"))
+  }
+
+  test("groupingSetsRollup tags each of two same-column sets with its own tag") {
+    val orders = TestSpark.table("orders")
+    val out = Aggregate.groupingSetsRollup(orders,
+      Seq("g_sp" -> Seq("o_orderstatus", "o_orderpriority"),
+        "g_ps" -> Seq("o_orderpriority", "o_orderstatus")),
+      Seq(Metric("n", "count(*)")), date).collect()
+    val groups = orders.select("o_orderstatus", "o_orderpriority").distinct().count()
+    val byTag = out.groupBy(_.getAs[String]("aggregation")).map { case (t, rs) => t -> rs.length }
+    assert(byTag == Map("g_sp" -> groups, "g_ps" -> groups))
   }
 
   test("saltedRollup matches the plain groupBy for any bucket count") {

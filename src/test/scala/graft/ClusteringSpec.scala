@@ -29,6 +29,19 @@ class ClusteringSpec extends AnyFunSuite {
     assert(out.values.toSet == Set(0L, 1L))
   }
 
+  test("train seeds on the k lowest DISTINCT ids, a duplicated id with its least vector") {
+    val dup = fixture.union(Seq((0L, Array(0.5f, 0.0f, 0.0f))).toDF("vec_id", "embedding"))
+    for (df <- Seq(dup, dup.repartition(3))) {
+      val seeds = Clustering.train(df, "vec_id", "embedding", k = 3, iters = 1)
+      assert(seeds.map(_._1) == Seq(0L, 1L, 2L))
+      assert(seeds.head._2 == Seq(0.5, 0.0, 0.0))
+    }
+    // more copies than k: the limit grows until k distinct ids are seen
+    val many = fixture.union(Seq.fill(5)((1L, Array(0.0f, 0.0f, 1.0f))).toDF("vec_id", "embedding"))
+    assert(Clustering.train(many, "vec_id", "embedding", k = 4, iters = 1).map(_._1) ==
+      Seq(0L, 1L, 2L, 3L))
+  }
+
   test("kmeans is deterministic across runs and repartitionings") {
     val a = Clustering.kmeans(fixture, "vec_id", "embedding", 2, 3).collect().toSet
     val b = Clustering.kmeans(fixture.repartition(5), "vec_id", "embedding", 2, 3)

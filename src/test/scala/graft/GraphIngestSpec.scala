@@ -92,6 +92,29 @@ class GraphIngestSpec extends AnyFunSuite {
       .get._2.collect().map(_.getString(0)).toSet == silverFiles)
   }
 
+  test("maintainGraph folds only the part files the silver sink log committed") {
+    val base = TestSpark.tmpDir("graph_ingest_sinklog")
+    val landing = new java.io.File(base, "landing"); landing.mkdirs()
+    landVecs(landing, "w1.jsonl",
+      Seq(1L -> unit(0, 0.0), 2L -> unit(0, 0.001), 10L -> unit(1, 0.0)))
+    graft.streaming.IngestStream.drainOnce(spark, landing.getPath, vschema,
+      requiredCols = Seq("vec_id", "embedding"), normalizeCols = Nil,
+      outDir = s"$base/silver", checkpointDir = s"$base/ckpt")
+    // a crashed micro-batch's leftover: a part file the log never committed
+    val silver = new java.io.File(s"$base/silver")
+    val committed = silver.listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(committed.toPath,
+      new java.io.File(silver, "part-00000-uncommitted.c000.snappy.parquet").toPath)
+    val n = GraphIngest.maintainGraph(
+      spark, landing.getPath, vschema, "vec_id", "embedding",
+      silverDir = s"$base/silver", checkpointDir = s"$base/ckpt",
+      indexDir = s"$base/index", dims = 4, k = 2,
+      planesPerBand = 2, bands = 2, nEntries = 2, beamWidth = 4, maxSteps = 4)
+    assert(n == 3L)
+    assert(GraphIndex.storedIds(spark, s"$base/index").collect().map(_.getLong(0)).sorted
+      .toSeq == Seq(1L, 2L, 10L))
+  }
+
   test("maintainGraph: α policy rides the bootstrap into the meta; drains RobustPrune") {
     val base = TestSpark.tmpDir("graph_ingest_alpha")
     val landing = new java.io.File(s"$base/landing"); landing.mkdirs()

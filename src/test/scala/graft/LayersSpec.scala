@@ -65,6 +65,31 @@ class LayersSpec extends AnyFunSuite {
     assert(!plan.contains("part=A"), "partition A must be pruned from the scan")
   }
 
+  test("a layer with 40 partition dirs reads with its schema in no Spark job") {
+    val dir = TestSpark.tmpDir("listing40")
+    spark.range(80).select(col("id").as("v"), (col("id") % 40).cast("int").as("part"))
+      .write.mode("overwrite").partitionBy("part").parquet(dir)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("v BIGINT, part INT")
+    def read(s: org.apache.spark.sql.SparkSession) = {
+      val (df, jobs) = TestSpark.jobsOf(Layers.readParquet(s, dir, schema))
+      assert(df.count() == 80)
+      jobs
+    }
+    assert(read(spark) == 0, "TestSpark session")
+    // a session from the production builder, on the suite's context
+    import org.apache.spark.sql.SparkSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val graftSession =
+      try GraftSession.builder("listing").getOrCreate()
+      finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    assert(graftSession ne spark)
+    assert(read(graftSession) == 0, "GraftSession.builder session")
+  }
+
   test("O3: latestSuccessfulRun picks newest _SUCCESS-gated dir, skips incomplete") {
     val dir = TestSpark.tmpDir("runs")
     Layers.writeJsonl(cust.limit(1), dir, Some("20251013"))

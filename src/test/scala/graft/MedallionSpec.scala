@@ -112,6 +112,18 @@ class MedallionSpec extends AnyFunSuite {
     assert(metrics("validate_gold_quality")("rules_failed") == 0)
   }
 
+  test("the gold stage reads silver once: at most 2 Spark jobs") {
+    val stages = Medallion.stages(
+      PipelineConfig.parse(confYaml), PipelineConfig.parseMetadata(metaYaml),
+      source = sp => sp.read.parquet(s"${TestSpark.sfDir}/customer.parquet"),
+      baseDir = TestSpark.tmpDir("medallion_jobs"), runId = "r",
+      transformationDate = "2025-10-15", clean = cleanSpec)
+    stages.take(2).foreach(_.run(spark))
+    val (metrics, jobs) = TestSpark.jobsOf(stages(2).run(spark))
+    assert(metrics("rollup_rows") == 5L)
+    assert(jobs <= 2, s"gold stage ran $jobs jobs")
+  }
+
   test("quality violation fails the pipeline stage (and the run)") {
     val base = TestSpark.tmpDir("medallion_fail")
     val badConf = PipelineConfig.parse(confYaml.replace(
