@@ -4,7 +4,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /**
@@ -87,7 +87,9 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
  *  - **batch tag** ([[batchTag]]): `b<count>x<hex>` over the
  *    order-insensitive XOR of per-id xxhash64 — the same id set always
  *    lands on the same tag, so a replayed batch OVERWRITES its own
- *    orphan instead of accreting;
+ *    orphan instead of accreting. A write path takes the tag, the
+ *    batch's count and its checks from one aggregate ([[batchShape]]);
+ *    no `isEmpty`/`count` job of its own;
  *  - **meta** ([[writeMeta]], [[readMeta]]): the index identity in
  *    `_graft_index.json`, committed AFTER the data, so a crashed build
  *    leaves no readable index;
@@ -484,18 +486,44 @@ object Commits {
   /** `<tag>` of a `batch=<tag>` dir. */
   def tagOf(batchDir: Path): String = batchDir.getName.stripPrefix("batch=")
 
-  /** Deterministic tag of a batch from its ids: `b<count>x<hex>` over
-    * the order-insensitive XOR of per-id xxhash64 (wrap-free under ANSI
-    * mode; the count guards the empty batch). Ids hash by their string
-    * form, so string and numeric id columns share one tag scheme. */
-  def batchTag(df: DataFrame, idCol: String): String = {
-    import org.apache.spark.sql.functions.{coalesce, count, expr, lit}
-    val r = df.agg(
-      count(lit(1)).as("c"),
-      coalesce(expr(s"bit_xor(xxhash64(cast($idCol as string)))"), lit(0L)).as("h"))
+  /** What one aggregate job learns of a batch before it is written:
+    * its row count, its [[batchTag]], and whether some row fails the
+    * check handed to [[batchShape]]. */
+  final case class BatchShape(count: Long, tag: String, failed: Boolean)
+
+  /** The [[BatchShape]] of `df` in ONE Spark job: the count, the tag
+    * and the check are columns of one global aggregate, so a write
+    * path learns all three without a separate `isEmpty`/`count`/check
+    * job. `failing` is a per-row predicate, TRUE on a bad row (a NULL
+    * is not a failure; `lit(false)` checks nothing). The aggregate
+    * runs over `coalesce(1)`: its input is one partition, so no
+    * exchange splits it into a map job and a result job.
+    *
+    * Contract: `df` is a MATERIALIZED, drain-sized batch (a
+    * `localCheckpoint`ed delta, or a shuffle's output) — the one task
+    * reads it, and the work of an unmaterialized plan under it would
+    * run in that task too.
+    *
+    * The tag is `b<count>x<hex>` over the order-insensitive XOR of
+    * per-id xxhash64 (wrap-free under ANSI mode; the count guards the
+    * empty batch). Ids hash by their string form, so string and
+    * numeric id columns share one tag scheme. */
+  def batchShape(df: DataFrame, idCol: String, failing: Column): BatchShape = {
+    import org.apache.spark.sql.functions.{bool_or, coalesce, count, expr}
+    val r = df.coalesce(1).agg(
+      count(lit(1)),
+      coalesce(expr(s"bit_xor(xxhash64(cast($idCol as string)))"), lit(0L)),
+      coalesce(bool_or(failing), lit(false)))
       .head()
-    s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
+    BatchShape(r.getLong(0), s"b${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}",
+      r.getBoolean(2))
   }
+
+  /** Deterministic tag of a batch from its ids — the tag of its
+    * [[batchShape]] (same contract: a materialized batch), so every
+    * store tags with one formula; one Spark job. */
+  def batchTag(df: DataFrame, idCol: String): String =
+    batchShape(df, idCol, lit(false)).tag
 
   private[graft] def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)

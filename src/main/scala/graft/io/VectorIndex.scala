@@ -446,25 +446,33 @@ object VectorIndex {
 
   /** Assign a new batch against the FROZEN stored quantizer and land
     * it as one committed batch — idempotent per vector set
-    * (deterministic tag + overwrite + marker-last commit). */
+    * (deterministic tag + overwrite + marker-last commit). The batch's
+    * row count, dims check and tag are ONE aggregate job
+    * ([[Commits.batchShape]]); an empty batch returns after it, writing
+    * nothing. A non-empty batch then runs the centroid collect and the
+    * write: 3 jobs. `newVecs` is a materialized, drain-sized batch (the
+    * [[Commits.batchShape]] contract: that job reads it in one task). */
   def append(newVecs: DataFrame, dir: String): Unit = {
     val spark = newVecs.sparkSession
     Commits.withClaim(spark, dir) {
     ensureLive(spark, dir)
     val m = meta(spark, dir)
-    requireDims(newVecs, m.vecCol, m.dims, "append batch")
-    val cents = centroids(spark, dir)
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    // land the stored column types (every file matches `Meta.schemaDdl`,
-    // the schema every read applies) and assign what is stored; list_id
-    // comes from the assignment's projection, one row per given row
-    val stored = StructType.fromDDL(m.schemaDdl)
-    val data = Clustering.assign(
-        newVecs.select(stored.map(f => col(f.name).cast(f.dataType)): _*),
-        m.idCol, m.vecCol, cents)
-      .select(col(m.idCol), col(m.vecCol), col("cluster").as("list_id"))
-    writeBatch(data, listsPath(dir), Commits.batchTag(newVecs, m.idCol), spark)
+    val shape = Commits.batchShape(newVecs, m.idCol, malformed(col(m.vecCol), m.dims))
+    requireWellFormed(!shape.failed, "append batch", m.dims)
+    if (shape.count > 0) {
+      val cents = centroids(spark, dir)
+        .collect()
+        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+      // land the stored column types (every file matches `Meta.schemaDdl`,
+      // the schema every read applies) and assign what is stored; list_id
+      // comes from the assignment's projection, one row per given row
+      val stored = StructType.fromDDL(m.schemaDdl)
+      val data = Clustering.assign(
+          newVecs.select(stored.map(f => col(f.name).cast(f.dataType)): _*),
+          m.idCol, m.vecCol, cents)
+        .select(col(m.idCol), col(m.vecCol), col("cluster").as("list_id"))
+      writeBatch(data, listsPath(dir), shape.tag, spark)
+    }
   } }
 
   /** Rewrite the whole lists store as ONE committed `__base__` batch
@@ -602,8 +610,10 @@ object VectorIndex {
         .select(col(m.idCol), col(m.vecCol), col("cluster").as("list_id"))
         .localCheckpoint() // sever from a same-tag dir being overwritten
       // "m" namespace: a maintenance tag must never collide with (and
-      // overwrite) the APPEND batch of the same vector set
-      val tag = "m" + Commits.batchTag(affected, m.idCol)
+      // overwrite) the APPEND batch of the same vector set. Tagged from
+      // the materialized `data` (the ids of `affected`, one row each),
+      // so the drifted lists are not scanned a second time
+      val tag = "m" + Commits.batchTag(data, m.idCol)
       writeBatch(data, listsPath(dir), tag, spark,
         retire = liveTags(spark, listsDirs(dir).live).filterNot(_ == tag)
           .map(t => t -> driftedIds))

@@ -202,7 +202,9 @@ object WindowIndex {
   }
 
   /** Append `newDocs` as one committed batch so future probes see
-    * them. Idempotent per doc set (deterministic tag + overwrite). */
+    * them. Idempotent per doc set (deterministic tag + overwrite).
+    * `newDocs` is a materialized, drain-sized batch: its tag is a
+    * [[Commits.batchTag]], one job that reads it in one task. */
   def append(newDocs: DataFrame, textCol: String, dir: String): Unit = {
     val spark = newDocs.sparkSession
     Commits.withClaim(spark, dir) {

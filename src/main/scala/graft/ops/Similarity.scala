@@ -980,7 +980,13 @@ object Similarity {
    * contract — a day's arrivals, not a corpus).
    *
    * Output: (idCol, reason, keep) — one row per batch vector; reason
-   * = 'corpus' | 'batch' | NULL, keep ⇔ reason IS NULL.
+   * = 'corpus' | 'batch' | NULL, keep ⇔ reason IS NULL (non-nullable).
+   *
+   * Both flags come from ONE grouped pass ([[dedupDecisions]]) — no
+   * `distinct` per flag and no join back. Building the frame runs the
+   * probe's centroid ranking (2 jobs); evaluating it runs 4: the
+   * broadcasts of the two hit sides, the grouping's shuffle and the
+   * caller's action.
    */
   def incrementalSemanticDedup(
       batch: DataFrame,
@@ -998,36 +1004,49 @@ object Similarity {
     val probeFrame =
       if (embCol == vecCol) batch
       else batch.select(col(idCol), col(embCol).as(vecCol))
-    val corpusDups = graft.io.VectorIndex
+    dedupDecisions(batch, idCol, embCol, threshold, graft.io.VectorIndex
       .probeThreshold(probeFrame, idCol, indexDir, threshold, nprobe)
-      .select(col("query_id").as(idCol)).distinct()
-      .withColumn("__corpus", lit(true))
-    batch.select(col(idCol))
-      .join(corpusDups, Seq(idCol), "left")
-      .join(batchInternalDups(batch, idCol, embCol, threshold), Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__corpus"), lit("corpus"))
-          .when(col("__batch"), lit("batch"))
-          .otherwise(lit(null).cast("string")).as("reason"),
-        (col("__corpus").isNull && col("__batch").isNull).as("keep"))
+      .select(col("query_id")))
   }
 
-  /** The batch-internal keep-first pass of [[incrementalSemanticDedup]]
-    * (also the whole decision on a BOOTSTRAP wave, when no index exists
-    * yet): ids with a lower-id batch mate at cosine ≥ threshold, marked
-    * `__batch`. The batch is small by contract — this is pairwise. */
-  private[graft] def batchInternalDups(
+  /** The (idCol, reason, keep) decision of [[incrementalSemanticDedup]]
+    * from `corpusHits` — one query id per corpus match (an empty frame
+    * on a BOOTSTRAP wave, when no index exists yet) — and the
+    * batch-internal keep-first hits (ids with a lower-id batch mate at
+    * cosine ≥ threshold; pairwise, the batch is small by contract).
+    * ONE `groupBy(idCol)` over the union of a self row per batch row
+    * and both hit kinds counts each kind; each group re-expands to its
+    * self-row count, so a duplicated id keeps one row per batch row. A
+    * NULL id is never a hit (a null query id probes nothing, and `<`
+    * never pairs it), so its rows keep. */
+  private[graft] def dedupDecisions(
       batch: DataFrame,
       idCol: String,
       embCol: String,
-      threshold: Double): DataFrame = {
+      threshold: Double,
+      corpusHits: DataFrame): DataFrame = {
     val lo = batch.select(col(idCol).as("__lo"), col(embCol).as("__elo"))
     val hi = batch.select(col(idCol).as("__hi"), col(embCol).as("__ehi"))
-    lo.crossJoin(hi)
+    val batchHits = lo.crossJoin(hi)
       .filter(col("__lo") < col("__hi"))
       .filter(cosineFast(batch.sparkSession, col("__elo"), col("__ehi")) >= threshold)
-      .select(col("__hi").as(idCol)).distinct()
-      .withColumn("__batch", lit(true))
+      .select(col("__hi"))
+    // __kind 0: a batch row, 1: a corpus hit, 2: a batch-internal hit
+    def kind(ids: DataFrame, k: Int) =
+      ids.select(col(ids.columns.head).as(idCol), lit(k).as("__kind"))
+    def rows(k: Int) = count(when(col("__kind") === k, 1)) // non-nullable
+    kind(batch.select(col(idCol)), 0)
+      .union(kind(corpusHits, 1))
+      .union(kind(batchHits, 2))
+      .groupBy(col(idCol))
+      .agg(rows(0).cast("int").as("__n"), rows(1).as("__c"), rows(2).as("__b"))
+      .select(col(idCol),
+        when(col("__c") > 0, lit("corpus"))
+          .when(col("__b") > 0, lit("batch"))
+          .otherwise(lit(null).cast("string")).as("reason"),
+        (col("__c") === 0 && col("__b") === 0).as("keep"),
+        explode(array_repeat(lit(0), col("__n"))).as("__row"))
+      .drop("__row")
   }
 
   /**

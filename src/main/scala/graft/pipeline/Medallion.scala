@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 import graft.config.PipelineConfig.PipelineConf
@@ -59,6 +59,14 @@ object Medallion {
     require(aggStage.aggregations.nonEmpty, s"stage $aggStageId declares no aggregations")
     require(qStage.qualityRules.nonEmpty, s"stage $qualityStageId declares no quality_rules")
 
+    // the table's declared schema (bronze is read with it, silver is
+    // written from it) and the roll-up gold is written as: the gold
+    // stage runs `rollup` over silver, and the quality stage reads gold
+    // with the schema `rollup` gives
+    val tableSchema = Metadata.toStruct(meta.fields)
+    def rollup(df: DataFrame): DataFrame =
+      Aggregate.unionRollups(df, aggStage.aggregations, transformationDate)
+
     // Stage metrics ride the write pass via Dataset.observe — a count()
     // per metric would re-scan the stage input once per number.
     val bronze = Runner.Stage(
@@ -77,7 +85,7 @@ object Medallion {
           sys.error(s"no successful bronze run under $bronzeDir"))
         val obsIn = org.apache.spark.sql.Observation()
         val obsOut = org.apache.spark.sql.Observation()
-        val raw = Layers.readJsonl(spark, latest, Metadata.toStruct(meta.fields))
+        val raw = Layers.readJsonl(spark, latest, tableSchema)
           .observe(obsIn, count(lit(1)).as("rows_in"))
         val cleaned = Clean.silverClean(
           raw, clean.dedupKeys, clean.requiredCols, clean.normalizeCols, clean.order)
@@ -95,8 +103,7 @@ object Medallion {
         val obs = org.apache.spark.sql.Observation()
         // silver is read with the schema it was written from, so the
         // stage's only jobs are the roll-up's shuffle and its write
-        val silverDf = Layers.readParquet(spark, silverDir, Metadata.toStruct(meta.fields))
-        val goldDf = Aggregate.unionRollups(silverDf, aggStage.aggregations, transformationDate)
+        val goldDf = rollup(Layers.readParquet(spark, silverDir, tableSchema))
           .observe(obs, count(lit(1)).as("rollup_rows"))
         Layers.writeGold(goldDf, goldDir)
         Map("rollup_rows" -> obs.get("rollup_rows").asInstanceOf[Long])
@@ -107,7 +114,11 @@ object Medallion {
     val quality = Runner.Stage(
       qStage.taskId,
       run = { spark =>
-        val goldDf = Layers.readParquet(spark, goldDir)
+        // gold's schema is the roll-up's over silver's declared schema —
+        // found by analysis of an empty frame, so the read infers nothing
+        val goldSchema =
+          rollup(spark.createDataFrame(java.util.List.of[Row](), tableSchema)).schema
+        val goldDf = Layers.readParquet(spark, goldDir, goldSchema)
         val report = Quality.report(goldDf, qStage.qualityRules).collect()
         writeReport(s"$baseDir/quality/gold_report.json", report.map(r =>
           (r.getAs[String]("rule"), r.getAs[Boolean]("passed"), r.getAs[Long]("invalid_count"))))

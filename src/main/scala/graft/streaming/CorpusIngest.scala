@@ -193,27 +193,20 @@ object CorpusIngest {
     import org.apache.spark.sql.functions._
     val silver = IngestStream.drainToSilver(spark, landingDir, schema,
       Seq(idCol, vecCol), silverDir, checkpointDir)
-    def decisions(delta: DataFrame, dups: DataFrame): DataFrame = delta
-      .select(col(idCol))
-      .join(dups, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__batch"), lit("batch"))
-          .otherwise(lit(null).cast("string")).as("reason"),
-        col("__batch").isNull.as("keep"))
     if (!graft.io.Commits.hasMeta(spark, indexDir)) {
-      if (silver.isEmpty) decisions(silver, silver.select(col(idCol))
-        .withColumn("__batch", lit(true)).limit(0))
+      // bootstrap: no prior corpus, so no corpus hits
+      val d = graft.ops.Similarity.dedupDecisions(
+        silver, idCol, vecCol, threshold, silver.select(col(idCol)).limit(0))
+      if (silver.isEmpty) d
       else {
-        val d = decisions(silver,
-            graft.ops.Similarity.batchInternalDups(silver, idCol, vecCol, threshold))
-          .localCheckpoint()
+        val ck = d.localCheckpoint()
         graft.io.VectorIndex.build(silver, idCol, vecCol, indexDir, nlist, iters)
-        d
+        ck
       }
     } else {
       graft.io.VectorIndex.ensureLive(spark, indexDir) // before the ledger read
-      // materialized once: the dedup probe, the emptiness test and the
-      // append (dims check, tag, write) all read it, and each re-run
+      // materialized once: the dedup probe and the append (its one
+      // shape aggregate, then the write) both read it, and each re-run
       // would rescan silver and every live list file
       val delta = silver.join(
         graft.io.VectorIndex.storedIds(spark, indexDir), Seq(idCol), "left_anti")
@@ -223,9 +216,9 @@ object CorpusIngest {
       val d = graft.ops.Similarity.incrementalSemanticDedup(
           delta, idCol, vecCol, indexDir, threshold, nprobe)
         .localCheckpoint()
-      if (!delta.isEmpty)
-        graft.io.VectorIndex.append(
-          delta.select(col(idCol), col(vecCol)), indexDir)
+      // an empty delta writes nothing: append's shape aggregate is also
+      // the emptiness test
+      graft.io.VectorIndex.append(delta.select(col(idCol), col(vecCol)), indexDir)
       d
     }
   }
@@ -252,8 +245,11 @@ object CorpusIngest {
       WindowIndex.build(silver.limit(0), textCol, idCol, indexDir, n, kind)
 
     WindowIndex.ensureLive(spark, indexDir) // before the ledger read
+    // materialized once: the probe and the append (tag, then write)
+    // all read it, and each re-run would rescan silver and the ledger
     silver.join(
       WindowIndex.processedIds(spark, indexDir), Seq(idCol), "left_anti")
+      .localCheckpoint()
   }
 
   /**

@@ -34,9 +34,9 @@ import graft.io.{Commits, FoldedFiles}
  * pair report of a batch built from still-fresh files re-surfaces
  * ([[PairReports]] — the crashed drain computed its pairs but never
  * returned them). The batch commits marker-last under a tag derived
- * from its DISTINCT ids ([[Commits.batchTag]]), so a replayed batch
- * overwrites its own orphan and an id carried twice cannot cancel out
- * of the tag. The caller holds the store claim
+ * from its DISTINCT ids ([[Commits.batchShape]], whose count also
+ * tells an empty batch), so a replayed batch overwrites its own orphan
+ * and an id carried twice cannot cancel out of the tag. The caller holds the store claim
  * ([[Commits.withClaim]]); concurrent drains fail visibly on the claim
  * or the folded-version CAS.
  */
@@ -100,16 +100,17 @@ private[streaming] object MediaIngest {
       standing.select("media_id").distinct(), Seq("media_id"), "left_anti")
     val hashed = m.hash(delta)
       .localCheckpoint() // one decode: feeds the probe AND the append
-    if (hashed.isEmpty) { commitFolded(); healed }
+    // the tag's aggregate also counts the batch: no separate isEmpty job
+    val shape = Commits.batchShape(hashed.select("media_id").distinct(), "media_id", lit(false))
+    if (shape.count == 0) { commitFolded(); healed }
     else {
       val pairs = m.probe(hashed, standing)
         .localCheckpoint() // judged against the PRE-append store
-      val tag = Commits.batchTag(hashed.select("media_id").distinct(), "media_id")
-      val dir = new Path(s"$indexDir/batch=$tag")
+      val dir = new Path(s"$indexDir/batch=${shape.tag}")
       hashed.write.mode("overwrite").parquet(dir.toString)
       // pair report + source-file list BEFORE the marker: a
       // marker-committed batch is always re-readable on replay
-      PairReports.persist(pairs, indexDir, tag, fresh)
+      PairReports.persist(pairs, indexDir, shape.tag, fresh)
       Commits.commitBatch(Commits.fsOf(spark, dir), dir) // store commit point
       commitFolded() // folded record LAST: crash before re-scans,
                      // the anti-join above heals the replay

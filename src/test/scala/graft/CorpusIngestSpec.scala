@@ -164,6 +164,37 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(graft.io.VectorIndex.storedIds(spark, s"$base/index").count() == 8)
   }
 
+  test("maintainVectors: a drain against a built index runs at most 12 Spark jobs") {
+    val base = TestSpark.tmpDir("corpus_ingest_vec_jobs")
+    val landing = new java.io.File(base, "landing"); landing.mkdirs()
+    val vschema = graft.schema.Metadata.structFromSpec(
+      """
+      vec_id: long
+      embedding: array<float>
+      """)
+    def landVecs(name: String, ids: Seq[Long]): Unit = {
+      val w = new java.io.PrintWriter(new java.io.File(landing, name))
+      try ids.foreach { id =>
+        val v = Array.tabulate(4)(d => if (d == id % 4) 1.0f else (id % 7) * 0.01f)
+        w.println(s"""{"vec_id": $id, "embedding": [${v.mkString(", ")}]}""")
+      } finally w.close()
+    }
+    def drain() = CorpusIngest.maintainVectors(
+      spark, landing.getPath, vschema, "vec_id", "embedding",
+      silverDir = s"$base/silver", checkpointDir = s"$base/ckpt",
+      indexDir = s"$base/index", threshold = 0.99, nprobe = 2, nlist = 2)
+    landVecs("wave1.jsonl", 1L to 20L)
+    drain().collect() // bootstrap: trains the index
+    landVecs("wave2.jsonl", 21L to 40L)
+    val (d, jobs) = TestSpark.jobsOf(drain())
+    // the drain, the ledger anti-join, the dedup's probe and grouped
+    // flags, and append's shape aggregate, centroid collect and write;
+    // a job per check (emptiness, dims, tag, each dedup flag) exceeds it
+    assert(jobs <= 12, s"maintainVectors ran $jobs jobs")
+    assert(d.count() == 20)
+    assert(graft.io.VectorIndex.storedIds(spark, s"$base/index").count() == 40)
+  }
+
   test("maintainNovelty: per-drain selection scores judged against the pre-drain corpus") {
     val base = TestSpark.tmpDir("corpus_ingest_novelty")
     val landing = new java.io.File(base, "landing"); landing.mkdirs()

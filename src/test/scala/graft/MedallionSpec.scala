@@ -124,6 +124,40 @@ class MedallionSpec extends AnyFunSuite {
     assert(jobs <= 2, s"gold stage ran $jobs jobs")
   }
 
+  test("the quality stage reads gold with its declared schema: at most 2 Spark jobs, same report") {
+    // a second, global roll-up null-pads the grouping column and adds
+    // an avg: gold's declared schema must carry every padded type
+    val yaml = confYaml.replace(
+      "  - task_id: validate_gold_quality\n",
+      """        - name: "overall"
+        |          group_by: []
+        |          metrics:
+        |            - name: "total_customers"
+        |              expr: "count(*)"
+        |            - name: "mean_key"
+        |              expr: "avg(c_custkey)"
+        |  - task_id: validate_gold_quality
+        |""".stripMargin)
+    val conf = PipelineConfig.parse(yaml)
+    val base = TestSpark.tmpDir("medallion_quality_jobs")
+    val stages = Medallion.stages(
+      conf, PipelineConfig.parseMetadata(metaYaml),
+      source = sp => sp.read.parquet(s"${TestSpark.sfDir}/customer.parquet"),
+      baseDir = base, runId = "r", transformationDate = "2025-10-15", clean = cleanSpec)
+    stages.take(3).foreach(_.run(spark))
+    val (metrics, jobs) = TestSpark.jobsOf(stages(3).run(spark))
+    // a footer-inference job ahead of the report would make it 3
+    assert(jobs <= 2, s"quality stage ran $jobs jobs")
+    assert(metrics == Map("rules_checked" -> 1L, "rules_failed" -> 0L))
+    // the report an inferring read of gold gives
+    val inferred = graft.ops.Quality.report(spark.read.parquet(s"$base/gold"),
+      conf.stage("validate_gold_quality").qualityRules).collect()
+    Medallion.writeReport(s"$base/inferred_report.json", inferred.map(r =>
+      (r.getAs[String]("rule"), r.getAs[Boolean]("passed"), r.getAs[Long]("invalid_count"))))
+    def read(name: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(base, name))
+    assert(read("quality/gold_report.json") == read("inferred_report.json"))
+  }
+
   test("quality violation fails the pipeline stage (and the run)") {
     val base = TestSpark.tmpDir("medallion_fail")
     val badConf = PipelineConfig.parse(confYaml.replace(

@@ -340,6 +340,82 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(renamed == got, "decisions must not depend on the batch's column name")
   }
 
+  test("append of an empty batch runs one job and leaves the lists dir unchanged") {
+    val dir = TestSpark.tmpDir("vecidx_append_empty")
+    VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
+    def listed() = {
+      val root = java.nio.file.Paths.get(dir, "lists")
+      val walk = java.nio.file.Files.walk(root)
+      try walk.toArray.map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString)
+        .sorted.toSeq
+      finally walk.close()
+    }
+    val before = listed()
+    val (_, jobs) = TestSpark.jobsOf(VectorIndex.append(emb.limit(0), dir))
+    // the shape aggregate is the emptiness test: no dims check, tag or
+    // centroid collect of its own
+    assert(jobs == 1, s"empty append ran $jobs jobs")
+    assert(listed() == before, "an empty append must write no batch")
+    assert(VectorIndex.storedIds(spark, dir).count() == emb.count())
+  }
+
+  test("incrementalSemanticDedup == the distinct-then-left-join formulation, in schema and rows") {
+    def unit(axis: Int, eps: Double): Array[Float] = {
+      val v = Array.fill(4)(eps.toFloat); v(axis) = 1.0f; v
+    }
+    val dir = TestSpark.tmpDir("vecidx_inc_grouped")
+    VectorIndex.build(Seq((1L, unit(0, 0.0)), (2L, unit(1, 0.0)), (3L, unit(1, 0.002)))
+      .toDF("vec_id", "embedding"), "vec_id", "embedding", dir, nlist = 2, iters = 2)
+    // the formulation before the grouped pass: one distinct per flag,
+    // each left-joined back onto the batch ids
+    def twoJoins(batch: org.apache.spark.sql.DataFrame) = {
+      val corpusDups = VectorIndex
+        .probeThreshold(batch, "vec_id", dir, 0.9, nprobe = 2)
+        .select($"query_id".as("vec_id")).distinct()
+        .withColumn("__corpus", lit(true))
+      val lo = batch.select($"vec_id".as("__lo"), $"embedding".as("__elo"))
+      val hi = batch.select($"vec_id".as("__hi"), $"embedding".as("__ehi"))
+      val batchDups = lo.crossJoin(hi)
+        .filter($"__lo" < $"__hi")
+        .filter(Similarity.cosineFast(spark, $"__elo", $"__ehi") >= 0.9)
+        .select($"__hi".as("vec_id")).distinct()
+        .withColumn("__batch", lit(true))
+      batch.select($"vec_id")
+        .join(corpusDups, Seq("vec_id"), "left")
+        .join(batchDups, Seq("vec_id"), "left")
+        .select($"vec_id",
+          when($"__corpus", lit("corpus"))
+            .when($"__batch", lit("batch"))
+            .otherwise(lit(null).cast("string")).as("reason"),
+          ($"__corpus".isNull && $"__batch".isNull).as("keep"))
+    }
+    val batch = Seq[(Option[Long], Array[Float])](
+      (Some(10L), unit(0, 0.001)), // corpus dup of 1
+      (Some(10L), unit(0, 0.001)), // the same id again
+      (Some(11L), unit(0, 0.002)), // corpus dup of 1 AND batch dup of 10
+      (Some(20L), unit(2, 0.0)), // novel; id 20 also carries ...
+      (Some(20L), unit(3, 0.0)), // ... a second, different vector
+      (Some(21L), unit(2, 0.001)), // batch dup of 20
+      (Some(31L), unit(2, 0.0015)), // batch dup of 20 and of 21
+      (Some(32L), unit(3, 0.001)), // batch dup of 20's second vector
+      (None, unit(2, 0.0005)) // a null id is never a hit
+    ).toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (b <- Seq(batch, batch.limit(0))) {
+      val got = Similarity.incrementalSemanticDedup(
+        b, "vec_id", "embedding", dir, threshold = 0.9, nprobe = 2)
+      val old = twoJoins(b)
+      assert(got.schema == old.schema)
+      assert(!got.schema("keep").nullable)
+      assert(rows(got) == rows(old))
+    }
+    assert(rows(Similarity.incrementalSemanticDedup(
+      batch, "vec_id", "embedding", dir, threshold = 0.9, nprobe = 2)) == Seq(
+      "[10,corpus,false]", "[10,corpus,false]", "[11,corpus,false]",
+      "[20,null,true]", "[20,null,true]", "[21,batch,false]",
+      "[31,batch,false]", "[32,batch,false]", "[null,null,true]"))
+  }
+
   test("probeFilteredBatch: per-query nprobe ladder, nlist-cap terminal rung, thin flags") {
     val dir = TestSpark.tmpDir("vecidx_filtered")
     VectorIndex.build(emb, "vec_id", "embedding", dir, nlist = 8, iters = 2)
